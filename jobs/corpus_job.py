@@ -11,24 +11,15 @@ runs, as one spark-submit entrypoint:
 
 Stages (each narrow or one bounded shuffle):
 
-0. pre-stages  — optional, each BEFORE extraction so excluded pages
-                 never pay kernel time: ``--blocklist`` (registered-
-                 domain exclusion, broadcast join), ``--host-ranks`` +
-                 ``--host-rank-min`` (link-graph PageRank floor, the
-                 continuous variant of the blocklist; produce ranks
-                 with jobs/linkgraph_job.py), ``--snapshot-collapse``
-                 (latest capture per canonical url — multi-crawl
-                 inputs), ``--honor-meta`` (drop robots-noindex pages
-                 and collapse declared-canonical aliases — the pages'
-                 OWN authority declarations, operators/headmeta).
-                 ``--outlinks PATH`` writes the host-grain link graph
-                 of the RAW input as a side output (the PageRank
-                 producer feed); ``--tables PATH`` writes markdown-
-                 serialized HTML tables of the raw input
-                 (operators/tables — table-structured training data);
-                 ``--drop-soft404`` drops error pages served as 200
-                 (title/tiny-body phrase screen, operators/softerrors)
-                 before they pay kernel time.
+0. pre-gates   — optional cheap filters BEFORE extraction, so excluded
+                 pages never pay kernel time: the ordered gate table
+                 shared with the stream job (operators/pre_gates.GATES:
+                 blocklist → charset → content type → host rank →
+                 snapshot → noindex → canonical alias → noai →
+                 soft-404), each gate with its own funnel drop count.
+                 The raw-scan side outputs (``SIDE_OUTPUTS``: outlinks,
+                 feed links, tables, image pairs) read the input before
+                 any gate.
 1. extract     — HTML → (extracted_text, region_spans, lineage); the
                  shuffle-free mapInPandas kernel path.
 2. score       — real char-n-gram language id scored INSIDE the
@@ -74,6 +65,7 @@ Stages (each narrow or one bounded shuffle):
 from __future__ import annotations
 
 import argparse
+from functools import partial
 
 
 def main() -> None:
@@ -210,7 +202,7 @@ def main() -> None:
         "--script-screen",
         action="store_true",
         help="drop mixed-script documents (operators/scriptmix: no"
-        " script holds 95% of the letters, 20-letter floor — SEO"
+        " script holds 95%% of the letters, 20-letter floor — SEO"
         " cloaking / homoglyph spam / wrong-decode signal); adds the"
         " main_script + main_fraction audit columns and the"
         " dropped_script funnel count",
@@ -365,30 +357,17 @@ def main() -> None:
     )
     ap.add_argument("--python-parallelism", type=int, default=None)
     args = ap.parse_args()
+    from ocrd_segment_spark.operators.pre_gates import refuse_html_on_pdf
+
     if args.preserve_spans and args.boilerplate_min_df is None:
         ap.error("--preserve-spans requires --boilerplate-min-df"
                  " (it selects WHICH boilerplate variant runs)")
-    if args.input_format == "pdf":
-        for flag, on in (
-            ("--sniff-charset", args.sniff_charset),
-            ("--sniff-content-type", args.sniff_content_type),
-            ("--honor-meta", args.honor_meta),
-            ("--snapshot-collapse", args.snapshot_collapse),
-            ("--outlinks", args.outlinks is not None),
-            ("--feed-links", args.feed_links is not None),
-            ("--drop-soft404", args.drop_soft404),
-            ("--tables", args.tables is not None),
-            ("--image-pairs", args.image_pairs is not None),
-            ("--honor-noai", args.honor_noai),
-        ):
-            if on:
-                ap.error(f"{flag} reads html pages and cannot run on"
-                         " --input-format pdf")
-        # --preserve-spans IS legal on pdf input: BT blocks are real
-        # region_spans (sources/pdf.pdf_pages), so the span-preserving
-        # boilerplate strip (page headers/footers repeated across a
-        # site's PDFs) rebuilds clean text with remapped spans exactly
-        # like the HTML lane
+    # --preserve-spans IS legal on pdf input: BT blocks are real
+    # region_spans (sources/pdf.pdf_pages), so the span-preserving
+    # boilerplate strip (page headers/footers repeated across a site's
+    # PDFs) rebuilds clean text with remapped spans exactly like the
+    # HTML lane
+    refuse_html_on_pdf(ap, args, extra=tuple(d for d, _, _ in SIDE_OUTPUTS))
     if args.bpe_vocab is not None and not args.count_bpe:
         ap.error("--bpe-vocab requires --count-bpe"
                  " (a vocabulary with no metering stage does nothing)")
@@ -455,6 +434,137 @@ def main() -> None:
     spark.stop()
 
 
+def _dropped(keep_col: str) -> str:
+    """Funnel key of a corpus_filters stage: keep_lm -> dropped_lm."""
+    return keep_col.replace("keep_", "dropped_", 1)
+
+
+def _observed_write(df, agg, path: str, partition_by: str | None = None):
+    """Write ``df`` to ``path`` and return ``agg`` over the written
+    rows (0 on empty), computed by an Observation that rides the write
+    — no re-scan of the output."""
+    from pyspark.sql import Observation, functions as F
+
+    o = Observation(path)
+    writer = df.observe(o, F.coalesce(agg, F.lit(0)).alias("n")).write
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.mode("overwrite").parquet(path)
+    return o.get["n"]
+
+
+# ---- raw-scan side outputs: harvested from EVERY crawled page before
+# any gate (a page the text funnel rejects can still carry a good link,
+# feed, table or captioned image). Each is a second pure scan of the
+# raw input by design: entangling it with the extraction DAG would make
+# the kernel pass wait on its shuffle.
+def _outlink_edges(pages, o):
+    # host link graph — the PageRank producer feed (jobs/linkgraph_job
+    # → --host-ranks)
+    from ocrd_segment_spark.operators.linkgraph import host_edges, outlinks
+
+    return host_edges(outlinks(pages))
+
+
+def _feed_links(pages, o):
+    # advertised feeds — fetched and harvested by operators/feeds into
+    # frontier_job --feeds
+    from ocrd_segment_spark.operators.headmeta import feed_links
+
+    return feed_links(pages)
+
+
+def _tables(pages, o):
+    from ocrd_segment_spark.operators.tables import (
+        table_cells,
+        tables_markdown,
+    )
+
+    return tables_markdown(table_cells(pages, id_col="url"), id_col="url")
+
+
+def _image_pairs(pages, o):
+    from pyspark.sql import functions as F
+
+    from ocrd_segment_spark.operators.images import (
+        figure_pairs,
+        image_pairs,
+        with_caption_quality,
+    )
+
+    if o["honor_noai"]:
+        # noimageai excludes a page from the PAIR harvest even when its
+        # text is welcome (and vice versa — independent tokens)
+        from ocrd_segment_spark.operators.headmeta import with_ai_optout
+
+        pages = (
+            with_ai_optout(pages)
+            .filter(~F.col("image_ai_optout") & ~F.col("ai_optout"))
+            .drop("ai_optout", "image_ai_optout")
+        )
+    # img + og + figure-caption rows, each screened by the LAION-style
+    # caption rule — caption_ok lets the fetch scheduler prioritize
+    # before downloading a byte
+    return with_caption_quality(
+        image_pairs(pages).unionByName(figure_pairs(pages))
+    )
+
+
+# (argparse dest — build_corpus takes ``<dest>_path``, funnel key, builder)
+SIDE_OUTPUTS = (
+    ("outlinks", "outlink_edges", _outlink_edges),
+    ("feed_links", "feed_links_found", _feed_links),
+    ("tables", "tables_extracted", _tables),
+    ("image_pairs", "image_pairs_found", _image_pairs),
+)
+
+
+# ---- post-write tables over the committed corpus
+def _clean(corpus, min_doc_freq: int, preserve_spans: bool):
+    # C4-style cross-document boilerplate strip. --preserve-spans
+    # removes frequent REGIONS and emits REMAPPED region_spans that
+    # slice clean_text exactly (region structure survives cleaning);
+    # the line-based strip stays for span-less corpora
+    from ocrd_segment_spark.operators.paragraphs import (
+        remove_frequent_regions,
+        remove_frequent_units,
+    )
+
+    if preserve_spans:
+        return remove_frequent_regions(
+            corpus, id_col="url", text_col="extracted_text",
+            spans_col="region_spans", min_doc_freq=min_doc_freq,
+        )
+    return remove_frequent_units(
+        corpus, id_col="url", text_col="extracted_text",
+        min_doc_freq=min_doc_freq,
+    )
+
+
+def _near_dup_pairs(corpus):
+    # LSH-then-verify: MinHash-LSH proposes candidate pairs (hot-bucket
+    # capped), exact 3-gram Jaccard is scored for just those, so no
+    # corpus self-join exists in the plan. Audit-only, never a drop
+    from ocrd_segment_spark.operators.dedup import (
+        _shingle_table,
+        jaccard_verify_pairs,
+        minhash_lsh_candidates,
+    )
+
+    # shingle sets derive ONCE (localCheckpoint) — the blocker's band
+    # self-join and the verifier's two join sides would otherwise each
+    # re-derive the tokenize→fold→shingle chain (4 full scans)
+    sh = _shingle_table(
+        corpus, "url", "extracted_text", 3
+    ).localCheckpoint(eager=True)
+    cands = minhash_lsh_candidates(
+        corpus, id_col="url", text_col="extracted_text", shingles=sh
+    )
+    return jaccard_verify_pairs(
+        corpus, cands, id_col="url", text_col="extracted_text", shingles=sh
+    )
+
+
 def build_corpus(
     spark,
     input_path: str,
@@ -502,331 +612,75 @@ def build_corpus(
 ) -> dict:
     """The pipeline body (importable for tests). Returns the funnel
     counts dict that is also written to ``stats_path``."""
+    # the keyword values, read by the gate and side-output tables; the
+    # batch --honor-meta turns on both the noindex and the alias gate
+    opts = dict(locals(), honor_noindex=honor_meta)
     from pyspark.sql import Observation, Window as W, functions as F
 
     from ocrd_segment_spark.operators.corpus_filters import (
         KEEP_COLS,
         keep_all,
+        reference_lm_table,
         with_keep_flags,
+    )
+    from ocrd_segment_spark.operators.pre_gates import (
+        GATES,
+        active_gates,
+        apply_gates,
+        is_set,
     )
     from ocrd_segment_spark.pipeline import extract_pages
 
     pages = spark.read.parquet(input_path)
-    n_outlink_edges = -1
-    if outlinks_path is not None:
-        # host link graph side-output over the RAW crawl (before any
-        # exclusion — the graph should see every page, including ones
-        # the corpus rejects). A second scan of (url, html) by design:
-        # pure-JVM anchor harvesting shares nothing with the
-        # extraction lineage, and entangling the two DAGs would force
-        # the kernel pass to wait on the edge shuffle. Feeds
-        # jobs/linkgraph_job.py / --host-ranks.
-        from ocrd_segment_spark.operators.linkgraph import (
-            host_edges,
-            outlinks,
+    side_counts = {
+        key: _observed_write(
+            build(pages, opts), F.count(F.lit(1)), opts[dest + "_path"]
         )
-
-        edges = host_edges(outlinks(pages))
-        e_obs = Observation("outlinks")
-        edges = edges.observe(e_obs, F.count(F.lit(1)).alias("n_edges"))
-        edges.write.mode("overwrite").parquet(outlinks_path)
-        n_outlink_edges = e_obs.get["n_edges"]
-    n_feed_links = -1
-    if feed_links_path is not None:
-        # feed autodiscovery side-output, same raw-scan discipline as
-        # --outlinks: the advertised feeds of every crawled page feed
-        # the fetch scheduler, whose fetched bodies operators/feeds
-        # harvests into frontier_job --feeds
-        from ocrd_segment_spark.operators.headmeta import feed_links
-
-        fl = feed_links(pages)
-        fl_obs = Observation("feedlinks")
-        fl = fl.observe(fl_obs, F.count(F.lit(1)).alias("n"))
-        fl.write.mode("overwrite").parquet(feed_links_path)
-        n_feed_links = fl_obs.get["n"]
-    n_tables = -1
-    if tables_path is not None:
-        # markdown-table side output, same raw-scan discipline as
-        # --outlinks: tables are training data in their own right and
-        # should be harvested from every crawled page, including ones
-        # the text funnel later rejects (a page can be boilerplate AND
-        # carry a good table)
-        from ocrd_segment_spark.operators.tables import (
-            table_cells,
-            tables_markdown,
-        )
-
-        md = tables_markdown(table_cells(pages, id_col="url"), id_col="url")
-        t_obs = Observation("tables")
-        md = md.observe(t_obs, F.count(F.lit(1)).alias("n"))
-        md.write.mode("overwrite").parquet(tables_path)
-        n_tables = t_obs.get["n"]
-    n_image_pairs = -1
-    if image_pairs_path is not None:
-        # image-text pair side output (operators/images), raw-scan
-        # discipline: the multimodal fetch list should see every
-        # crawled page — a text-funnel reject can still carry a good
-        # captioned image
-        from ocrd_segment_spark.operators.images import (
-            figure_pairs,
-            image_pairs,
-            with_caption_quality,
-        )
-
-        ip_src = pages
-        if honor_noai:
-            # noimageai excludes a page from the PAIR harvest even
-            # when its text is welcome (and vice versa — the two
-            # opt-outs are independent tokens)
-            from ocrd_segment_spark.operators.headmeta import (
-                with_ai_optout,
-            )
-
-            ip_src = (
-                with_ai_optout(pages)
-                .filter(~F.col("image_ai_optout") & ~F.col("ai_optout"))
-                .drop("ai_optout", "image_ai_optout")
-            )
-        # img + og + figure-caption rows, each screened by the
-        # LAION-style caption rule — caption_ok rides the table so the
-        # fetch scheduler can prioritize before downloading a byte
-        ip = with_caption_quality(
-            image_pairs(ip_src).unionByName(figure_pairs(ip_src))
-        )
-        ip_obs = Observation("imagepairs")
-        ip = ip.observe(ip_obs, F.count(F.lit(1)).alias("n"))
-        ip.write.mode("overwrite").parquet(image_pairs_path)
-        n_image_pairs = ip_obs.get["n"]
-    dom_obs = None
-    if blocklist_path is not None:
-        # domain blocklist BEFORE extraction — blocked pages never pay
-        # kernel time; the drop count rides the same terminal write
-        # (the Observation sits on the pre-filter node of the one
-        # linear lineage, so no extra action or scan exists)
-        from ocrd_segment_spark.functions.urls import with_domain_blocked
-
-        bl = spark.read.parquet(blocklist_path)
-        flagged = with_domain_blocked(pages, bl)
-        dom_obs = Observation("domain")
-        flagged = flagged.observe(
-            dom_obs,
-            F.coalesce(
-                F.sum(F.col("blocked").cast("long")), F.lit(0)
-            ).alias("dropped_domain"),
-        )
-        pages = flagged.filter(~F.col("blocked")).drop("blocked", "reg_domain")
-    if sniff_charset:
-        # charset-repair pre-stage (functions/charset.reencode_non_utf8):
-        # placed before every html-reading stage (head_meta harvest and
-        # the kernel both see clean utf-8); the clean majority is a
-        # pass-through filter, only the legacy/BOM tail pays Python.
-        from ocrd_segment_spark.functions.charset import reencode_non_utf8
-
-        pages = reencode_non_utf8(
-            pages, python_parallelism=python_parallelism
-        ).drop("charset", "charset_source")
-    ct_obs = None
-    if sniff_content_type:
-        # magic-byte ingestion gate (functions/multimodal.
-        # with_content_type): only text/html bodies reach the kernel —
-        # the blocklist discipline applied to payload TYPE. Placed
-        # after charset repair so legacy-encoded html classifies as
-        # html, not octet-stream. Scan-stage column math; the drop
-        # count rides the terminal write via the Observation.
-        from ocrd_segment_spark.functions.multimodal import (
-            with_content_type,
-        )
-
-        flagged = with_content_type(pages, blob_col="html")
-        ct_obs = Observation("ctype")
-        flagged = flagged.observe(
-            ct_obs,
-            F.coalesce(
-                F.sum(
-                    (
-                        F.col("content_type").isNull()
-                        | (F.col("content_type") != "text/html")
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ).alias("dropped"),
-        )
-        pages = flagged.filter(F.col("content_type") == "text/html").drop(
-            "content_type"
-        )
-    hr_obs = None
-    if host_ranks_path is not None and host_rank_min is not None:
-        # link-graph quality prior (the blocklist shape, continuous
-        # instead of binary): pages on hosts whose PageRank is below
-        # the floor drop BEFORE extraction. Host-grain ranks join on
-        # the page host — plain equi-join, AQE broadcasts it when the
-        # rank table is small and falls back to a shuffle join at
-        # crawl scale (10^8 hosts); unranked hosts are KEPT (absence
-        # of link evidence is not negative evidence).
-        from ocrd_segment_spark.functions.urls import host_of
-
-        ranks = spark.read.parquet(host_ranks_path).select(
-            F.col("node").alias("__hr_host"),
-            F.col("rank").alias("__host_rank"),
-        )
-        d = pages.withColumn("__host", host_of("url")).join(
-            ranks, F.col("__host") == F.col("__hr_host"), "left"
-        )
-        keep_hr = F.col("__host_rank").isNull() | (
-            F.col("__host_rank") >= host_rank_min
-        )
-        hr_obs = Observation("hostrank")
-        d = d.observe(
-            hr_obs,
-            F.coalesce(F.sum((~keep_hr).cast("long")), F.lit(0)).alias(
-                "dropped"
-            ),
-        )
-        pages = d.filter(keep_hr).drop("__host", "__hr_host", "__host_rank")
-    snap_obs = None
-    if snapshot_collapse:
-        # multi-crawl collapse: one capture (the latest) per canonical
-        # url enters extraction; stale refetches never pay kernel
-        # time. One window shuffle on the canonical url — partition
-        # sizes are captures-per-page (crawl-count-bounded), and the
-        # stale count rides the terminal write via the Observation on
-        # the flagged node (flag_col shape of latest_snapshot).
-        from ocrd_segment_spark.functions.urls import latest_snapshot
-
-        flagged = latest_snapshot(pages, flag_col="is_latest")
-        snap_obs = Observation("snapshot")
-        flagged = flagged.observe(
-            snap_obs,
-            F.coalesce(
-                F.sum((~F.col("is_latest")).cast("long")), F.lit(0)
-            ).alias("dropped_stale"),
-        )
-        pages = flagged.filter("is_latest").drop(
-            "is_latest", "canonical_url"
-        )
-    hm_obs = None
-    if honor_meta:
-        # the page's OWN declarations, honored before extraction:
-        # noindex pages drop (compliance, not optimization), and pages
-        # whose <link rel=canonical> points elsewhere collapse to one
-        # representative per authoritative url. One head_meta harvest
-        # (scan-stage column math), noindex counted and filtered FIRST
-        # (a noindex alias must never win its group), then the window
-        # keep rule; both counts ride the terminal write.
-        from ocrd_segment_spark.operators.headmeta import (
-            canonical_representatives,
-            head_meta,
-        )
-
-        m = head_meta(pages)
-        hm_obs = Observation("headmeta")
-        m = m.observe(
-            hm_obs,
-            F.coalesce(
-                F.sum(F.col("noindex").cast("long")), F.lit(0)
-            ).alias("dropped_noindex"),
-            F.coalesce(
-                F.sum((~F.col("noindex")).cast("long")), F.lit(0)
-            ).alias("indexable"),
-        )
-        reps = canonical_representatives(
-            m.filter(~F.col("noindex")),
-            flag_col="__canon_rep",
-            meta_precomputed=True,
-        )
-        pages = (
-            reps.filter("__canon_rep")
-            .drop("__canon_rep", "noindex")
-        )
-    na_obs = None
-    if honor_noai:
-        # the page's own AI-training opt-out, honored BEFORE extraction
-        # (compliance, not optimization — same placement rationale as
-        # --honor-meta's noindex)
-        from ocrd_segment_spark.operators.headmeta import with_ai_optout
-
-        flagged = with_ai_optout(pages)
-        na_obs = Observation("noai")
-        flagged = flagged.observe(
-            na_obs,
-            F.coalesce(
-                F.sum(F.col("ai_optout").cast("long")), F.lit(0)
-            ).alias("dropped"),
-        )
-        pages = flagged.filter(~F.col("ai_optout")).drop(
-            "ai_optout", "image_ai_optout"
-        )
-    sf_obs = None
-    if drop_soft404:
-        # soft-404 screen LAST in the pre-extraction chain (after the
-        # canonical collapse so alias accounting stays exact): error
-        # pages served as 200 never pay kernel time. Shared stage with
-        # the streaming job (operators/softerrors.soft404_page_stage);
-        # the drop count rides the terminal write via the Observation.
-        from ocrd_segment_spark.operators.softerrors import (
-            soft404_page_stage,
-        )
-
-        flagged = soft404_page_stage(pages)
-        sf_obs = Observation("soft404")
-        flagged = flagged.observe(
-            sf_obs,
-            F.coalesce(
-                F.sum(F.col("is_soft404").cast("long")), F.lit(0)
-            ).alias("dropped"),
-        )
-        pages = flagged.filter(~F.col("is_soft404")).drop("is_soft404")
+        if opts[dest + "_path"] is not None
+        else -1
+        for dest, key, build in SIDE_OUTPUTS
+    }
+    # pre-extraction gates (operators/pre_gates): excluded pages never
+    # pay kernel time, and each gate's drop count rides the terminal
+    # write as its own Observation on the one linear lineage
+    pages, gate_obs = apply_gates(
+        pages, active_gates(opts), opts, observe=True
+    )
     # real n-gram language id (round-3 task: the en/de digram toy no
     # longer routes drop decisions) scored INSIDE the extraction pass —
     # same frozen score_document, zero extra Arrow round-trip, the
     # whole scoring chain is ONE python stage + column math
     if input_format == "pdf":
-        # the PDF lane: frozen text-subset parse (sources/pdf) into
-        # the extracted-table shape, language id as the standalone
-        # pass (value-identical to the fused path, pytest-pinned) —
-        # still exactly one python codec stage + one scoring stage
-        from ocrd_segment_spark.operators.langid import with_lang_ngram
-        from ocrd_segment_spark.sources.pdf import pdf_pages
+        # the PDF lane: frozen text-subset parse (sources/pdf), shared
+        # with the stream job
+        from ocrd_segment_spark.sources.pdf import pdf_extracted
 
-        extracted = with_lang_ngram(
-            pdf_pages(pages, python_parallelism=python_parallelism),
-            text_col="extracted_text",
-            python_parallelism=python_parallelism,
-            margin=lang_margin,
-        )
+        extracted = pdf_extracted(pages, python_parallelism, lang_margin)
     else:
-        from ocrd_segment_spark.config import DEFAULT_PARAMS, ExtractParams
+        from ocrd_segment_spark.config import ExtractParams
 
         extracted = extract_pages(
             pages,
             # verbatim <pre> (kernel 1.6.0): code blocks keep their
             # indentation in the training corpus; PDF-lane text has no
             # pre analog, so the flag only touches the HTML path
-            params=ExtractParams(preserve_pre=True)
-            if preserve_pre
-            else DEFAULT_PARAMS,
+            params=ExtractParams(preserve_pre=preserve_pre),
             python_parallelism=python_parallelism,
             lang_id=True,
             lang_margin=lang_margin,
         )
+    # per-language reference LMs (CCNet shape), scored under each
+    # document's PREDICTED language
+    lm_table = (
+        reference_lm_table(spark, lm_ref_path)
+        if lm_ref_path is not None and lm_max_bits is not None
+        else None
+    )
     # the six-stage quality filter chain — ONE shared definition with
     # the streaming job (operators/corpus_filters; review pass 3 found
     # the chain hand-mirrored in both jobs, the exact drift channel
     # that left the stream a round behind). Signal columns stay in the
     # output when their stage is on, so drops are auditable per doc.
-    lm_table = None
-    if lm_ref_path is not None and lm_max_bits is not None:
-        from ocrd_segment_spark.operators.textstats import (
-            bigram_lm_models_by_lang,
-            collect_lm_surprisal,
-        )
-
-        # per-language reference LMs (CCNet shape), scored under each
-        # document's PREDICTED language; the collected surprisal table
-        # is model-sized (langs × charset²), never corpus-sized
-        lm_table = collect_lm_surprisal(
-            bigram_lm_models_by_lang(spark.read.parquet(lm_ref_path))
-        )
     scored = with_keep_flags(
         extracted,
         min_quality=min_quality,
@@ -861,97 +715,23 @@ def build_corpus(
         scored = scored.withColumn("n_bpe_tokens", F.lit(None).cast("long"))
 
     # funnel counters ride the write action as an Observation — the
-    # extraction (the expensive stage) runs exactly ONCE; coalesce
-    # guards the zero-row input (sum over no rows is NULL)
+    # extraction (the expensive stage) runs exactly ONCE. Precedence
+    # chain folded over KEEP_COLS: each stage counts only docs that
+    # survived every earlier stage, so the funnel always reconciles
+    def total(cond):
+        # coalesce guards the zero-row input (sum over no rows is NULL)
+        return F.coalesce(F.sum(cond.cast("long")), F.lit(0))
+
+    aggs = [F.count(F.lit(1)).alias("pages")]
+    passed = F.lit(True)
+    for c in KEEP_COLS:
+        aggs.append(total(passed & ~F.col(c)).alias(_dropped(c)))
+        passed = passed & F.col(c)
     obs = Observation("funnel")
     scored = scored.observe(
         obs,
-        F.count(F.lit(1)).alias("pages"),
-        F.coalesce(
-            F.sum((~F.col("keep_quality")).cast("long")), F.lit(0)
-        ).alias("dropped_quality"),
-        F.coalesce(
-            F.sum((F.col("keep_quality") & ~F.col("keep_lang")).cast("long")),
-            F.lit(0),
-        ).alias("dropped_lang"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality")
-                    & F.col("keep_lang")
-                    & ~F.col("keep_gopher")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("dropped_gopher"),
-        # precedence chain: each stage counts only docs that survived
-        # every earlier stage, so the funnel always reconciles to pages
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality") & F.col("keep_lang")
-                    & F.col("keep_gopher") & ~F.col("keep_entropy")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("dropped_entropy"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality") & F.col("keep_lang")
-                    & F.col("keep_gopher") & F.col("keep_entropy")
-                    & ~F.col("keep_script")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("dropped_script"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality") & F.col("keep_lang")
-                    & F.col("keep_gopher") & F.col("keep_entropy")
-                    & F.col("keep_script") & ~F.col("keep_lm")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("dropped_lm"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality") & F.col("keep_lang")
-                    & F.col("keep_gopher") & F.col("keep_entropy")
-                    & F.col("keep_script") & F.col("keep_lm")
-                    & ~F.col("keep_compression")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("dropped_compression"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality") & F.col("keep_lang")
-                    & F.col("keep_gopher") & F.col("keep_entropy")
-                    & F.col("keep_script") & F.col("keep_lm")
-                    & F.col("keep_compression") & ~F.col("keep_clf")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("dropped_clf"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("keep_quality")
-                    & F.col("keep_lang")
-                    & F.col("keep_gopher")
-                    & F.col("keep_entropy")
-                    & F.col("keep_script")
-                    & F.col("keep_lm")
-                    & F.col("keep_compression")
-                    & F.col("keep_clf")
-                ).cast("long")
-            ),
-            F.lit(0),
-        ).alias("kept_after_filters"),
+        *aggs,
+        total(keep_all()).alias("kept_after_filters"),
         F.coalesce(
             F.sum(F.when(keep_all(), F.col("n_bpe_tokens"))),
             F.lit(0),
@@ -983,84 +763,52 @@ def build_corpus(
 
     counts = obs.get
     n_out = out_obs.get["n_out"]
-    funnel = {
-        # pages = pages ENTERING extraction (post-blocklist, post-
-        # host-rank, post-snapshot-collapse); the pre-extraction drop
-        # stages each count what they removed, in their stage order
-        "dropped_domain": (
-            dom_obs.get["dropped_domain"] if dom_obs is not None else -1
-        ),
-        "dropped_content_type": (
-            ct_obs.get["dropped"] if ct_obs is not None else -1
-        ),
-        "dropped_host_rank": (
-            hr_obs.get["dropped"] if hr_obs is not None else -1
-        ),
-        "dropped_stale_snapshot": (
-            snap_obs.get["dropped_stale"] if snap_obs is not None else -1
-        ),
-        "dropped_noindex": (
-            hm_obs.get["dropped_noindex"] if hm_obs is not None else -1
-        ),
-        # aliases = indexable pages that lost their canonical group
-        # (the window winners are exactly what enters extraction, so
-        # the existing pages Observation closes the count — no extra
-        # node on the lineage)
-        "dropped_canonical_alias": (
-            hm_obs.get["indexable"] - counts["pages"]
-            if hm_obs is not None
-            else -1
-        ),
-        "dropped_noai": (
-            na_obs.get["dropped"] if na_obs is not None else -1
-        ),
-        "dropped_soft404": (
-            sf_obs.get["dropped"] if sf_obs is not None else -1
-        ),
-        "outlink_edges": n_outlink_edges,
-        "feed_links_found": n_feed_links,
-        "tables_extracted": n_tables,
-        "image_pairs_found": n_image_pairs,
-        "pages": counts["pages"],
-        "dropped_quality": counts["dropped_quality"],
-        "dropped_lang": counts["dropped_lang"],
-        "dropped_gopher": counts["dropped_gopher"],
-        # -1 = stage not run (fixed-schema discipline, see below); a
-        # real 0 means the stage ran and dropped nothing
-        "dropped_entropy": (
-            counts["dropped_entropy"] if entropy_min is not None else -1
-        ),
-        "dropped_lm": (
-            counts["dropped_lm"]
-            if lm_ref_path is not None and lm_max_bits is not None
-            else -1
-        ),
-        "dropped_compression": (
-            counts["dropped_compression"] if max_compression is not None else -1
-        ),
-        "dropped_clf": counts["dropped_clf"] if quality_clf else -1,
-        "dropped_script": (
-            counts["dropped_script"] if script_screen else -1
-        ),
-        "kept_after_filters": counts["kept_after_filters"],
-        # subword total of everything passing the filters (pre-dedup;
-        # dedup canonicals keep their counts in the output table)
-        "kept_bpe_tokens": counts["kept_bpe_tokens"] if count_bpe else -1,
-        "dropped_exact_dup": counts["kept_after_filters"] - n_out,
-        "corpus_docs": n_out,
+    # -1 = stage not run (fixed-schema discipline, see below); a real
+    # 0 means the stage ran and dropped nothing
+    stage_ran = {
+        "keep_entropy": entropy_min is not None,
+        "keep_lm": lm_ref_path is not None and lm_max_bits is not None,
+        "keep_compression": max_compression is not None,
+        "keep_clf": quality_clf,
+        "keep_script": script_screen,
     }
+    funnel = {
+        # the pre-extraction gates in gate order, then the raw-scan side
+        # outputs; pages = pages ENTERING extraction
+        **{
+            g.key: gate_obs[g.key].get["dropped"] if g.key in gate_obs
+            else -1
+            for g in GATES
+            if g.key is not None
+        },
+        **side_counts,
+        "pages": counts["pages"],
+    }
+    # the stats column order predates the script screen, whose count
+    # was appended after the other quality stages
+    for c in (*(c for c in KEEP_COLS if c != "keep_script"), "keep_script"):
+        funnel[_dropped(c)] = (
+            counts[_dropped(c)] if stage_ran.get(c, True) else -1
+        )
+    funnel["kept_after_filters"] = counts["kept_after_filters"]
+    # subword total of everything passing the filters (pre-dedup;
+    # dedup canonicals keep their counts in the output table)
+    funnel["kept_bpe_tokens"] = counts["kept_bpe_tokens"] if count_bpe else -1
+    funnel["dropped_exact_dup"] = counts["kept_after_filters"] - n_out
+    funnel["corpus_docs"] = n_out
     # stats schema is FIXED regardless of flags (append-mode parquet
     # readback resolves the schema from one file footer — conditional
     # keys would be nondeterministically dropped); -1 = stage not run
-    funnel["near_dup_candidates"] = -1
-    funnel["boilerplate_units_removed"] = -1
-    funnel["boilerplate_regions_removed"] = -1
-    funnel["pii_docs_redacted"] = -1
-    funnel["contaminated_docs"] = -1
-    funnel["shards_written"] = -1
-    funnel["sequences_packed"] = -1
-    for _k in ("diff_added", "diff_removed", "diff_changed", "diff_unchanged"):
-        funnel[_k] = -1
+    for k in (
+        "near_dup_candidates", "boilerplate_units_removed",
+        "boilerplate_regions_removed", "pii_docs_redacted",
+        "contaminated_docs", "shards_written", "sequences_packed",
+        "diff_added", "diff_removed", "diff_changed", "diff_unchanged",
+    ):
+        funnel[k] = -1
+    # post-write stages read the COMMITTED corpus: they never branch the
+    # live lineage, so re-extraction is never triggered
+    corpus = partial(spark.read.parquet, output_path)
     if diff_prev_path is not None:
         # snapshot-over-snapshot delta vs a PREVIOUS corpus (post-write
         # pattern: both sides read committed parquet; the full-outer
@@ -1073,190 +821,69 @@ def build_corpus(
 
         d = corpus_diff(
             spark.read.parquet(diff_prev_path),
-            spark.read.parquet(output_path),
+            corpus(),
             key_col="url",
             text_col="extracted_text",
         )
         for r in diff_summary(d).collect():
             funnel[f"diff_{r['status']}"] = r["n_urls"]
-    if shard_tokens is not None:
-        # token-balanced training-shard layout over the WRITTEN corpus
-        # (post-write pattern: one committed-parquet scan, the
-        # distributed prefix-sum, no branch of the live lineage).
-        # partitionBy(shard_id) gives size-uniform files regardless of
-        # document length skew; shard ids are contiguous from 0, so
-        # max+1 (riding the write as an Observation) counts them.
-        from ocrd_segment_spark.operators.sampling import shard_by_tokens
+    # post-write tables, each count riding its own write. The PII scrub
+    # runs after the boilerplate strip: it scrubs the furthest-
+    # downstream span-aligned table, _clean when --preserve-spans
+    # wrote one.
+    from ocrd_segment_spark.functions.pii import redact_pii_spans
+    from ocrd_segment_spark.operators.decontaminate import (
+        contamination_flags,
+    )
+    from ocrd_segment_spark.operators.sampling import (
+        pack_sequences,
+        shard_by_tokens,
+    )
 
-        corpus = spark.read.parquet(output_path)
-        tok_col = "n_bpe_tokens" if count_bpe else "n_tokens"
-        sharded = shard_by_tokens(
-            corpus, shard_tokens, token_col=tok_col, key_col="url"
-        )
-        s_obs = Observation("shards")
-        sharded = sharded.observe(
-            s_obs,
-            (F.coalesce(F.max("shard_id"), F.lit(-1)) + 1).alias("n_shards"),
-        )
-        sharded.write.mode("overwrite").partitionBy("shard_id").parquet(
-            output_path + "_sharded"
-        )
-        funnel["shards_written"] = s_obs.get["n_shards"]
-    if pack_seq_tokens is not None:
-        # packed-training-sequence manifest over the WRITTEN corpus
-        # (post-write pattern: one committed scan, the shared prefix-
-        # sum + row-local overlap explode, no branch of the live DAG).
-        # seq ids are contiguous from 0, so max+1 rides the write.
-        from ocrd_segment_spark.operators.sampling import pack_sequences
-
-        corpus = spark.read.parquet(output_path)
-        tok_col = "n_bpe_tokens" if count_bpe else "n_tokens"
-        packed = pack_sequences(
-            corpus, pack_seq_tokens, token_col=tok_col, key_col="url"
-        )
-        p_obs = Observation("packed")
-        packed = packed.observe(
-            p_obs,
-            (F.coalesce(F.max("seq_id"), F.lit(-1)) + 1).alias("n_seqs"),
-        )
-        packed.write.mode("overwrite").parquet(output_path + "_packed")
-        funnel["sequences_packed"] = p_obs.get["n_seqs"]
-    if decontaminate_path is not None:
-        # benchmark decontamination over the WRITTEN corpus (post-write
-        # pattern again): the eval set's shingle hashes are broadcast,
-        # flagged urls land in <output>_contaminated so downstream
-        # training excludes them — an audit table, like the near-dup
-        # pairs, because dropping eval-overlapping docs is a reviewed
-        # decision, not an automatic one.
-        from ocrd_segment_spark.operators.decontaminate import contamination_flags
-
-        corpus = spark.read.parquet(output_path)
-        bench = spark.read.parquet(decontaminate_path)
-        flags = contamination_flags(
-            corpus,
-            bench,
-            id_col="url",
-            text_col="extracted_text",
-            benchmark_text_col="text",
-        ).filter("contaminated")
-        c_obs = Observation("contaminated")
-        flags = flags.observe(c_obs, F.count(F.lit(1)).alias("n"))
-        flags.write.mode("overwrite").parquet(output_path + "_contaminated")
-        funnel["contaminated_docs"] = c_obs.get["n"]
-    if boilerplate_min_df is not None:
-        # C4-style cross-document boilerplate removal, run over the
-        # WRITTEN corpus (like the near-dup audit: reading committed
-        # parquet is one cheap column scan; deriving it from live
-        # lineage would branch the DAG and re-run the mapInPandas
-        # extraction). Two variants, same doc-frequency rule:
-        # --preserve-spans removes frequent REGIONS and writes
-        # (url, clean_text, REMAPPED region_spans, n_kept, n_removed)
-        # — spans slice clean_text exactly, so region structure
-        # survives cleaning without re-extraction (round-4 verdict
-        # task: users no longer re-extract for clean text + spans);
-        # the default line-based strip stays for span-less corpora and
-        # emits (url, clean_text, n_kept, n_removed) with the main
-        # table's offsets still referring to extracted_text.
-        corpus = spark.read.parquet(output_path)
-        b_obs = Observation("boiler")
-        if preserve_spans:
-            from ocrd_segment_spark.operators.paragraphs import (
-                remove_frequent_regions,
-            )
-
-            cleaned = remove_frequent_regions(
-                corpus,
-                id_col="url",
-                text_col="extracted_text",
-                spans_col="region_spans",
-                min_doc_freq=boilerplate_min_df,
-            ).observe(
-                b_obs, F.coalesce(F.sum("n_removed"), F.lit(0)).alias("n")
-            )
-        else:
-            from ocrd_segment_spark.operators.paragraphs import (
-                remove_frequent_units,
-            )
-
-            cleaned = remove_frequent_units(
-                corpus,
-                id_col="url",
-                text_col="extracted_text",
-                min_doc_freq=boilerplate_min_df,
-            ).observe(
-                b_obs, F.coalesce(F.sum("n_removed"), F.lit(0)).alias("n")
-            )
-        cleaned.write.mode("overwrite").parquet(output_path + "_clean")
-        key = ("boilerplate_regions_removed" if preserve_spans
-               else "boilerplate_units_removed")
-        funnel[key] = b_obs.get["n"]
-    if redact_pii:
-        # span-preserving PII scrub over the WRITTEN output (post-write
-        # pattern: one cheap scan of committed parquet, zero shuffle —
-        # the operator is pure per-document column math). Scrubs the
-        # FURTHEST-DOWNSTREAM span-aligned table: the boilerplate-
-        # cleaned _clean table when --preserve-spans ran (so users get
-        # cleaned AND redacted in one table), else the main corpus.
-        # Sibling table keeps the scrub reviewable next to its source;
-        # the redacted-doc count rides the write.
-        from ocrd_segment_spark.functions.pii import redact_pii_spans
-
-        if boilerplate_min_df is not None and preserve_spans:
-            src_tbl = spark.read.parquet(output_path + "_clean")
-            scrubbed = redact_pii_spans(src_tbl, text_col="clean_text")
-        else:
-            src_tbl = spark.read.parquet(output_path)
-            scrubbed = redact_pii_spans(src_tbl)
-        p_obs = Observation("pii")
-        redacted = scrubbed.observe(
-            p_obs,
-            F.coalesce(
-                F.sum((F.col("n_pii_regions") > 0).cast("long")), F.lit(0)
-            ).alias("n"),
-        )
-        redacted.write.mode("overwrite").parquet(output_path + "_redacted")
-        funnel["pii_docs_redacted"] = p_obs.get["n"]
-    if near_dup_audit is not None:
-        # LSH-then-verify over the WRITTEN corpus: MinHash-LSH proposes
-        # candidate pairs (bucketed, hot-bucket capped), exact 3-gram
-        # Jaccard is scored for just those pairs — so the audit table
-        # carries the similarity a human thresholds on, and no corpus
-        # self-join exists in the plan. Audit-only, not an automatic
-        # drop stage (reads the committed parquet, not live lineage);
-        # the pair count rides the write as an Observation (no re-scan).
-        from ocrd_segment_spark.operators.dedup import (
-            _shingle_table,
-            jaccard_verify_pairs,
-            minhash_lsh_candidates,
-        )
-
-        corpus = spark.read.parquet(output_path)
-        # shingle sets derive ONCE (localCheckpoint) — the blocker's
-        # band-table self-join and the verifier's two join sides
-        # otherwise each re-derive the tokenize→fold→shingle chain
-        # from the committed parquet (4 full scans, plan-verified)
-        sh = _shingle_table(
-            corpus, "url", "extracted_text", 3
-        ).localCheckpoint(eager=True)
-        cands = minhash_lsh_candidates(
-            corpus, id_col="url", text_col="extracted_text", shingles=sh
-        )
-        verified = jaccard_verify_pairs(
-            corpus, cands, id_col="url", text_col="extracted_text",
-            shingles=sh,
-        )
-        nd_obs = Observation("near_dup")
-        verified = verified.observe(nd_obs, F.count(F.lit(1)).alias("n_pairs"))
-        verified.write.mode("overwrite").parquet(near_dup_audit)
-        funnel["near_dup_candidates"] = nd_obs.get["n_pairs"]
+    tok_col = "n_bpe_tokens" if count_bpe else "n_tokens"
+    spans_clean = boilerplate_min_df is not None and preserve_spans
+    # (option, funnel key, output path, agg over written rows, builder,
+    # partition column). Shard and sequence ids are contiguous from 0,
+    # so max + 1 counts them
+    for on, key, path, agg, build, part in (
+        (shard_tokens, "shards_written", output_path + "_sharded",
+         F.max("shard_id") + 1, lambda: shard_by_tokens(
+             corpus(), shard_tokens, token_col=tok_col, key_col="url"),
+         "shard_id"),
+        (pack_seq_tokens, "sequences_packed", output_path + "_packed",
+         F.max("seq_id") + 1, lambda: pack_sequences(
+             corpus(), pack_seq_tokens, token_col=tok_col, key_col="url"),
+         None),
+        # eval-set overlap is an audit table: dropping those docs is a
+        # reviewed decision, not an automatic one
+        (decontaminate_path, "contaminated_docs",
+         output_path + "_contaminated", F.count(F.lit(1)),
+         lambda: contamination_flags(
+             corpus(), spark.read.parquet(decontaminate_path), id_col="url",
+             text_col="extracted_text", benchmark_text_col="text",
+         ).filter("contaminated"), None),
+        (boilerplate_min_df,
+         "boilerplate_regions_removed" if preserve_spans
+         else "boilerplate_units_removed",
+         output_path + "_clean", F.sum("n_removed"),
+         lambda: _clean(corpus(), boilerplate_min_df, preserve_spans), None),
+        (redact_pii, "pii_docs_redacted", output_path + "_redacted",
+         F.sum((F.col("n_pii_regions") > 0).cast("long")),
+         lambda: redact_pii_spans(
+             spark.read.parquet(output_path + "_clean"),
+             text_col="clean_text",
+         ) if spans_clean else redact_pii_spans(corpus()), None),
+        (near_dup_audit, "near_dup_candidates", near_dup_audit,
+         F.count(F.lit(1)), lambda: _near_dup_pairs(corpus()), None),
+    ):
+        if is_set(on):
+            funnel[key] = _observed_write(build(), agg, path, part)
     if card:
-        # per-language dataset card over the WRITTEN corpus (post-write
-        # pattern: one cheap aggregate scan of the committed parquet,
-        # never a branch of the live extraction lineage)
+        # per-language dataset card: one cheap aggregate scan
         from ocrd_segment_spark.operators.textstats import corpus_card
 
         corpus_card(
-            spark.read.parquet(output_path),
+            corpus(),
             lang_col="pred_lang",
             text_col="extracted_text",
         ).write.mode("overwrite").parquet(output_path + "_card")
@@ -1268,9 +895,9 @@ def build_corpus(
             host_quality_priors,
         )
 
-        host_quality_priors(
-            spark.read.parquet(output_path)
-        ).write.mode("overwrite").parquet(output_path + "_host_priors")
+        host_quality_priors(corpus()).write.mode("overwrite").parquet(
+            output_path + "_host_priors"
+        )
     if stats_path is not None:
         spark.createDataFrame([funnel]).write.mode("append").parquet(stats_path)
     return funnel

@@ -13,8 +13,8 @@ jobs/corpus_job.py, as one spark-submit entrypoint.
 
 New page files landing in ``--input`` are picked up by the file
 source; each microbatch runs the SAME narrow transform chain as the
-batch job (extract → quality/lang score → filters → optional Gopher
-rules — pytest pins microbatch == batch for every stage), and the
+batch job (pre-extraction gates → extract → quality/lang score →
+filters — pytest pins microbatch == batch for every stage), and the
 checkpoint gives exactly-once output across restarts (file-source
 offsets + sink manifest — the streaming form of the batch job's
 resume anti-join).
@@ -24,6 +24,11 @@ across an unbounded stream is unbounded state. The engine's choice is
 the stateful MinHash dedup stream (streaming/dedup_stream.py) as a
 downstream stage, or periodic batch compaction with
 operators/dedup.merge_corpus — both documented, both tested.
+
+The gates come from the batch job's table (operators/pre_gates.GATES),
+streaming-legal entries only: blocklist → charset → content type →
+noindex → noai → soft-404. Host rank, snapshot collapse and the
+canonical-alias collapse stay batch-only.
 
 ``--available-now`` drains what exists and stops (replay/backfill
 mode); omit it for a long-running job.
@@ -169,17 +174,9 @@ def main() -> None:
     ap.add_argument("--available-now", action="store_true")
     ap.add_argument("--python-parallelism", type=int, default=None)
     args = ap.parse_args()
-    if args.input_format == "pdf":
-        for flag, on in (
-            ("--sniff-charset", args.sniff_charset),
-            ("--sniff-content-type", args.sniff_content_type),
-            ("--honor-noindex", args.honor_noindex),
-            ("--drop-soft404", args.drop_soft404),
-            ("--honor-noai", args.honor_noai),
-        ):
-            if on:
-                ap.error(f"{flag} reads html pages and cannot run on"
-                         " --input-format pdf")
+    from ocrd_segment_spark.operators.pre_gates import refuse_html_on_pdf
+
+    refuse_html_on_pdf(ap, args)
     if args.bpe_vocab is not None and not args.count_bpe:
         ap.error("--bpe-vocab requires --count-bpe"
                  " (a vocabulary with no metering stage does nothing)")
@@ -259,27 +256,28 @@ def run_stream(
     output is projected onto the fixed ``SINK_COLUMNS`` schema so
     restarts with different stage flags keep appending a single
     parquet schema."""
+    opts = dict(locals())
     from pyspark.sql import functions as F
 
     from ocrd_segment_spark.operators.corpus_filters import (
         KEEP_COLS,
         keep_all,
+        reference_lm_table,
         with_keep_flags,
+    )
+    from ocrd_segment_spark.operators.pre_gates import (
+        active_gates,
+        apply_gates,
     )
     from ocrd_segment_spark.streaming.extract_stream import stream_extract
 
-    lm_table = None
-    if lm_ref_path is not None and lm_max_bits is not None:
-        # per-language reference LMs collected ONCE before the stream
-        # starts (model-sized, batch read) — microbatches only fold
-        from ocrd_segment_spark.operators.textstats import (
-            bigram_lm_models_by_lang,
-            collect_lm_surprisal,
-        )
-
-        lm_table = collect_lm_surprisal(
-            bigram_lm_models_by_lang(spark.read.parquet(lm_ref_path))
-        )
+    # per-language reference LMs collected ONCE before the stream
+    # starts (model-sized, batch read) — microbatches only fold
+    lm_table = (
+        reference_lm_table(spark, lm_ref_path)
+        if lm_ref_path is not None and lm_max_bits is not None
+        else None
+    )
 
     bpe_vocab = None
     if count_bpe:
@@ -291,111 +289,11 @@ def run_stream(
             else VOCAB
         )
 
-    pre_stages = []
-    if blocklist_path is not None:
-        # registered-domain blocklist BEFORE extraction, exactly like
-        # the batch job: the blocklist is a STATIC DataFrame read once
-        # before the query starts; each microbatch does a stream-static
-        # broadcast join (narrow, streaming-legal), so blocked pages
-        # never pay kernel time in the stream either
-        from ocrd_segment_spark.functions.urls import with_domain_blocked
-
-        bl = spark.read.parquet(blocklist_path)
-
-        def _blocklist_stage(pages):
-            return (
-                with_domain_blocked(pages, bl)
-                .filter(~F.col("blocked"))
-                .drop("blocked", "reg_domain")
-            )
-
-        pre_stages.append(_blocklist_stage)
-    if sniff_charset:
-        # charset repair AFTER the (url-only) blocklist, BEFORE every
-        # html-reading stage — batch-job parity. The clean-utf8 branch
-        # and the decoded tail are two filters of one streaming source
-        # unioned back (streaming-legal); the mapInPandas decode runs
-        # per microbatch on the tail only. The sniff is plain column
-        # expressions (no HOF lambdas), so the codegen-less microbatch
-        # no-CSE trap does not apply.
-        from ocrd_segment_spark.functions.charset import reencode_non_utf8
-
-        def _charset_stage(pages):
-            return reencode_non_utf8(
-                pages, python_parallelism=python_parallelism
-            ).drop("charset", "charset_source")
-
-        pre_stages.append(_charset_stage)
-    if sniff_content_type:
-        # magic-byte ingestion gate AFTER charset repair (utf-16 html
-        # must decode before it is classified) — row-local column
-        # math over the hex prefix, streaming-legal; batch parity
-        # with corpus_job --sniff-content-type.
-        from ocrd_segment_spark.functions.multimodal import (
-            with_content_type,
-        )
-
-        def _ctype_stage(pages):
-            return (
-                with_content_type(pages, blob_col="html")
-                .filter(F.col("content_type") == "text/html")
-                .drop("content_type")
-            )
-
-        pre_stages.append(_ctype_stage)
-    if honor_noindex:
-        # robots-noindex honoring BEFORE extraction — row-local column
-        # math (head_meta harvest), trivially streaming-legal. The
-        # alias collapse stays batch-only (non-time window).
-        from ocrd_segment_spark.operators.headmeta import head_meta
-
-        def _noindex_stage(pages):
-            return (
-                head_meta(pages)
-                .filter(~F.col("noindex"))
-                .drop(
-                    "canonical_href", "canonical_url", "robots", "noindex"
-                )
-            )
-
-        pre_stages.append(_noindex_stage)
-    if honor_noai:
-        # noai opt-out BEFORE extraction — row-local column math,
-        # batch parity with corpus_job --honor-noai
-        from ocrd_segment_spark.operators.headmeta import with_ai_optout
-
-        def _noai_stage(pages):
-            return (
-                with_ai_optout(pages)
-                .filter(~F.col("ai_optout"))
-                .drop("ai_optout", "image_ai_optout")
-            )
-
-        pre_stages.append(_noai_stage)
-    if drop_soft404:
-        # soft-404 screen LAST in the pre-extraction chain — the ONE
-        # shared stage definition with the batch job
-        # (operators/softerrors.soft404_page_stage); row-local column
-        # math, streaming-legal.
-        from ocrd_segment_spark.operators.softerrors import (
-            soft404_page_stage,
-        )
-
-        def _soft404_stage(pages):
-            return (
-                soft404_page_stage(pages)
-                .filter(~F.col("is_soft404"))
-                .drop("is_soft404")
-            )
-
-        pre_stages.append(_soft404_stage)
-    pre_transform = None
-    if pre_stages:
-
-        def pre_transform(pages):
-            for stage in pre_stages:
-                pages = stage(pages)
-            return pages
+    # the pre-extraction gates: the SAME table as the batch job
+    # (operators/pre_gates), streaming-legal entries only. Static inputs
+    # (the blocklist) are read when the query is built, before it
+    # starts; each microbatch then does a stream-static broadcast join
+    gates = active_gates(opts, streaming=True)
 
     def score_and_filter(extracted):
         # pred_lang arrives from the extraction pass itself
@@ -447,24 +345,16 @@ def run_stream(
     input_schema = None
     extractor = None
     if input_format == "pdf":
-        # the PDF lane (batch parity with corpus_job --input-format
-        # pdf): frozen text-subset parse into the extracted shape,
-        # language id as the standalone pass — both mapInPandas, both
-        # streaming-legal
-        from ocrd_segment_spark.operators.langid import with_lang_ngram
-        from ocrd_segment_spark.sources.pdf import pdf_pages
+        # the PDF lane, shared with corpus_job --input-format pdf: both
+        # mapInPandas stages are streaming-legal
+        from ocrd_segment_spark.sources.pdf import pdf_extracted
 
         input_schema = "url string, data binary"
 
         def extractor(blobs):
-            return with_lang_ngram(
-                pdf_pages(blobs, python_parallelism=python_parallelism),
-                text_col="extracted_text",
-                python_parallelism=python_parallelism,
-                margin=lang_margin,
-            )
+            return pdf_extracted(blobs, python_parallelism, lang_margin)
 
-    from ocrd_segment_spark.config import DEFAULT_PARAMS, ExtractParams
+    from ocrd_segment_spark.config import ExtractParams
 
     return stream_extract(
         spark,
@@ -473,12 +363,10 @@ def run_stream(
         checkpoint,
         # verbatim <pre> is a pure kernel param — narrow, streaming-
         # legal, batch parity with corpus_job --preserve-pre
-        params=ExtractParams(preserve_pre=True)
-        if preserve_pre
-        else DEFAULT_PARAMS,
+        params=ExtractParams(preserve_pre=preserve_pre),
         available_now=available_now,
         transform=score_and_filter,
-        pre_transform=pre_transform,
+        pre_transform=lambda pages: apply_gates(pages, gates, opts)[0],
         python_parallelism=python_parallelism,
         lang_id=True,
         lang_margin=lang_margin,

@@ -387,8 +387,8 @@ def media_meta(
     """Typed audio/video metadata over opaque binary columns — the
     :func:`binary_meta` twin for the non-image lanes. Unrecognized
     containers keep their row with NULL fields (auditable, never
-    dropped silently). ``python_parallelism`` rides the shared
-    cores//2 guard like every codec-lane stage."""
+    dropped silently). ``python_parallelism`` is the shared
+    parallelism floor of every codec-lane stage."""
     from ..pipeline import _cap_python_tasks
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

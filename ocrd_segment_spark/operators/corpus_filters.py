@@ -34,6 +34,18 @@ KEEP_COLS = (
 )
 
 
+def reference_lm_table(spark, lm_ref_path: str) -> tuple[dict, dict]:
+    """The ``lm_table`` of :func:`with_keep_flags`: per-language
+    reference char-bigram LMs (CCNet shape) trained from the trusted
+    ``(text, lang)`` documents at ``lm_ref_path``, then COLLECTED —
+    model-sized (langs × charset²), never corpus-sized."""
+    from .textstats import bigram_lm_models_by_lang, collect_lm_surprisal
+
+    return collect_lm_surprisal(
+        bigram_lm_models_by_lang(spark.read.parquet(lm_ref_path))
+    )
+
+
 def with_keep_flags(
     extracted: DataFrame,
     *,

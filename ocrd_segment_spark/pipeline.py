@@ -463,8 +463,8 @@ def extract_pages_styled(
     extra ``style_spans`` column (document-level, absolute output
     offsets). ``params.style_spans`` is forced on; the row packing is
     the SAME ``_extract_batches`` loop as the plain pipeline, and
-    ``python_parallelism`` applies the same cores//2 oversubscription
-    cap as :func:`extract_pages`."""
+    ``python_parallelism`` is the same parallelism floor as in
+    :func:`extract_pages`."""
     import dataclasses
 
     params = dataclasses.replace(params or DEFAULT_PARAMS, style_spans=True)

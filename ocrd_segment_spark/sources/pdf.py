@@ -276,9 +276,8 @@ def pdf_text(
 
     from ..pipeline import _cap_python_tasks
 
-    # the shared cores//2 python-task guard (coalesce when capping
-    # down, no-op at the cap) — NOT a bare repartition (review
-    # finding: the duplicated guard full-shuffled raw blobs)
+    # the shared python-task parallelism floor (no-op when the input
+    # is already partitioned at least that finely)
     return _cap_python_tasks(blobs, python_parallelism).mapInPandas(
         gen, schema
     )
@@ -343,6 +342,25 @@ def pdf_pages(
 _TITLE_KEY = re.compile(rb"/Title\s*\(")
 _AUTHOR_KEY = re.compile(rb"/Author\s*\(")
 _URI_KEY = re.compile(rb"/URI\s*\(")
+
+
+def pdf_extracted(
+    blobs: DataFrame,
+    python_parallelism: int | None = None,
+    lang_margin: float | None = None,
+) -> DataFrame:
+    """The corpus jobs' PDF lane, batch and stream: :func:`pdf_pages`
+    into the extracted-table shape, then language id as the standalone
+    pass (value-identical to the html path's fused scoring,
+    pytest-pinned) — one python codec stage plus one scoring stage."""
+    from ..operators.langid import with_lang_ngram
+
+    return with_lang_ngram(
+        pdf_pages(blobs, python_parallelism=python_parallelism),
+        text_col="extracted_text",
+        python_parallelism=python_parallelism,
+        margin=lang_margin,
+    )
 
 
 def _key_string(data: bytes, key: re.Pattern, first_only: bool):

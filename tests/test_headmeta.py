@@ -306,6 +306,35 @@ def test_corpus_job_honor_meta(spark, tmp_path):
     kept = {r.url for r in spark.read.parquet(out).select("url").collect()}
     assert kept == {"https://a.org/main", "https://b.org/solo"}
 
+    # combined with the gates AFTER the canonical window: their drops
+    # must not be counted as aliases, and the funnel reconciles to the
+    # input row count
+    rows += [
+        (
+            "https://c.org/optout",
+            5,
+            pg('<meta name="robots" content="noai">', t + " opted out"),
+        ),
+        (
+            "https://c.org/gone",
+            6,
+            pg("<title>404 Not Found</title>", "page not found"),
+        ),
+    ]
+    src2 = str(tmp_path / "pages2")
+    spark.createDataFrame(
+        rows, "url string, warc_ts long, html binary"
+    ).write.parquet(src2)
+    funnel = build_corpus(
+        spark, src2, str(tmp_path / "corpus2"), min_quality=0.0,
+        min_tokens=0, honor_meta=True, honor_noai=True, drop_soft404=True,
+    )
+    pre = ("dropped_noindex", "dropped_canonical_alias", "dropped_noai",
+           "dropped_soft404")
+    assert [funnel[k] for k in pre] == [1, 1, 1, 1]
+    assert funnel["pages"] == 2
+    assert sum(funnel[k] for k in pre) + funnel["pages"] == len(rows)
+
 
 def test_corpus_job_honor_meta_off_sentinels(spark, tmp_path):
     from jobs.corpus_job import build_corpus

@@ -252,6 +252,26 @@ def test_apply_coco_segmentation_key_fallback(spark):
     assert out["lonely.html"] == []  # no match → log-and-skip analog
 
 
+# the funnel's ordered 36 keys: the append-mode stats parquet relies on
+# a fixed schema, and downstream readers on this order (the quality
+# drops are NOT in KEEP_COLS order: the script screen came last)
+FUNNEL_KEYS = [
+    "dropped_domain", "dropped_content_type", "dropped_host_rank",
+    "dropped_stale_snapshot", "dropped_noindex", "dropped_canonical_alias",
+    "dropped_noai", "dropped_soft404",
+    "outlink_edges", "feed_links_found", "tables_extracted",
+    "image_pairs_found",
+    "pages", "dropped_quality", "dropped_lang", "dropped_gopher",
+    "dropped_entropy", "dropped_lm", "dropped_compression", "dropped_clf",
+    "dropped_script", "kept_after_filters", "kept_bpe_tokens",
+    "dropped_exact_dup", "corpus_docs",
+    "near_dup_candidates", "boilerplate_units_removed",
+    "boilerplate_regions_removed", "pii_docs_redacted", "contaminated_docs",
+    "shards_written", "sequences_packed",
+    "diff_added", "diff_removed", "diff_changed", "diff_unchanged",
+]
+
+
 def test_corpus_job_funnel(spark, tmp_path):
     """End-to-end training-corpus job: extract -> score -> filter ->
     exact-dedup -> write, with attributable funnel accounting."""
@@ -284,6 +304,8 @@ def test_corpus_job_funnel(spark, tmp_path):
     urls = {r["url"] for r in got.select("url").collect()}
     assert urls == {f"doc{i}" for i in range(6)}  # canonical = min url
     assert {"extracted_text", "quality", "pred_lang", "n_tokens"} <= set(got.columns)
+    assert list(funnel) == FUNNEL_KEYS
+    assert spark.read.parquet(stats).columns == sorted(FUNNEL_KEYS)
     st = spark.read.parquet(stats).collect()[0]
     assert st["corpus_docs"] == 6
     # near-dup audit table exists; docs share heavy boilerplate so the

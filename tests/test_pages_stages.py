@@ -12,7 +12,7 @@ GOOD = (
 )
 
 
-def _pages(spark, tmp_path, name="pages"):
+def _pages(spark, tmp_path, name="pages", extra=()):
     rows = [
         (
             "good",
@@ -36,6 +36,7 @@ def _pages(spark, tmp_path, name="pages"):
             "mixed",
             f"<html><body><p>{MIXED}</p></body></html>".encode(),
         ),
+        *extra,
     ]
     src = str(tmp_path / name)
     spark.createDataFrame(rows, "url string, html binary").write.parquet(src)
@@ -92,29 +93,49 @@ def test_corpus_job_stages_off_are_minus_one(spark, tmp_path):
 
 
 def test_stream_batch_parity_for_page_stages(spark, tmp_path):
-    """The streamed corpus with --drop-soft404 --script-screen keeps
-    the same url set as the batch job, on the fixed sink schema."""
+    """The streamed corpus with --drop-soft404 --script-screen
+    --honor-noai --sniff-charset keeps the same rows as the batch job,
+    on the fixed sink schema."""
+    from jobs.corpus_job import build_corpus
     from jobs.stream_job import SINK_COLUMNS, run_stream
 
-    src = _pages(spark, tmp_path, "pages_stream")
-    out = str(tmp_path / "stream_out")
-    q = run_stream(
-        spark,
-        src,
-        out,
-        str(tmp_path / "ckpt"),
+    latin = "she ordered a café crème and a brûlée in the quiet street"
+    src = _pages(spark, tmp_path, "pages_stream", extra=[
+        (
+            "optout",
+            '<html><head><meta name="robots" content="noai"></head>'
+            f"<body><p>{GOOD} opted out</p></body></html>".encode(),
+        ),
+        (
+            "latin1",
+            '<html><head><meta charset="iso-8859-1"></head>'
+            f"<body><p>{latin}</p></body></html>".encode("latin-1"),
+        ),
+    ])
+    gates = dict(
         min_quality=0.0,
         min_tokens=0,
         drop_soft404=True,
         script_screen=True,
-        available_now=True,
+        honor_noai=True,
+        sniff_charset=True,
+    )
+    funnel = build_corpus(spark, src, str(tmp_path / "batch_out"), **gates)
+    assert funnel["dropped_soft404"] == funnel["dropped_noai"] == 1
+    out = str(tmp_path / "stream_out")
+    q = run_stream(
+        spark, src, out, str(tmp_path / "ckpt"), available_now=True, **gates
     )
     q.awaitTermination()
     got = spark.read.parquet(out)
-    assert [r["url"] for r in got.collect()] == ["good"]
     assert [c for c, _ in SINK_COLUMNS] == got.columns
-    row = got.collect()[0]
-    assert row["main_script"] == "latin"
+    for table in (got, spark.read.parquet(str(tmp_path / "batch_out"))):
+        rows = {r["url"]: r for r in table.collect()}
+        # err (soft-404), mixed (script) and optout (noai) drop; the
+        # latin-1 page is repaired before extraction
+        assert sorted(rows) == ["good", "latin1"]
+        assert rows["good"]["main_script"] == "latin"
+        assert rows["latin1"]["extracted_text"] == latin
 
 
 def test_corpus_job_image_pairs_side_output(spark, tmp_path):

@@ -86,7 +86,7 @@ def main() -> None:
         ("local[8]", None),
         ("local[16]", None),
         ("local[32]", None),
-        ("local[32]", 16),  # python-task cap = cores//2
+        ("local[32]", 16),  # python_parallelism=16: a floor, not a cap
     ]
     # efficiency is a RATIO of two configs: co-tenant load on either
     # side skews it in either direction, so each config gets the
