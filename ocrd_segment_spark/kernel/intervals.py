@@ -5,9 +5,11 @@ reference repair.py:310-365, 592-664, 736-757) become interval
 arithmetic over ``[start, end)`` character spans. Intervals are exact
 where polygons needed buffering/validity repair, so several reference
 ops degenerate (documented per function). All functions are pure and
-deterministic; vectorized numpy where pairwise (the per-page n is small
-— hundreds at most — so O(n²) matrices per page are fine, exactly like
-the reference's per-page O(n²) loops repair.py:219-237).
+deterministic. A real page can carry tens of thousands of candidate
+spans, so nothing here builds an n×n matrix: ``plausibilize`` resolves
+the laminar spans a DOM produces with one sort and a stack sweep, and
+keeps the reference's per-page pair loop (repair.py:219-237) only as
+the fallback for non-laminar input.
 """
 
 from __future__ import annotations
@@ -63,15 +65,6 @@ def iou(s1, e1, s2, e2):
     return np.where(union > 0, inter / np.where(union > 0, union, 1.0), 0.0)
 
 
-def overlap_matrix(starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
-    """Pairwise intersection-length matrix for one page's spans —
-    the J2 self-join kernel (reference repair.py:219-237), computed as
-    one numpy broadcast instead of a Python pair loop."""
-    s = np.asarray(starts)[:, None]
-    e = np.asarray(ends)[:, None]
-    return np.maximum(0, np.minimum(e, e.T) - np.maximum(s, s.T))
-
-
 def plausibilize(
     starts: np.ndarray,
     ends: np.ndarray,
@@ -97,18 +90,72 @@ def plausibilize(
       repair.py:251-266); otherwise SPLIT: subtract the overlap from
       the smaller span (G15, repair.py:505-513).
 
-    Spans from a real DOM are laminar (equality/containment only); the
-    overlap branches exist for perturbed/synthetic inputs and the
-    evaluate analog, and are unit-tested directly.
+    Spans from a real DOM are laminar: every two spans are disjoint
+    (touching allowed) or nested. On such input no merge or split can
+    fire and the table reduces to two rules: a span contained in a
+    strictly larger span is DELETE; of each group of equal spans the
+    deepest is KEEP (ties: lowest input index) and the rest DELETE.
+    ``_laminar_keep`` checks laminarity and applies those rules in one
+    O(n log n) sort-and-sweep. Anything else — partial overlaps,
+    zero-length or reversed spans, as perturbed/synthetic inputs and
+    the evaluate analog produce — falls back to the exact pair loop
+    ``_plausibilize_pairwise``; both give identical results on laminar
+    input (fuzz-pinned).
+
+    Returns (actions, out_starts, out_ends) aligned with the input;
+    actions[i] ∈ {KEEP, DELETE, MERGE_INTO}; out spans reflect merges
+    and splits for surviving spans.
+    """
+    s = np.asarray(starts, dtype=np.int64).copy()
+    e = np.asarray(ends, dtype=np.int64).copy()
+    d = np.asarray(depths, dtype=np.int64)
+    keep = _laminar_keep(s, e, d)
+    if keep is None:
+        return _plausibilize_pairwise(starts, ends, depths, merge_min_overlap)
+    actions = np.full(len(s), DELETE, dtype=np.int64)
+    actions[keep] = KEEP
+    return actions, s, e
+
+
+def _laminar_keep(s: np.ndarray, e: np.ndarray, depths: np.ndarray):
+    """Input indices that ``plausibilize`` keeps when the positive-length
+    spans are laminar; None when they are not (or some span is empty).
+
+    Sorting by (start asc, end desc) puts every container before the
+    spans it holds, and equal spans next to each other, deepest first,
+    then by input index. The sweep keeps a stack of the ends of the
+    spans still open at the current start: a span ending past the top
+    crosses it (not laminar); a span that finds the stack empty has no
+    container and no earlier equal twin, so it is KEEP."""
+    if (e <= s).any():
+        return None
+    order = np.lexsort((np.arange(len(s)), -depths, -e, s))
+    stack: list[int] = []
+    keep: list[int] = []
+    for i, si, ei in zip(order.tolist(), s[order].tolist(), e[order].tolist()):
+        while stack and stack[-1] <= si:
+            stack.pop()
+        if not stack:
+            keep.append(i)
+        elif stack[-1] < ei:
+            return None
+        stack.append(ei)
+    return keep
+
+
+def _plausibilize_pairwise(
+    starts: np.ndarray,
+    ends: np.ndarray,
+    depths: np.ndarray,
+    merge_min_overlap: float = 0.90,
+):
+    """The exact pair loop behind ``plausibilize`` — O(n²), the
+    fallback for non-laminar input.
 
     Processing follows the reference's ascending-area total order
     (W3, repair.py:221-227): sort by length ascending, document order as
     tiebreak, and resolve each pair once with the earlier-sorted span as
     the "smaller" side.
-
-    Returns (actions, out_starts, out_ends) aligned with the input;
-    actions[i] ∈ {KEEP, DELETE, MERGE_INTO}; out spans reflect merges
-    and splits for surviving spans.
     """
     n = len(starts)
     s = np.asarray(starts, dtype=np.int64).copy()

@@ -542,7 +542,9 @@ def score_document(
     # (fuzz-pinned); pick by cost: the C-regex string path wins on
     # short units (~2 vs ~19 µs at 10 chars — numpy per-call overhead),
     # the array path wins on document-sized text (no intermediate
-    # string + re-encode). Break-even measured ~700 chars.
+    # string + re-encode). Break-even measured ~700 chars; the 512
+    # cutover is conservative, so 512-700-char inputs take the array
+    # path at a cost of a few µs/doc (same codepoints either way).
     if len(raw) >= 512:
         norm = _norm_codes(raw)
         nlen = norm.size

@@ -551,17 +551,20 @@ def with_lm_bits(
     from .langid import _round6
 
     table, oov = lm_table
-    # filled lazily inside the UDF (once per deserialized task closure)
+    # filled lazily inside the UDF (once per deserialized task closure);
+    # the explicit flag keeps an empty LM table from rebuilding per batch
     _bits_arrays_memo: dict = {}
+    _bits_built = False
 
     @pandas_udf("double")
     def _bits(texts: pd.Series, langs: pd.Series) -> pd.Series:
+        nonlocal _bits_built
         import numpy as np
 
         # per-lang sorted key/value arrays, built once per worker from
         # the pickled model dict (model-sized, langs × charset²)
         arrays: dict = _bits_arrays_memo
-        if not arrays:
+        if not _bits_built:
             per: dict = {}
             for (l, bg), v in table.items():
                 per.setdefault(l, []).append(
@@ -573,6 +576,7 @@ def with_lm_bits(
                     np.array([k for k, _ in items], dtype=np.int64),
                     np.array([v for _, v in items], dtype=np.float64),
                 )
+            _bits_built = True
         out = []
         for t, lang in zip(texts, langs):
             t = t if isinstance(t, str) else ""

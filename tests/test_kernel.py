@@ -202,6 +202,43 @@ def test_huge_flat_page():
     assert text.startswith("para 0 words\npara 1 words")
 
 
+@pytest.mark.parametrize(
+    "wrap, item",
+    [("<main>{}</main>", "<p>para {} words</p>"), ("<ul>{}</ul>", "<li>item {} words</li>")],
+    ids=["p", "li"],
+)
+def test_extract_scales_linearly_in_candidates(wrap, item):
+    """Flat pages at n and 4n candidate regions: the time ratio stays
+    near 4 (a quadratic pass gives 16). Each attempt times both sizes
+    interleaved, best of 3, with the collector paused (a full collection
+    walks the whole test process's heap, not the page); outside load on
+    a shared machine can still skew one attempt, so the best of three
+    attempts must pass."""
+    import gc
+    import time
+
+    pages = [
+        "<body>" + wrap.format("".join(item.format(i) for i in range(n))) + "</body>"
+        for n in (1000, 4000)
+    ]
+    ratios = []
+    gc.disable()
+    try:
+        for _ in range(3):
+            best = [float("inf")] * 2
+            for _ in range(3):
+                for k, html in enumerate(pages):
+                    t0 = time.perf_counter()
+                    extract_document(html)
+                    best[k] = min(best[k], time.perf_counter() - t0)
+            ratios.append(best[1] / best[0])
+            if ratios[-1] <= 5:
+                break
+    finally:
+        gc.enable()
+    assert min(ratios) <= 5, ratios
+
+
 def test_comments_cdata_doctype_ignored():
     html = ("<!DOCTYPE html><html><body><!-- comment words -->"
             "<p>real words</p><![CDATA[cdata words]]></body></html>")

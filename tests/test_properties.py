@@ -5,6 +5,8 @@
 - extraction is deterministic (pure function);
 - plausibilize reaches a fixpoint: surviving spans are mutually
   non-overlapping and a second pass is a no-op (repair∘repair=repair);
+- plausibilize's laminar sweep equals the pair loop it replaces, and
+  exactly the non-laminar inputs fall back to that loop;
 - ensure_valid output is always clamped and ordered;
 - spread never creates overlap and never leaves the document.
 """
@@ -90,6 +92,98 @@ def test_plausibilize_fixpoint_and_disjoint(raw):
     acts2, s2, e2 = iv.plausibilize(ks, ke, np.ones(len(ks), dtype=np.int64))
     assert (acts2 == iv.KEEP).all()
     assert (s2 == ks).all() and (e2 == ke).all()
+
+
+def _plausibilize_both(starts, ends, depths):
+    """Run the dispatcher and the pair loop on the same input and
+    assert identical actions, starts and ends (values and dtypes)."""
+    got = iv.plausibilize(starts, ends, depths)
+    want = iv._plausibilize_pairwise(starts, ends, depths)
+    for g, w in zip(got, want):
+        assert g.dtype == w.dtype
+        assert g.tolist() == w.tolist(), (starts, ends, depths, got, want)
+
+
+@st.composite
+def _laminar_family(draw):
+    """DOM-style spans: siblings disjoint or touching, children nested,
+    each span repeated 1-3 times (wrapper chains) with tied or
+    differing depths; input order shuffled or (start, end)-sorted as
+    the repair operator feeds it. At most about 40 spans."""
+    spans = []
+
+    def fill(lo, hi, depth, level):
+        pos = lo
+        for _ in range(draw(st.integers(0, 3))):
+            if pos >= hi or len(spans) >= 40:
+                return
+            a = draw(st.integers(pos, hi - 1))
+            b = draw(st.integers(a + 1, hi))
+            for _ in range(draw(st.integers(1, 3))):
+                spans.append((a, b, depth + draw(st.integers(0, 1))))
+            if level < 3:
+                fill(a, b, depth + 1, level + 1)
+            pos = b + draw(st.integers(0, 2))
+
+    fill(0, draw(st.integers(1, 150)), 0, 0)
+    if draw(st.booleans()):
+        return sorted(spans, key=lambda t: t[:2])
+    return draw(st.permutations(spans))
+
+
+@given(_laminar_family())
+@settings(max_examples=400, deadline=None)
+def test_plausibilize_laminar_path_equals_pair_loop(spans):
+    s, e, d = (np.array([t[k] for t in spans], dtype=np.int64) for k in range(3))
+    assert iv._laminar_keep(s, e, d) is not None  # took the sweep
+    _plausibilize_both(s, e, d)
+
+
+def _crossing_or_empty(spans):
+    if any(b <= a for a, b, _ in spans):
+        return True
+    return any(
+        a1 < a2 < b1 < b2 for a1, b1, _ in spans for a2, b2, _ in spans
+    )
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 60), st.integers(-5, 30), st.integers(0, 3)),
+        max_size=14,
+    )
+)
+@settings(max_examples=400, deadline=None)
+def test_plausibilize_fallback_equals_pair_loop(raw):
+    """Arbitrary spans: partial overlaps, touching ends, zero-length and
+    reversed spans. Exactly the non-laminar ones take the fallback."""
+    spans = [(a, a + l, dep) for a, l, dep in raw]
+    s, e, d = (np.array([t[k] for t in spans], dtype=np.int64) for k in range(3))
+    assert (iv._laminar_keep(s, e, d) is None) == _crossing_or_empty(spans)
+    _plausibilize_both(s, e, d)
+
+
+def test_plausibilize_extract_calls_equal_pair_loop(monkeypatch):
+    """Every plausibilize call extract_document makes over the fixture
+    corpus, recorded through the module attribute it looks up, takes
+    the laminar sweep and matches the pair loop."""
+    from ocrd_segment_spark.fixtures import gen_pages
+
+    calls = []
+    real = iv.plausibilize
+
+    def record(starts, ends, depths, *rest):
+        calls.append((starts.copy(), ends.copy(), depths.copy()))
+        return real(starts, ends, depths, *rest)
+
+    with monkeypatch.context() as m:
+        m.setattr(iv, "plausibilize", record)
+        for row in gen_pages(400, seed=7):
+            extract_document(row["html"])
+    assert len(calls) > 300
+    for s, e, d in calls:
+        assert iv._laminar_keep(s, e, d) is not None
+        _plausibilize_both(s, e, d)
 
 
 @given(_spans)
