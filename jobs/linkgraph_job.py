@@ -40,7 +40,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--python-parallelism", type=int, default=None,
-        help="python-task cap for the pdf lane's codec stage",
+        help="python-task parallelism floor for the pdf lane's codec stage",
     )
     ap.add_argument(
         "--drop-nofollow", action="store_true",

@@ -37,19 +37,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Extraction family — the kernel driven through SQL-synthesized HTML
 # ---------------------------------------------------------------------------
 
-# Page template used by extract queries 2/4: nav boilerplate (rtype
-# drop), a link-farm paragraph (link-density drop), heading + body
-# paragraph (kept). Pre-order indices: html=1 body=2 nav=3 ul=4 li=5
-# a=6 a=7 h1=8 p=9 a=10 p=11.
-_PAGE_TPL = (
-    "<html><body>"
-    "<nav><ul><li><a href=\"/m\">menu one</a> <a href=\"/n\">menu two</a></li></ul></nav>"
-    "<h1>{h}</h1>"
-    "<p><a href=\"/q\">{h} {h}</a></p>"
-    "<p>{b}</p>"
-    "</body></html>"
-)
-
 # DuckDB expression for the kernel's whitespace collapse of `text`
 _SQL_COLLAPSE = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
 

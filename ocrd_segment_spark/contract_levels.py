@@ -792,7 +792,7 @@ def q_extract_style_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fontFamily/fontSize/serif from its style attribute, the code run
     leaves them null (unspecified)."""
     from .config import ExtractParams
-    from .pipeline import extract_pages_styled
+    from .pipeline import extract_pages
 
     html_expr = (
         "concat('<html><body><p>"
@@ -800,7 +800,7 @@ def q_extract_style_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         " '</b> middle words <code>', text, '</code></p></body></html>')"
     )
     pages = _pages_from_documents(spark, sf_dir, html_expr)
-    out = extract_pages_styled(pages, ExtractParams(css_styles=True))
+    out = extract_pages(pages, ExtractParams(style_spans=True, css_styles=True))
     r = out.select(
         F.col("url").cast("long").alias("doc_id"),
         F.explode("style_spans").alias("s"),

@@ -34,16 +34,15 @@ mojibake. This module adds the standard two-step ingestion repair:
    sniff routes >95% of pages down the existing zero-Python UTF-8
    path: call decode only on the ``charset != 'utf-8'`` partition
    (the filter is a scan-stage predicate), so the Python stage is
-   tail-sized, and cap it with ``python_parallelism`` exactly like
-   extract_pages (Python stages cost ~2 hardware threads per task).
+   tail-sized; ``python_parallelism`` is the same parallelism floor
+   as in extract_pages.
 """
 
 from __future__ import annotations
 
 import codecs
-from typing import Iterator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 CHARSET_RE = "charset[ \\t\\n\\r\\f]*=[ \\t\\n\\r\\f]*[\"']?([a-zA-Z0-9_.:-]+)"
 SNIFF_CHARS = 1024
@@ -93,44 +92,36 @@ def decode_pages(
     claimed codec is unknown to the registry and utf-8 was used
     instead). Deterministic: codec resolution is Python's codec
     registry (alias handling included), errors='replace'."""
-    from ..pipeline import _cap_python_tasks
+    from ..pystage import map_rows
 
-    cols = df.columns
-    out_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in cols
-    ) + ", decoded_text string, decode_ok boolean"
+    def row(raw, cs):
+        if raw is None:
+            return None, False
+        # the whole resolve+decode is guarded: the sniff regex accepts
+        # any token, and the registry resolves several NON-text codecs
+        # (hex, base64, idna, undefined) whose decode raises
+        # LookupError/UnicodeError/ValueError even with
+        # errors='replace' — one hostile page must never fail the task
+        # (review-found, pinned by pytest)
+        try:
+            text = bytes(raw).decode(
+                codecs.lookup(cs or "utf-8").name, errors="replace"
+            )
+            ok = True
+        except (LookupError, UnicodeError, ValueError):
+            text = bytes(raw).decode("utf-8", errors="replace")
+            ok = False
+        return text.lstrip("\ufeff"), ok
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            texts, oks = [], []
-            for raw, cs in zip(pdf[html_col], pdf["charset"]):
-                if raw is None:
-                    texts.append(None)
-                    oks.append(False)
-                    continue
-                # the whole resolve+decode is guarded: the sniff regex
-                # accepts any token, and the registry resolves several
-                # NON-text codecs (hex, base64, idna, undefined) whose
-                # decode raises LookupError/UnicodeError/ValueError even
-                # with errors='replace' — one hostile page must never
-                # fail the task (review-found, pinned by pytest)
-                try:
-                    text = bytes(raw).decode(
-                        codecs.lookup(cs or "utf-8").name, errors="replace"
-                    )
-                    ok = True
-                except (LookupError, UnicodeError, ValueError):
-                    text = bytes(raw).decode("utf-8", errors="replace")
-                    ok = False
-                texts.append(text.lstrip("\ufeff"))
-                oks.append(ok)
-            pdf = pdf.copy()
-            pdf["decoded_text"] = texts
-            pdf["decode_ok"] = oks
-            yield pdf
-
-    capped = _cap_python_tasks(df, python_parallelism)
-    return capped.mapInPandas(batches, out_schema)
+    return map_rows(
+        df, df.columns, (html_col, "charset"), row,
+        [
+            T.StructField("decoded_text", T.StringType()),
+            T.StructField("decode_ok", T.BooleanType()),
+        ],
+        python_parallelism,
+        nullable_carry=True,
+    )
 
 
 def reencode_non_utf8(

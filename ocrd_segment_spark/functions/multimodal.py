@@ -16,15 +16,24 @@ plumbing (feature vectors, resize dims) can be exercised end-to-end.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-META_SCHEMA = (
-    "doc_id long, n_bytes long, content_md5 string, modality string,"
-    " width int, height int, bit_depth int"
-)
+from ..pystage import map_rows
+
+# every media stage's output starts with the id and the blob size
+_ID_FIELDS = [
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("n_bytes", T.LongType()),
+]
+
+META_FIELDS = _ID_FIELDS + [
+    T.StructField("content_md5", T.StringType()),
+    T.StructField("modality", T.StringType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("bit_depth", T.IntegerType()),
+]
 
 # JPEG start-of-frame markers that carry dimensions (C4/C8/CC are
 # huffman/arithmetic/extension tables, not frames)
@@ -90,9 +99,11 @@ def sniff_image(blob) -> tuple[str, int, int, int] | None:
         return None
     return None
 
-FEATURE_SCHEMA = (
-    "doc_id long, n_bytes long, feature array<double>, width int, height int"
-)
+FEATURE_FIELDS = _ID_FIELDS + [
+    T.StructField("feature", T.ArrayType(T.DoubleType())),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+]
 
 
 def decode_image(blob: bytes):
@@ -126,29 +137,11 @@ def binary_meta(df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id") -
     container header (:func:`sniff_image`); non-image bytes get
     modality 'binary' with null dims."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = pdf[blob_col]
-            sniffed = [sniff_image(b) for b in blobs]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": blobs.map(len).astype("int64"),
-                    "content_md5": blobs.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "modality": [s[0] if s else "binary" for s in sniffed],
-                    "width": pd.array(
-                        [s[1] if s else None for s in sniffed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [s[2] if s else None for s in sniffed], dtype="Int32"
-                    ),
-                    "bit_depth": pd.array(
-                        [s[3] if s else None for s in sniffed], dtype="Int32"
-                    ),
-                }
-            )
+    def row(doc_id, b):
+        sniffed = sniff_image(b) or ("binary", None, None, None)
+        return (doc_id, len(b), hashlib.md5(b).hexdigest(), *sniffed)
 
-    return df.select(id_col, blob_col).mapInPandas(fn, META_SCHEMA)
+    return map_rows(df, (), (id_col, blob_col), row, META_FIELDS)
 
 
 def extract_features(df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id",
@@ -157,25 +150,10 @@ def extract_features(df: DataFrame, blob_col: str = "blob", id_col: str = "doc_i
     Arrow-batched, one Python crossing, fixed-width feature output —
     identical plumbing to a real CLIP/whisper feature stage."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, ws, hs = [], [], []
-            for b in pdf[blob_col]:
-                f, w, h = fake_decode(bytes(b), dim)
-                feats.append(f)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf[blob_col].map(len).astype("int64"),
-                    "feature": feats,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
+    def row(doc_id, b):
+        return (doc_id, len(b), *fake_decode(bytes(b), dim))
 
-    return df.select(id_col, blob_col).mapInPandas(fn, FEATURE_SCHEMA)
+    return map_rows(df, (), (id_col, blob_col), row, FEATURE_FIELDS)
 
 
 def feature_chain_predicate(features_col, selector: str = "", feature_filter: str = ""):
@@ -372,10 +350,14 @@ def sniff_media(blob):
     return None
 
 
-MEDIA_META_SCHEMA = (
-    "doc_id long, n_bytes long, kind string, channels int,"
-    " sample_rate int, bits int, brand string, duration_s double"
-)
+MEDIA_META_FIELDS = _ID_FIELDS + [
+    T.StructField("kind", T.StringType()),
+    T.StructField("channels", T.IntegerType()),
+    T.StructField("sample_rate", T.IntegerType()),
+    T.StructField("bits", T.IntegerType()),
+    T.StructField("brand", T.StringType()),
+    T.StructField("duration_s", T.DoubleType()),
+]
 
 
 def media_meta(
@@ -389,25 +371,11 @@ def media_meta(
     containers keep their row with NULL fields (auditable, never
     dropped silently). ``python_parallelism`` is the shared
     parallelism floor of every codec-lane stage."""
-    from ..pipeline import _cap_python_tasks
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [sniff_media(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf[blob_col].map(
-                        lambda b: len(b) if b is not None else 0
-                    ).astype("int64"),
-                    "kind": [m[0] if m else None for m in metas],
-                    "channels": [m[1] if m else None for m in metas],
-                    "sample_rate": [m[2] if m else None for m in metas],
-                    "bits": [m[3] if m else None for m in metas],
-                    "brand": [m[4] if m else None for m in metas],
-                    "duration_s": [m[5] if m else None for m in metas],
-                }
-            )
 
-    return _cap_python_tasks(
-        df.select(id_col, blob_col), python_parallelism
-    ).mapInPandas(fn, MEDIA_META_SCHEMA)
+    def row(doc_id, b):
+        meta = sniff_media(b) or (None,) * 6
+        return (doc_id, len(b) if b is not None else 0, *meta)
+
+    return map_rows(
+        df, (), (id_col, blob_col), row, MEDIA_META_FIELDS, python_parallelism
+    )

@@ -13,8 +13,8 @@ the Spark side maps Python ``unicodedata.normalize('NFC', …)`` over
 Arrow batches; the DuckDB oracle states ``nfc_normalize(…)``
 (utf8proc) — both implement the same canonical composition.
 
-Shape: one narrow mapInPandas pass (no SQL builtin exists in Spark),
-routed through the central python-task cap; zero shuffle.
+Shape: one narrow pystage.map_rows pass (no SQL builtin exists in
+Spark) behind the shared parallelism floor; zero shuffle.
 
 Placement caveat: NFC changes character COUNTS (é as two code points
 becomes one), so normalizing ``extracted_text`` in place would orphan
@@ -38,35 +38,25 @@ def with_nfc(
     """Append (text_nfc, nfc_changed): the NFC form and whether it
     differs from the input. NULL text yields '' (changed = false) —
     the repo's empty-document convention."""
-    import pandas as pd
+    import unicodedata
 
     from pyspark.sql import types as T
 
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    from ..pystage import map_rows
+
+    def row(t):
+        t = t if isinstance(t, str) else ""
+        n = unicodedata.normalize("NFC", t)
+        return n, n != t
+
+    return map_rows(
+        df, df.columns, (text_col,), row,
+        [
             T.StructField("text_nfc", T.StringType(), False),
             T.StructField("nfc_changed", T.BooleanType(), False),
-        ]
+        ],
+        python_parallelism,
     )
-
-    def batches(it):
-        import unicodedata
-
-        for pdf in it:
-            out, changed = [], []
-            for t in pdf[text_col]:
-                t = t if isinstance(t, str) else ""
-                n = unicodedata.normalize("NFC", t)
-                out.append(n)
-                changed.append(n != t)
-            yield pdf.assign(
-                text_nfc=out, nfc_changed=pd.array(changed, dtype="bool")
-            )
-
-    from ..pipeline import _cap_python_tasks
-
-    return _cap_python_tasks(df, python_parallelism).mapInPandas(batches, schema)
 
 
 # ---------------------------------------------------------------------------

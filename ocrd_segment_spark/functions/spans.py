@@ -38,12 +38,6 @@ def span_intersection(s1, e1, s2, e2) -> Column:
     return F.greatest(F.lit(0), F.least(_c(e1), _c(e2)) - F.greatest(_c(s1), _c(s2)))
 
 
-def span_union_len(s1, e1, s2, e2) -> Column:
-    """G4 (reference repair.py:632-640): union length (hull minus gap
-    is NOT taken — true union of two intervals)."""
-    return span_len(s1, e1) + span_len(s2, e2) - span_intersection(s1, e1, s2, e2)
-
-
 def span_hull_start(s1, s2) -> Column:
     """G3 join_polygons analog — 1-D hull (SURVEY.md: MST degenerate)."""
     return F.least(_c(s1), _c(s2))
@@ -51,13 +45,6 @@ def span_hull_start(s1, s2) -> Column:
 
 def span_hull_end(e1, e2) -> Column:
     return F.greatest(_c(e1), _c(e2))
-
-
-def span_iou(s1, e1, s2, e2) -> Column:
-    """G23 (reference evaluate.py:390-397)."""
-    inter = span_intersection(s1, e1, s2, e2)
-    union = span_len(s1, e1) + span_len(s2, e2) - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
 def span_overlaps(s1, e1, s2, e2) -> Column:
@@ -75,17 +62,3 @@ def span_midpoint_in(s1, e1, s2, e2) -> Column:
     midpoint of span1 inside span2."""
     mid = (_c(s1) + _c(e1)) / 2
     return (_c(s2) <= mid) & (mid < _c(e2))
-
-
-def span_clip(s, e, ps, pe):
-    """G7 ensure_consistent, clip-child branch (reference
-    repair.py:667-734). Returns (start_col, end_col)."""
-    cs = F.greatest(_c(s), _c(ps))
-    ce = F.least(_c(e), _c(pe))
-    return cs, F.greatest(ce, cs)
-
-
-def span_reoffset(s, e, new_origin):
-    """G17 affine rebase (reference replace_original.py:61-76 forward /
-    replace_page.py:50-73 inverse): subtract the new parent's origin."""
-    return _c(s) - _c(new_origin), _c(e) - _c(new_origin)

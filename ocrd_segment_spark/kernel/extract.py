@@ -458,21 +458,13 @@ def extract_document(
     pieces: list[str] = []
     regions: list[dict] = []
     cursor = 0
-    # parent_id = nearest KEPT ancestor in the DOM (hierarchy info,
-    # reference extract_words.py:150-168 child→parent chains).
-    # Restricted to kept candidates (kernel 1.2.0): candidates deleted
-    # by plausibilize / dropped by classify/filter are not emitted, so
-    # resolving against them would leave dangling region_id references
-    # for consumers joining child→parent.
-    # NOTE: at REGION level this is "" by construction — kept regions
-    # are span-disjoint and an ancestor's token hull contains its
-    # descendants', so no kept region can be another's DOM ancestor
-    # (pinned by test_kernel). The field carries real links at the
-    # line/word levels (kernel/sublevels.py), where children are
-    # extracted WITHIN a kept region instead of competing with it.
-    cand_by_node = {
-        id(candidates[i]["node"]): f"r{candidates[i]['pre_index']:04d}" for i in kept
-    }
+    # parent_id = nearest KEPT ancestor in the DOM (reference
+    # extract_words.py:150-168 child→parent chains). For text regions
+    # it is "" by construction: kept regions are span-disjoint and an
+    # ancestor's token hull contains its descendants', so no kept
+    # region is another's DOM ancestor (pinned by test_kernel). Real
+    # links live at the line/word levels (kernel/sublevels.py) and on
+    # media spans (cand_by_node below).
     for out_order, i in enumerate(kept):
         c = candidates[i]
         s, e = int(k_starts[out_order]), int(k_ends[out_order])
@@ -480,21 +472,13 @@ def extract_document(
         if out_order:
             cursor += len(sep)
         pieces.append(piece)
-        parent_id = ""
-        anc = c["node"].parent
-        while anc is not None:
-            pid = cand_by_node.get(id(anc))
-            if pid is not None:
-                parent_id = pid
-                break
-            anc = anc.parent
         region = {
             "region_id": f"r{c['pre_index']:04d}",
             "rtype": c["rtype"],
             "subtype": c["node"].tag,
             "start": cursor,
             "end": cursor + len(piece),
-            "parent_id": parent_id,
+            "parent_id": "",
             "order": out_order,
             "score": c.get("score", 1.0),
         }
@@ -545,6 +529,10 @@ def extract_document(
         # at/after it hosts the zero-length span; trailing media lands
         # at the end of the output.
         n_kept_final = len(kept)
+        cand_by_node = {
+            id(candidates[i]["node"]): f"r{candidates[i]['pre_index']:04d}"
+            for i in kept
+        }
 
         def out_pos(m):
             pos = int(tok_start[m["tok_at"]]) if m["tok_at"] < len(tokens) else doc_len

@@ -252,18 +252,6 @@ def pair_iou_masked(docs: DataFrame, gt: DataFrame, dt: DataFrame,
     )
 
 
-def match_spans_masked(docs: DataFrame, gt: DataFrame, dt: DataFrame,
-                       text_col: str = "text") -> DataFrame:
-    """The triple 0.5-threshold matching rule (evaluate.py:398-399)
-    applied to the FOREGROUND-masked ratios — only-fg matching."""
-    j = pair_iou_masked(docs, gt, dt, text_col)
-    return j.filter(
-        (F.col("iou_fg") > 0.5)
-        | (F.col("io_gt_fg") > 0.5)
-        | (F.col("io_dt_fg") > 0.5)
-    )
-
-
 # the stock COCO IoU sweep: 0.50:0.05:0.95 (reference evaluate.py:531-548
 # summarize defaults, via pycocotools Params.setDetParams)
 EVAL_THRESHOLDS = tuple(t / 100.0 for t in range(50, 96, 5))

@@ -571,34 +571,21 @@ def with_lang_ngram(
     margin: float | None = None,
 ) -> DataFrame:
     """Append (pred_lang, lang_logp) to ``df`` — one narrow
-    Arrow-batched mapInPandas pass; every input column (including
-    nested region_spans/lineage structs) passes through untouched, so
-    jobs can chain it after extraction without branching the lineage."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    Arrow-batched pass (pystage.map_rows); every input column
+    (including nested region_spans/lineage structs) passes through
+    untouched, so jobs can chain it after extraction without branching
+    the lineage."""
     # the fused extraction path (pipeline.extract_pages(lang_id=True))
     # appends the SAME fields — one source of truth for the pair
     from ..pipeline import LANG_FIELDS
+    from ..pystage import map_rows
 
-    schema = T.StructType(list(df.schema.fields) + LANG_FIELDS)
+    def row(t):
+        return score_document(t if isinstance(t, str) else "", margin=margin)
 
-    def batches(it):
-        for pdf in it:
-            preds, logps = [], []
-            for t in pdf[text_col]:
-                lang, lp = score_document(
-                    t if isinstance(t, str) else "", margin=margin
-                )
-                preds.append(lang)
-                logps.append(lp)
-            yield pdf.assign(
-                pred_lang=preds, lang_logp=pd.array(logps, dtype="float64")
-            )
-
-    from ..pipeline import _cap_python_tasks
-
-    return _cap_python_tasks(df, python_parallelism).mapInPandas(batches, schema)
+    return map_rows(
+        df, df.columns, (text_col,), row, LANG_FIELDS, python_parallelism
+    )
 
 
 def heldout_values_sql() -> str:

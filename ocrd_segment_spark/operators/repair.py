@@ -34,28 +34,6 @@ def validity_filter(df: DataFrame, doc_len_col: str = "doc_len") -> DataFrame:
     return out.filter(F.col("end") > F.col("start"))
 
 
-def consistency_clip(df: DataFrame, parent: DataFrame) -> DataFrame:
-    """G7: clip child spans to their parent's span (join on url +
-    parent_id → clamp). Parent side broadcast — parents are one row
-    per region group."""
-    p = parent.select(
-        F.col("url").alias("p_url"),
-        F.col("region_id").alias("p_id"),
-        F.col("start").alias("ps"),
-        F.col("end").alias("pe"),
-    )
-    j = df.join(
-        F.broadcast(p),
-        (df.url == p.p_url) & (df.parent_id == p.p_id),
-        "left",
-    )
-    cs, ce = S.span_clip("start", "end", F.coalesce("ps", "start"), F.coalesce("pe", "end"))
-    return j.select(
-        "url", "region_id", "parent_id",
-        cs.alias("start"), ce.alias("end"),
-    )
-
-
 def plausibilize(
     df: DataFrame, params: ExtractParams = DEFAULT_PARAMS
 ) -> DataFrame:

@@ -602,13 +602,13 @@ def with_lm_bits(
             out.append(_round6(num / int(cnt.sum())))
         return pd.Series(pd.array(out, dtype="float64"))
 
-    from ..pipeline import _cap_python_tasks
+    from ..pystage import parallelism_floor
 
     # guide §4.4: a filter on a UDF-derived column otherwise duplicates
     # the whole ArrowEvalPython below the pushed-down predicate — every
     # surviving row would pay the LM scorer twice (plan-verified)
     _bits = _bits.asNondeterministic()
-    return _cap_python_tasks(df, python_parallelism).withColumn(
+    return parallelism_floor(df, python_parallelism).withColumn(
         "bits_per_bigram", _bits(F.col(text_col), F.col(lang_col))
     )
 
@@ -641,12 +641,12 @@ def with_compression_cols(
             )
         return pd.Series(pd.array(ratios, dtype="float64"))
 
-    from ..pipeline import _cap_python_tasks
+    from ..pystage import parallelism_floor
 
     # guide §4.4: stop the optimizer duplicating the zlib pass around
     # pushed-down filters on keep_compression (plan-verified)
     _ratio = _ratio.asNondeterministic()
-    return _cap_python_tasks(df, python_parallelism).withColumn(
+    return parallelism_floor(df, python_parallelism).withColumn(
         "compression_ratio", _ratio(F.col(text_col))
     )
 
@@ -779,45 +779,25 @@ def compression_ratio(
     This is the engine's one deliberately-Python quality signal: zlib
     is not expressible in SQL, so there is no DuckDB oracle — the
     contract entry is rows-only and the exact values are pinned by
-    pytest against the same zlib. Arrow-batched mapInPandas (never
-    per-row Python); batches stay narrow, zero shuffle."""
-    import pandas as pd
+    pytest against the same zlib. One Arrow-batched pystage.map_rows
+    pass (never a per-row UDF); batches stay narrow, zero shuffle."""
+    import zlib
 
     from pyspark.sql import types as T
 
-    schema = T.StructType(
+    from ..pystage import map_rows
+
+    def row(t):
+        b = (t if isinstance(t, str) else "").encode("utf-8")
+        n, c = len(b), len(zlib.compress(b, 6))
+        return n, c, round(c / n, 6) if n else 0.0
+
+    return map_rows(
+        df, (id_col,), (text_col,), row,
         [
-            df.schema[id_col],
             T.StructField("n_bytes", T.LongType(), False),
             T.StructField("compressed_bytes", T.LongType(), False),
             T.StructField("compression_ratio", T.DoubleType(), False),
-        ]
+        ],
+        python_parallelism,
     )
-
-    def batches(it):
-        import zlib
-
-        for pdf in it:
-            raw = [
-                (t if isinstance(t, str) else "").encode("utf-8")
-                for t in pdf[text_col]
-            ]
-            nb = [len(b) for b in raw]
-            cb = [len(zlib.compress(b, 6)) for b in raw]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": nb,
-                    "compressed_bytes": cb,
-                    "compression_ratio": [
-                        round(c / n, 6) if n else 0.0 for c, n in zip(cb, nb)
-                    ],
-                }
-            )
-
-    # route through the centralized python-task cap (CLAUDE.md trap:
-    # each mapInPandas task costs ~2 hardware threads)
-    from ..pipeline import _cap_python_tasks
-
-    src = _cap_python_tasks(df.select(id_col, text_col), python_parallelism)
-    return src.mapInPandas(batches, schema)

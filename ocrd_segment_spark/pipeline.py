@@ -25,14 +25,12 @@ Design (Spark-first, SURVEY.md §2.10):
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import KERNEL_VERSION
 from .config import DEFAULT_PARAMS, ExtractParams
 from .kernel.extract import extract_document
+from .pystage import map_rows
 
 REGION_SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -64,6 +62,34 @@ LINEAGE_TYPE = T.StructType(
     ]
 )
 
+# Full TextStyle struct (reference extract_lines.py:201-219 field
+# vocabulary). The seven tag-derived booleans are always populated;
+# the CSS-derived fields (font_family … kerning) are nullable — null =
+# not specified by any enclosing style, real values only under
+# params.css_styles (xHeight is raster-only, justified omission).
+STYLE_RUN_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("start", T.LongType(), False),
+            T.StructField("end", T.LongType(), False),
+            T.StructField("bold", T.BooleanType(), False),
+            T.StructField("italic", T.BooleanType(), False),
+            T.StructField("monospace", T.BooleanType(), False),
+            T.StructField("underlined", T.BooleanType(), False),
+            T.StructField("strikethrough", T.BooleanType(), False),
+            T.StructField("subscript", T.BooleanType(), False),
+            T.StructField("superscript", T.BooleanType(), False),
+            T.StructField("font_family", T.StringType(), True),
+            T.StructField("font_size", T.DoubleType(), True),
+            T.StructField("underline_style", T.StringType(), True),
+            T.StructField("small_caps", T.BooleanType(), True),
+            T.StructField("letter_spaced", T.BooleanType(), True),
+            T.StructField("serif", T.BooleanType(), True),
+            T.StructField("kerning", T.BooleanType(), True),
+        ]
+    )
+)
+
 EXTRACT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -74,105 +100,76 @@ EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def _extract_batches(
-    params: ExtractParams,
-    with_styles: bool = False,
-    with_lang: bool = False,
-    lang_margin: float | None = None,
+def _extract_row(
+    params: ExtractParams, with_lang: bool, lang_margin: float | None
 ):
-    """Returns the mapInPandas function. The kernel import happens at
-    module import on the worker; params is a small frozen dataclass
-    captured in the closure (broadcast via task serialization).
-    ``with_styles`` adds the flattened ``style_spans`` column (one
-    packing loop serves both pipelines — no drift between them).
-    ``with_lang`` scores language id (operators/langid.score_document,
-    the SAME frozen function the standalone operator maps) on the
-    freshly extracted text INSIDE this batch loop — the text is
-    already in Python memory, so the job pipeline pays zero extra
-    Arrow round-trips of full pages for it."""
+    """The per-page row function: kernel, region/lineage packing, the
+    ``style_spans`` runs when ``params.style_spans`` is set, and
+    ``with_lang`` scoring (operators/langid.score_document, the SAME
+    frozen function the standalone operator maps) of the freshly
+    extracted text — already in Python memory, so language id costs
+    no extra Arrow round-trip of full pages."""
     if with_lang:
         from .operators.langid import score_document
+    from pyspark import TaskContext
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
+    def row(url, html):
+        text, regions, metrics = extract_document(html, params)
         ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            texts, spans, lineages, styles = [], [], [], []
-            preds, logps = [], []
-            for html in htmls:
-                text, regions, metrics = extract_document(html, params)
-                texts.append(text)
-                if with_lang:
-                    lang, lp = score_document(text, margin=lang_margin)
-                    preds.append(lang)
-                    logps.append(lp)
-                spans.append(
-                    [
-                        (
-                            r["region_id"],
-                            r["rtype"],
-                            r["subtype"],
-                            r["start"],
-                            r["end"],
-                            r["parent_id"],
-                            r["order"],
-                            r["score"],
-                            r.get("dir"),
-                        )
-                        for r in regions
-                    ]
+        out = (
+            url,
+            text,
+            [
+                (
+                    r["region_id"],
+                    r["rtype"],
+                    r["subtype"],
+                    r["start"],
+                    r["end"],
+                    r["parent_id"],
+                    r["order"],
+                    r["score"],
+                    r.get("dir"),
                 )
-                if with_styles:
-                    styles.append(
-                        [
-                            (
-                                s["start"], s["end"], s["bold"], s["italic"],
-                                s["monospace"], s["underlined"],
-                                s["strikethrough"], s["subscript"],
-                                s["superscript"],
-                                # css fields are absent without
-                                # params.css_styles → nulls
-                                s.get("font_family"), s.get("font_size"),
-                                s.get("underline_style"), s.get("small_caps"),
-                                s.get("letter_spaced"), s.get("serif"),
-                                s.get("kerning"),
-                            )
-                            for r in regions
-                            for s in r.get("style_runs", [])
-                        ]
-                    )
-                lineages.append(
+                for r in regions
+            ],
+            (
+                KERNEL_VERSION,
+                ctx.partitionId() if ctx is not None else -1,
+                metrics["parse_failed"],
+                metrics["n_candidates"],
+                metrics["n_kept"],
+                metrics["n_dropped"],
+            ),
+        )
+        if params.style_spans:
+            out += (
+                [
                     (
-                        KERNEL_VERSION,
-                        pid,
-                        metrics["parse_failed"],
-                        metrics["n_candidates"],
-                        metrics["n_kept"],
-                        metrics["n_dropped"],
+                        s["start"], s["end"], s["bold"], s["italic"],
+                        s["monospace"], s["underlined"],
+                        s["strikethrough"], s["subscript"],
+                        s["superscript"],
+                        # css fields are absent without
+                        # params.css_styles → nulls
+                        s.get("font_family"), s.get("font_size"),
+                        s.get("underline_style"), s.get("small_caps"),
+                        s.get("letter_spaced"), s.get("serif"),
+                        s.get("kerning"),
                     )
-                )
-            cols = {
-                "url": urls,
-                "extracted_text": texts,
-                "region_spans": spans,
-                "lineage": lineages,
-            }
-            if with_styles:
-                cols["style_spans"] = styles
-            if with_lang:
-                cols["pred_lang"] = preds
-                cols["lang_logp"] = pd.array(logps, dtype="float64")
-            yield pd.DataFrame(cols)
+                    for r in regions
+                    for s in r.get("style_runs", [])
+                ],
+            )
+        if with_lang:
+            out += score_document(text, margin=lang_margin)
+        return out
 
-    return fn
+    return row
 
 
 # appended by extract_pages(lang_id=True) — kept next to EXTRACT_SCHEMA
-# so schema and packing loop stay in one file
+# so schema and row function stay in one file
 LANG_FIELDS = [
     T.StructField("pred_lang", T.StringType(), False),
     T.StructField("lang_logp", T.DoubleType(), True),
@@ -189,14 +186,13 @@ def extract_pages(
     """The extraction transform. Narrow (no shuffle); input columns
     beyond (url, html) are pruned before the Arrow boundary.
 
-    ``python_parallelism`` is a parallelism FLOOR for the python
-    stage: small inputs fan out to at least this many tasks; a finer
-    existing scan partitioning is left intact (concurrency is bounded
-    by the executor's task slots either way). The round-1 cores//2
-    CAP is retired — see _cap_python_tasks for the round-6
-    measurements (coalesce-induced empty/doubled partitions plus a
-    no-longer-true 2-threads-per-task premise made the cap 3× slower
-    at sf1.0).
+    ``python_parallelism`` is the shared parallelism floor
+    (pystage.parallelism_floor): small inputs fan out to at least this
+    many tasks, a finer scan partitioning is left intact.
+
+    ``params.style_spans`` appends ``style_spans``: the TextStyle runs
+    (reference extract_lines.py:201-219 style struct per segment),
+    document-level, in absolute output offsets.
 
     ``lang_id=True`` appends (pred_lang, lang_logp) scored in the SAME
     Python pass — value-identical to chaining
@@ -207,58 +203,15 @@ def extract_pages(
     ``lang_margin`` enables the frozen step-6 abstention rule
     (operators/langid DEFAULT_MARGIN): thin top-2 gaps route to 'und'
     instead of a confident misbin — opt-in, None keeps pure argmax."""
-    schema = EXTRACT_SCHEMA
+    fields = list(EXTRACT_SCHEMA.fields)
+    if params.style_spans:
+        fields.append(T.StructField("style_spans", STYLE_RUN_TYPE, False))
     if lang_id:
-        schema = T.StructType(list(EXTRACT_SCHEMA.fields) + LANG_FIELDS)
-    src = _cap_python_tasks(df.select("url", "html"), python_parallelism)
-    return src.mapInPandas(
-        _extract_batches(params, with_lang=lang_id, lang_margin=lang_margin),
-        schema,
+        fields += LANG_FIELDS
+    return map_rows(
+        df, (), ("url", "html"), _extract_row(params, lang_id, lang_margin),
+        fields, python_parallelism,
     )
-
-
-def _cap_python_tasks(src: DataFrame, python_parallelism: int | None) -> DataFrame:
-    """Ensure AT LEAST ``python_parallelism``-way partitioning ahead of
-    a mapInPandas stage — shared by the plain and styled pipelines.
-
-    Round-6 change (measured, guide §2.5/§2.6): this used to
-    ``coalesce`` DOWN to the cap as an oversubscription guard, on the
-    round-1 measurement that each Python-UDF task costs ~2 hardware
-    threads. Two things invalidated that guard on the current stack:
-
-    - ``coalesce(n)`` over a parquet scan whose ``maxPartitionBytes``
-      splits single-row-group files produces ALTERNATING EMPTY parent
-      partitions (the tail split of a one-row-group file carries no
-      row-group start → zero rows), and the coalescer's grouping can
-      land all-empty groups — measured at sf1.0: coalesce(16) → 8
-      empty + 8 double-size tasks, i.e. HALF the requested
-      parallelism plus stragglers (44.7 s vs 14.1 s uncapped for the
-      same 1M-page extract).
-    - with balanced partitions, cores-many concurrent Python tasks now
-      BEAT cores//2 (repartition(32) 15.2 s vs repartition(16) 21.6 s
-      on local[32]): the Arrow feed threads no longer burn a full
-      hardware thread per task on Spark 4.1.
-
-    Concurrency is bounded by the executor's task slots regardless of
-    partition count, so leaving a finer scan partitioning intact keeps
-    every core busy and the per-task memory SMALLER. The parameter
-    therefore now acts as a parallelism FLOOR (small inputs still fan
-    out to at least the requested width); it never reduces an existing
-    finer partitioning."""
-    if python_parallelism is None:
-        return src
-    if src.isStreaming:
-        # .rdd is illegal on a streaming DataFrame (raises before the
-        # query starts — observed live); repartition sizes microbatch
-        # task counts directly
-        return src.repartition(python_parallelism)
-    cur = src.rdd.getNumPartitions()
-    if cur >= python_parallelism:
-        # fine-enough partitioning already — a coalesce here created
-        # empty/doubled groups (above), and a repartition would
-        # full-shuffle the payload for nothing
-        return src
-    return src.repartition(python_parallelism)
 
 
 def with_host_salt(df: DataFrame, n_salts: int = 16) -> DataFrame:
@@ -418,57 +371,3 @@ def run_extract(
         )
         metrics.write.mode("append").parquet(metrics_path)
         result.unpersist()
-
-
-# Full TextStyle struct (reference extract_lines.py:201-219 field
-# vocabulary). The seven tag-derived booleans are always populated;
-# the CSS-derived fields (font_family … kerning) are nullable — null =
-# not specified by any enclosing style, real values only under
-# params.css_styles (xHeight is raster-only, justified omission).
-STYLE_RUN_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start", T.LongType(), False),
-            T.StructField("end", T.LongType(), False),
-            T.StructField("bold", T.BooleanType(), False),
-            T.StructField("italic", T.BooleanType(), False),
-            T.StructField("monospace", T.BooleanType(), False),
-            T.StructField("underlined", T.BooleanType(), False),
-            T.StructField("strikethrough", T.BooleanType(), False),
-            T.StructField("subscript", T.BooleanType(), False),
-            T.StructField("superscript", T.BooleanType(), False),
-            T.StructField("font_family", T.StringType(), True),
-            T.StructField("font_size", T.DoubleType(), True),
-            T.StructField("underline_style", T.StringType(), True),
-            T.StructField("small_caps", T.BooleanType(), True),
-            T.StructField("letter_spaced", T.BooleanType(), True),
-            T.StructField("serif", T.BooleanType(), True),
-            T.StructField("kerning", T.BooleanType(), True),
-        ]
-    )
-)
-
-EXTRACT_STYLED_SCHEMA = T.StructType(
-    list(EXTRACT_SCHEMA.fields) + [T.StructField("style_spans", STYLE_RUN_TYPE, False)]
-)
-
-
-def extract_pages_styled(
-    df: DataFrame,
-    params: ExtractParams | None = None,
-    python_parallelism: int | None = None,
-) -> DataFrame:
-    """Extraction + TextStyle runs (reference extract_lines.py:201-219
-    style struct per segment): same narrow mapInPandas plan with one
-    extra ``style_spans`` column (document-level, absolute output
-    offsets). ``params.style_spans`` is forced on; the row packing is
-    the SAME ``_extract_batches`` loop as the plain pipeline, and
-    ``python_parallelism`` is the same parallelism floor as in
-    :func:`extract_pages`."""
-    import dataclasses
-
-    params = dataclasses.replace(params or DEFAULT_PARAMS, style_spans=True)
-    src = _cap_python_tasks(df.select("url", "html"), python_parallelism)
-    return src.mapInPandas(
-        _extract_batches(params, with_styles=True), EXTRACT_STYLED_SCHEMA
-    )

@@ -54,20 +54,20 @@ restate; spec references are ISO 32000-1):
   turns them into ordinary ``region_spans`` rows (rtype ``block``) —
   PDFs keep the engine's span-centric contract.
 
-Scale shape (100 TB): one Arrow-batched mapInPandas stage (the codec
-lane — same cost model as decode_warc_gz), capped via
-``python_parallelism`` per the measured ~2-hardware-threads-per-task
-rule. Everything downstream (quality, language, dedup) consumes the
-ordinary documents shape.
+Scale shape (100 TB): one Arrow-batched pystage.map_rows pass (the
+codec lane — same cost model as decode_warc_gz) behind the shared
+``python_parallelism`` floor. Everything downstream (quality,
+language, dedup) consumes the ordinary documents shape.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
+
+from ..pystage import map_rows
 
 OBJ = re.compile(rb"(?s)\d+ \d+ obj(.*?)endobj")
 STREAM_START = re.compile(rb"stream\r?\n")
@@ -245,41 +245,31 @@ def pdf_text(
     carried columns + (``n_objects``, ``n_streams``, ``n_text_streams``,
     ``text``, ``parse_ok``, ``block_spans``) under the frozen subset
     rule above."""
-    import pandas as pd
-
-    other = [f.name for f in blobs.schema.fields if f.name != data_col]
-    schema = (
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in blobs.schema.fields
-            if f.name != data_col
-        )
-        + ", n_objects int, n_streams int, n_text_streams int,"
-        " text string, parse_ok boolean,"
-        " block_spans array<struct<start: long, end: long>>"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = [
-                _extract_one(bytes(b) if b is not None else b"")
-                for b in pdf_batch[data_col]
-            ]
-            res = pdf_batch[other].copy()
-            res["n_objects"] = [r[0] for r in rows]
-            res["n_streams"] = [r[1] for r in rows]
-            res["n_text_streams"] = [r[2] for r in rows]
-            res["text"] = [r[3] for r in rows]
-            res["parse_ok"] = [r[4] for r in rows]
-            res["block_spans"] = [r[5] for r in rows]
-            yield res
-
-    from ..pipeline import _cap_python_tasks
-
-    # the shared python-task parallelism floor (no-op when the input
-    # is already partitioned at least that finely)
-    return _cap_python_tasks(blobs, python_parallelism).mapInPandas(
-        gen, schema
+    return map_rows(
+        blobs,
+        [c for c in blobs.columns if c != data_col],
+        (data_col,),
+        lambda b: _extract_one(bytes(b) if b is not None else b""),
+        [
+            T.StructField("n_objects", T.IntegerType()),
+            T.StructField("n_streams", T.IntegerType()),
+            T.StructField("n_text_streams", T.IntegerType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("parse_ok", T.BooleanType()),
+            T.StructField(
+                "block_spans",
+                T.ArrayType(
+                    T.StructType(
+                        [
+                            T.StructField("start", T.LongType()),
+                            T.StructField("end", T.LongType()),
+                        ]
+                    )
+                ),
+            ),
+        ],
+        python_parallelism,
+        nullable_carry=True,
     )
 
 
@@ -430,34 +420,18 @@ def pdf_doc_meta(
     ``uris``): the page_meta analog for the PDF lane (descriptive
     metadata) plus every /URI link action — the outlink surface
     :func:`pdf_outlinks` turns into link-graph edges."""
-    import pandas as pd
-
-    from ..pipeline import _cap_python_tasks
-
-    other = [f.name for f in blobs.schema.fields if f.name != data_col]
-    schema = (
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in blobs.schema.fields
-            if f.name != data_col
-        )
-        + ", title string, author string, uris array<string>"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = [
-                _meta_one(bytes(b) if b is not None else b"")
-                for b in pdf_batch[data_col]
-            ]
-            res = pdf_batch[other].copy()
-            res["title"] = [r[0] for r in rows]
-            res["author"] = [r[1] for r in rows]
-            res["uris"] = [r[2] for r in rows]
-            yield res
-
-    return _cap_python_tasks(blobs, python_parallelism).mapInPandas(
-        gen, schema
+    return map_rows(
+        blobs,
+        [c for c in blobs.columns if c != data_col],
+        (data_col,),
+        lambda b: _meta_one(bytes(b) if b is not None else b""),
+        [
+            T.StructField("title", T.StringType()),
+            T.StructField("author", T.StringType()),
+            T.StructField("uris", T.ArrayType(T.StringType())),
+        ],
+        python_parallelism,
+        nullable_carry=True,
     )
 
 

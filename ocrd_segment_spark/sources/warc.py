@@ -44,9 +44,9 @@ is part of the web-scale surface the graft adds.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from pyspark.sql import DataFrame, functions as F
+from ..pystage import map_rows, nullable, parallelism_floor
 
 CRLF = "\r\n"
 _SEP = CRLF + CRLF
@@ -158,49 +158,37 @@ def decode_warc_gz(
     feed ``unused_data`` to a fresh decompressobj per member —
     the standard multi-member idiom; truncated trailing members
     surface as ``decode_ok = false`` with the successfully-decoded
-    prefix kept. Arrow-batched mapInPandas, capped like every other
-    python stage (CLAUDE.md: python-UDF stages cost ~2 hardware
-    threads per task)."""
-    import pandas as pd
+    prefix kept. One pystage.map_rows pass behind the shared
+    parallelism floor."""
+    import zlib
 
-    schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                  for f in blobs.schema.fields if f.name != data_col)
-        + ", data binary, decode_ok boolean"
+    def row(raw):
+        buf = bytes(raw) if raw is not None else b""
+        out, ok = bytearray(), True
+        while buf:
+            d = zlib.decompressobj(31)
+            try:
+                out += d.decompress(buf)
+                out += d.flush()
+            except zlib.error:
+                ok = False
+                break
+            if not d.eof:  # truncated final member
+                ok = False
+                break
+            buf = d.unused_data
+        return bytes(out), ok
+
+    other = [c for c in blobs.columns if c != data_col]
+    return map_rows(
+        blobs, other, (data_col,), row,
+        [
+            T.StructField("data", T.BinaryType()),
+            T.StructField("decode_ok", T.BooleanType()),
+        ],
+        python_parallelism,
+        nullable_carry=True,
     )
-    other = [f.name for f in blobs.schema.fields if f.name != data_col]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
-        for pdf in batches:
-            texts, oks = [], []
-            for raw in pdf[data_col]:
-                buf = bytes(raw) if raw is not None else b""
-                out, ok = bytearray(), True
-                while buf:
-                    d = zlib.decompressobj(31)
-                    try:
-                        out += d.decompress(buf)
-                        out += d.flush()
-                    except zlib.error:
-                        ok = False
-                        break
-                    if not d.eof:  # truncated final member
-                        ok = False
-                        break
-                    buf = d.unused_data
-                texts.append(bytes(out))
-                oks.append(ok)
-            res = pdf[other].copy()
-            res["data"] = texts
-            res["decode_ok"] = oks
-            yield res
-
-    src = blobs
-    if python_parallelism:
-        src = src.repartition(python_parallelism)
-    return src.mapInPandas(gen, schema)
 
 
 _ENCODED = ("gzip", "x-gzip", "deflate")
@@ -231,11 +219,7 @@ def decode_content_encoding(
     extraction as if they were html (review finding). The encoding
     column is consumed (dropped) — decoded bodies no longer carry it
     truthfully."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
-    from ..pipeline import _cap_python_tasks
+    import zlib
 
     # NULL encodings are identity (coalesce — a NULL comparison would
     # silently drop the row from BOTH filter branches, review finding)
@@ -252,41 +236,26 @@ def decode_content_encoding(
     )
     tail = pages.filter(is_zlib)
 
-    other = [f.name for f in tail.schema.fields
-             if f.name not in (blob_col, encoding_col)]
-    schema = (
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in tail.schema.fields
-            if f.name not in (blob_col, encoding_col)
-        )
-        + f", {blob_col} binary, ce_decode_ok boolean"
-    )
+    def row(raw, enc):
+        buf = bytes(raw) if raw is not None else b""
+        enc = (enc or "").strip().lower()
+        attempts = [47] if enc in ("gzip", "x-gzip") else [15, -15]
+        for wbits in attempts:
+            try:
+                return zlib.decompress(buf, wbits), True
+            except zlib.error:
+                continue
+        return buf, False
 
-    def gen(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        import zlib
-
-        def one(raw, enc):
-            buf = bytes(raw) if raw is not None else b""
-            enc = (enc or "").strip().lower()
-            attempts = [47] if enc in ("gzip", "x-gzip") else [15, -15]
-            for wbits in attempts:
-                try:
-                    return zlib.decompress(buf, wbits), True
-                except zlib.error:
-                    continue
-            return buf, False
-
-        for pdf in batches:
-            rows = [one(b, e) for b, e in
-                    zip(pdf[blob_col], pdf[encoding_col])]
-            res = pdf[other].copy()
-            res[blob_col] = [r[0] for r in rows]
-            res["ce_decode_ok"] = [r[1] for r in rows]
-            yield res
-
-    decoded = _cap_python_tasks(tail, python_parallelism).mapInPandas(
-        gen, schema
+    other = [c for c in tail.columns if c not in (blob_col, encoding_col)]
+    decoded = map_rows(
+        tail, other, (blob_col, encoding_col), row,
+        [
+            T.StructField(blob_col, T.BinaryType()),
+            T.StructField("ce_decode_ok", T.BooleanType()),
+        ],
+        python_parallelism,
+        nullable_carry=True,
     )
     return clean.unionByName(decoded.select(*clean.columns))
 
@@ -334,17 +303,17 @@ def warc_pages_bytes(
     Arrow-batched codec-lane stage."""
     import pandas as pd
 
-    from ..pipeline import _cap_python_tasks
-
-    schema = (
-        "".join(
-            f"{f.name} {f.dataType.simpleString()}, "
-            for f in blobs.schema.fields
-            if f.name in keep_cols
-        )
-        + "url string, warc_date string, http_status int,"
-        " content_type string, location string, content_encoding string,"
-        " html binary"
+    schema = T.StructType(
+        [nullable(f) for f in blobs.schema.fields if f.name in keep_cols]
+        + [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_date", T.StringType()),
+            T.StructField("http_status", T.IntegerType()),
+            T.StructField("content_type", T.StringType()),
+            T.StructField("location", T.StringType()),
+            T.StructField("content_encoding", T.StringType()),
+            T.StructField("html", T.BinaryType()),
+        ]
     )
 
     def gen(batches):
@@ -402,7 +371,7 @@ def warc_pages_bytes(
                     out["html"].append(body)
             yield pd.DataFrame(out)
 
-    recs = _cap_python_tasks(blobs, python_parallelism).mapInPandas(
+    recs = parallelism_floor(blobs, python_parallelism).mapInPandas(
         gen, schema
     )
     # warc_ts derivation shared with the JVM path (ASCII-safe in SQL)

@@ -273,19 +273,24 @@ def test_parent_id_referential_integrity_and_region_antichain():
     """Kernel 1.2.0: parent_id resolves against KEPT candidates only,
     so every non-empty parent_id references an emitted region_id. At
     region level kept spans are disjoint and a DOM ancestor's hull
-    contains its descendants', so parent_id is '' by construction —
-    real parent links live at the line/word sub-levels."""
+    contains its descendants', so a text region's parent_id is '' by
+    construction — real parent links live on media spans and at the
+    line/word sub-levels."""
     from ocrd_segment_spark.fixtures import gen_pages
 
-    for r in gen_pages(300, seed=11):
-        text, regions, m = extract_document(r["html"])
-        ids = {sp["region_id"] for sp in regions}
-        for sp in regions:
-            assert sp["parent_id"] == "" or sp["parent_id"] in ids
-        # antichain: kept spans pairwise disjoint
-        spans = sorted((sp["start"], sp["end"]) for sp in regions)
-        for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-            assert e1 <= s2
+    for params in (ExtractParams(), ExtractParams(media_regions=True)):
+        for r in gen_pages(300, seed=11):
+            text, regions, m = extract_document(r["html"], params)
+            ids = {sp["region_id"] for sp in regions}
+            media = [sp for sp in regions if sp["region_id"].startswith("m")]
+            for sp in media:
+                assert sp["parent_id"] == "" or sp["parent_id"] in ids
+            text_regions = [sp for sp in regions if sp not in media]
+            assert all(sp["parent_id"] == "" for sp in text_regions)
+            # antichain: kept spans pairwise disjoint
+            spans = sorted((sp["start"], sp["end"]) for sp in text_regions)
+            for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
+                assert e1 <= s2
 
 
 # --------------------------------------------------- kernel 1.3/1.4 combos

@@ -119,11 +119,11 @@ def test_apply_coco_has_no_global_window(spark, tmp_path):
 def test_styled_extract_path_has_no_exchange(spark, tmp_path):
     """TextStyle pipeline is the same narrow plan as plain extraction."""
     from ocrd_segment_spark.fixtures import pages_pandas
-    from ocrd_segment_spark.pipeline import extract_pages_styled
+    from ocrd_segment_spark.config import ExtractParams
 
     src = str(tmp_path / "pages")
     spark.createDataFrame(pages_pandas(12)).write.parquet(src)
-    df = extract_pages_styled(spark.read.parquet(src))
+    df = extract_pages(spark.read.parquet(src), ExtractParams(style_spans=True))
     assert not audit.has_exchange(df), audit.physical_plan(df)
 
 

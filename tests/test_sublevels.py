@@ -207,14 +207,14 @@ def test_style_runs_and_word_style(spark):
     inherit, reference extract_words.py:127)."""
     import pandas as pd
     from ocrd_segment_spark.functions.sublevels import word_style
-    from ocrd_segment_spark.pipeline import extract_pages_styled
+    from ocrd_segment_spark.config import ExtractParams
 
     html = (
         b"<html><body><p>plain <b>bold words</b> after "
         b"<code>mono bit</code> tail</p></body></html>"
     )
     pdf = pd.DataFrame({"url": ["u1"], "html": [html]})
-    out = extract_pages_styled(spark.createDataFrame(pdf))
+    out = extract_pages(spark.createDataFrame(pdf), ExtractParams(style_spans=True))
     row = out.collect()[0]
     text = row["extracted_text"]
     runs = [(s["start"], s["end"], s["bold"], s["monospace"]) for s in row["style_spans"]]

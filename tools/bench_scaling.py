@@ -298,9 +298,9 @@ ext_cores in BENCH_r05.json):
   (vocabulary/range-gated), WAV/MP4 container metadata
   (multimodal.sniff_media — header arithmetic, no codecs).
 
-All python stages ride the shared `_cap_python_tasks` guard (which now
-no-ops at the cap — a review finding: chained capped stages paid a
-pointless full shuffle).
+All python stages ride the shared `pystage.parallelism_floor` (a
+no-op when the input is already at least that finely partitioned — a
+review finding: chained stages paid a pointless full shuffle).
 
 ## Kill-and-resume (process-level; re-evidenced rounds 3, 4 and 5)
 
