@@ -21,6 +21,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..pystage import install_zip_cache_gate, map_rows, parallelism_floor
+
 
 def tokens_col(text_col: str = "text") -> Column:
     """Whitespace tokens, empties dropped. Splits on the ``\\s`` CLASS,
@@ -559,6 +561,7 @@ def with_lm_bits(
     @pandas_udf("double")
     def _bits(texts: pd.Series, langs: pd.Series) -> pd.Series:
         nonlocal _bits_built
+        install_zip_cache_gate()
         import numpy as np
 
         # per-lang sorted key/value arrays, built once per worker from
@@ -602,8 +605,6 @@ def with_lm_bits(
             out.append(_round6(num / int(cnt.sum())))
         return pd.Series(pd.array(out, dtype="float64"))
 
-    from ..pystage import parallelism_floor
-
     # guide §4.4: a filter on a UDF-derived column otherwise duplicates
     # the whole ArrowEvalPython below the pushed-down predicate — every
     # surviving row would pay the LM scorer twice (plan-verified)
@@ -631,6 +632,7 @@ def with_compression_cols(
 
     @pandas_udf("double")
     def _ratio(texts: pd.Series) -> pd.Series:
+        install_zip_cache_gate()
         import zlib
 
         ratios = []
@@ -640,8 +642,6 @@ def with_compression_cols(
                 round(len(zlib.compress(b, 6)) / len(b), 6) if b else 0.0
             )
         return pd.Series(pd.array(ratios, dtype="float64"))
-
-    from ..pystage import parallelism_floor
 
     # guide §4.4: stop the optimizer duplicating the zlib pass around
     # pushed-down filters on keep_compression (plan-verified)
@@ -784,8 +784,6 @@ def compression_ratio(
     import zlib
 
     from pyspark.sql import types as T
-
-    from ..pystage import map_rows
 
     def row(t):
         b = (t if isinstance(t, str) else "").encode("utf-8")

@@ -46,7 +46,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..pystage import map_rows, nullable, parallelism_floor
+from ..pystage import (
+    install_zip_cache_gate, map_rows, nullable, parallelism_floor,
+)
 
 CRLF = "\r\n"
 _SEP = CRLF + CRLF
@@ -317,6 +319,7 @@ def warc_pages_bytes(
     )
 
     def gen(batches):
+        install_zip_cache_gate()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in keep_cols}
             for k in ("url", "warc_date", "http_status", "content_type",

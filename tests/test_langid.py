@@ -447,3 +447,35 @@ def test_known_rows_matches_counter_multiset():
         idx, cnt = _known_rows(norm)
         got = [] if idx is None else list(zip(idx.tolist(), cnt.tolist()))
         assert got == expect, (t, got[:5], expect[:5])
+
+
+def test_score_document_scales_linearly_in_length():
+    """Documents of n and 4n characters, both past the 512-char array
+    cutover: the time ratio stays near 4 (a quadratic pass gives 16).
+    Timed like tests/test_kernel.py::test_extract_scales_linearly_in_
+    candidates: each attempt times both sizes interleaved, best of 3,
+    with the collector paused; the best of three attempts must pass.
+    One timing is 10 calls, so a sub-millisecond call is not lost in
+    timer noise."""
+    import gc
+    import time
+
+    held_out = " ".join(s for s, _ in HELD_OUT)
+    docs = [(held_out * (n // len(held_out) + 1))[:n] for n in (2000, 8000)]
+    ratios = []
+    gc.disable()
+    try:
+        for _ in range(3):
+            best = [float("inf")] * 2
+            for _ in range(3):
+                for k, doc in enumerate(docs):
+                    t0 = time.perf_counter()
+                    for _ in range(10):
+                        score_document(doc)
+                    best[k] = min(best[k], time.perf_counter() - t0)
+            ratios.append(best[1] / best[0])
+            if ratios[-1] <= 5:
+                break
+    finally:
+        gc.enable()
+    assert min(ratios) <= 5, ratios

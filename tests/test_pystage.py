@@ -1,16 +1,24 @@
 """The shared Arrow row loop (ocrd_segment_spark/pystage.py): one
 ``mapInPandas`` boundary and one parallelism floor for every
-one-row-in/one-row-out Python stage."""
+one-row-in/one-row-out Python stage, and the stat-gated zip cache
+invalidation every worker-side loop installs."""
 
 import ast
+import importlib
 import pathlib
+import sys
+import zipfile
+import zipimport
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F, types as T
 
 import ocrd_segment_spark
 from ocrd_segment_spark.plans import audit
-from ocrd_segment_spark.pystage import map_rows
+from ocrd_segment_spark.pystage import (
+    ZIP_GATE_MARKER, install_zip_cache_gate, map_rows,
+)
 from ocrd_segment_spark.sources.warc import decode_warc_gz
 
 PKG = pathlib.Path(ocrd_segment_spark.__file__).parent
@@ -38,6 +46,199 @@ def test_map_in_pandas_only_in_the_shared_loop():
         ("pystage.py", "map_rows"),
         ("sources/warc.py", "warc_pages_bytes"),
     }
+
+
+def _first_call(fn: ast.FunctionDef) -> str | None:
+    """Name of the function the first statement of ``fn`` calls, past
+    any ``nonlocal`` declaration."""
+    stmt = next(s for s in fn.body if not isinstance(s, ast.Nonlocal))
+    call = stmt.value if isinstance(stmt, ast.Expr) else None
+    if isinstance(call, ast.Call) and isinstance(call.func, ast.Name):
+        return call.func.id
+    return None
+
+
+def test_worker_loops_install_the_zip_gate_first():
+    """The worker-side loops on the extract and corpus paths each call
+    install_zip_cache_gate as their first statement, so every task of a
+    reused worker skips the per-task zip directory re-reads."""
+    loops = {
+        ("pystage.py", "map_rows", "batches"),
+        ("sources/warc.py", "warc_pages_bytes", "gen"),
+        ("operators/textstats.py", "with_lm_bits", "_bits"),
+        ("operators/textstats.py", "with_compression_cols", "_ratio"),
+    }
+    found = set()
+    for rel, outer, inner in loops:
+        tree = ast.parse((PKG / rel).read_text())
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == outer:
+                for sub in ast.walk(fn):
+                    if (
+                        isinstance(sub, ast.FunctionDef)
+                        and sub.name == inner
+                        and _first_call(sub) == "install_zip_cache_gate"
+                    ):
+                        found.add((rel, outer, inner))
+    assert found == loops
+
+
+@pytest.fixture
+def stock_invalidate(monkeypatch):
+    """``zipimporter.invalidate_caches`` as CPython ships it, for the
+    test; the process's own method is put back after it."""
+    cls = zipimport.zipimporter
+    current = cls.invalidate_caches
+    stock = getattr(current, "__wrapped__", current)
+    monkeypatch.setattr(cls, "invalidate_caches", stock)
+    return stock
+
+
+@pytest.fixture
+def zipped_pkg(tmp_path, monkeypatch, stock_invalidate):
+    """A package in a temp zip on sys.path, imported, with every
+    directory read of the archive counted from the import on. Yields
+    (name, archive path, write(*modules), reads)."""
+    name = "zgate_pkg"
+    archive = str(tmp_path / f"{name}.zip")
+
+    def write(*modules):
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr(f"{name}/__init__.py", "")
+            for m in modules:
+                z.writestr(f"{name}/{m}.py", f"NAME = {m!r}\n")
+
+    reads = []
+    stock_read = zipimport._read_directory
+
+    def counting_read(path):
+        if path == archive:
+            reads.append(path)
+        return stock_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    write("a")
+    monkeypatch.syspath_prepend(archive)
+    assert importlib.import_module(f"{name}.a").NAME == "a"
+    del reads[:]
+    yield name, archive, write, reads
+    for mod in [m for m in sys.modules if m.split(".")[0] == name]:
+        del sys.modules[mod]
+    for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
+        del sys.path_importer_cache[key]
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+def _importers(archive):
+    return [
+        f for k, f in sys.path_importer_cache.items()
+        if k.startswith(archive) and isinstance(f, zipimport.zipimporter)
+    ]
+
+
+lazy_zip_invalidation = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="zipimport invalidation is lazy from CPython 3.13; no gate",
+)
+
+
+@lazy_zip_invalidation
+def test_zip_gate_skips_rereads_of_an_unchanged_archive(zipped_pkg):
+    _name, archive, _write, reads = zipped_pkg
+    # the archive root and the package directory: two importers
+    assert len(_importers(archive)) == 2
+    importlib.invalidate_caches()
+    assert len(reads) == 2  # stock: every importer re-reads
+    install_zip_cache_gate()
+    del reads[:]
+    for _ in range(5):
+        importlib.invalidate_caches()
+    # the first gated call stamps the archive with one read
+    assert len(reads) == 1
+    shared = zipimport._zip_directory_cache[archive]
+    assert all(f._files is shared for f in _importers(archive))
+
+
+@lazy_zip_invalidation
+def test_zip_gate_rereads_a_rewritten_archive_once(zipped_pkg):
+    name, archive, write, reads = zipped_pkg
+    install_zip_cache_gate()
+    importlib.invalidate_caches()
+    del reads[:]
+    write("a", "b")
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert len(reads) == 1
+    assert importlib.import_module(f"{name}.b").NAME == "b"
+    shared = zipimport._zip_directory_cache[archive]
+    assert f"{name}/b.py" in shared
+    assert all(f._files is shared for f in _importers(archive))
+
+
+@lazy_zip_invalidation
+def test_zip_gate_treats_a_deleted_archive_as_stock(zipped_pkg):
+    """A missing archive takes the stock path: each importer tries a
+    read, ends with an empty directory, the cache entry goes, and a
+    module not yet imported cannot be found. Restoring the archive
+    re-reads it."""
+    name, archive, write, reads = zipped_pkg
+    install_zip_cache_gate()
+    importlib.invalidate_caches()
+    del reads[:]
+    pathlib.Path(archive).unlink()
+    importlib.invalidate_caches()
+    assert len(reads) == 2
+    assert all(f._files == {} for f in _importers(archive))
+    assert archive not in zipimport._zip_directory_cache
+    with pytest.raises(ModuleNotFoundError):
+        importlib.import_module(f"{name}.b")
+    write("a", "b")
+    del reads[:]
+    importlib.invalidate_caches()
+    assert len(reads) == 1
+    assert importlib.import_module(f"{name}.b").NAME == "b"
+
+
+@lazy_zip_invalidation
+def test_zip_gate_installs_once(stock_invalidate):
+    cls = zipimport.zipimporter
+    install_zip_cache_gate()
+    gated = cls.invalidate_caches
+    install_zip_cache_gate()
+    assert cls.invalidate_caches is gated
+    assert getattr(gated, ZIP_GATE_MARKER)
+    assert gated.__wrapped__ is stock_invalidate
+
+
+def test_zip_gate_is_a_no_op_from_python_3_13(stock_invalidate, monkeypatch):
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    install_zip_cache_gate()
+    assert zipimport.zipimporter.invalidate_caches is stock_invalidate
+
+
+@lazy_zip_invalidation
+def test_map_rows_installs_the_zip_gate_in_its_worker(spark):
+    """Each map_rows task finds the gate installed in its worker. The
+    probe uninstalls it after reporting, so in the second stage a
+    worker reused from the first reports True only if map_rows
+    installed the gate again."""
+
+    def probe(_):
+        import zipimport
+
+        cls = zipimport.zipimporter
+        gated = bool(getattr(cls.invalidate_caches, ZIP_GATE_MARKER, False))
+        if gated:
+            cls.invalidate_caches = cls.invalidate_caches.__wrapped__
+        return (gated,)
+
+    df = spark.range(16, numPartitions=16)
+    for _stage in range(2):
+        out = map_rows(
+            df, ("id",), ("id",), probe,
+            [T.StructField("gated", T.BooleanType())],
+        )
+        assert [r["gated"] for r in out.collect()] == [True] * 16
 
 
 def test_map_rows_none_is_typed_null(spark):
