@@ -205,3 +205,84 @@ def corpus_digest_css() -> str:
 
 def test_golden_digest_css_pins_style_parsing():
     assert corpus_digest_css() == GOLDEN_SHA256_CSS
+
+
+# Digests four to six: the remaining param surfaces, each over the
+# 200-page fixture corpus plus a small hand-written corpus that carries
+# what the fixtures lack (dir= attributes, <pre> whitespace soup, media
+# next to merged regions). Every output field goes into the hash,
+# including ``dir``, style runs and the media spans' parent_id.
+_DIR_PAGES = [
+    '<html><body dir="rtl"><p>first paragraph words</p>'
+    '<p dir=" LTR ">second paragraph words<img src="/a"/></p>'
+    '<p dir="bogus">third paragraph words</p>'
+    '<div dir="auto"><p>fourth paragraph words<svg><img src="/no"/></svg></p>'
+    '<picture dir="ltr"><img src="/p"/></picture></div></body></html>',
+    '<html><body><div dir="rtl"><section dir="x"><p>nested '
+    'section words</p><video dir="ltr"></video><hr/></section></div>'
+    "<p>plain words<iframe src=/f></iframe></p><img src=/tail></body></html>",
+]
+
+_PRE_PAGES = [
+    "<html><body><p>lead words</p><pre>\r\n  indented\r\n\n\tcode "
+    "<b>bold</b><script>x=1</script>  </pre><pre>   </pre>"
+    "<pre><pre>inner</pre>outer <p>para</p> tail</pre></body></html>",
+    "<html><body><a href=/x><pre>linked code</pre></a><div>before "
+    "<pre>\nmid <img src=/i> pre</pre> after</div></body></html>",
+]
+
+_GAP_PAGES = [
+    "<html><body><main><p>alpha words</p><img src=/1><p>beta words</p>"
+    "<p>gamma <video></video> words</p><div>x</div><p>delta words</p>"
+    "<hr/></main></body></html>",
+    "<html><body><p>one <img src=/a> words</p><nav>nav words dropped "
+    "here</nav><p>two words<img src=/b></p><p>three <b>bold</b> words "
+    "<video></video></p></body></html>",
+]
+
+GOLDEN_SHA256_DIR = "106ce7f8e23a297e7acc1be83369a5568b04dd938bffe687b1547b8a7158a2c5"
+GOLDEN_SHA256_PRE = "8279cafaab289b8997562e62601f5c2f19eb63af5cacd806bc0467932e6b4976"
+GOLDEN_SHA256_GAP = "c8a1d9da24e143c9ad13be29ed0aa08b72105b5a0f9bfe2c406da9c0a37c52b2"
+
+
+def _surface_digest(params, extra_pages, n_pages: int = 200, seed: int = 42) -> str:
+    from ocrd_segment_spark.kernel.extract import extract_document
+
+    pages = [(r["url"], r["html"]) for r in gen_pages(n_pages, seed)]
+    pages.sort()
+    pages += [(f"extra{i}", html.encode()) for i, html in enumerate(extra_pages)]
+    h = hashlib.sha256()
+    for url, html in pages:
+        text, regions, metrics = extract_document(html, params)
+        h.update(url.encode())
+        h.update(b"\x00")
+        h.update(text.encode())
+        h.update(repr(sorted(metrics.items())).encode())
+        for sp in regions:
+            h.update(repr(sorted((k, v) for k, v in sp.items() if k != "style_runs")).encode())
+            for run in sp.get("style_runs", []):
+                h.update(repr(sorted(run.items())).encode())
+    return h.hexdigest()
+
+
+def test_golden_digest_reading_direction_and_media():
+    from ocrd_segment_spark.config import ExtractParams
+
+    params = ExtractParams(reading_direction=True, media_regions=True)
+    assert _surface_digest(params, _DIR_PAGES) == GOLDEN_SHA256_DIR
+
+
+def test_golden_digest_preserve_pre():
+    from ocrd_segment_spark.config import ExtractParams
+
+    params = ExtractParams(preserve_pre=True, style_spans=True, media_regions=True)
+    assert _surface_digest(params, _PRE_PAGES) == GOLDEN_SHA256_PRE
+
+
+def test_golden_digest_simplify_and_spread():
+    from ocrd_segment_spark.config import ExtractParams
+
+    params = ExtractParams(
+        simplify_gap_tolerance=3, spread_chars=2, media_regions=True
+    )
+    assert _surface_digest(params, _GAP_PAGES) == GOLDEN_SHA256_GAP
