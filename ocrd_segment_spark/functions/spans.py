@@ -14,10 +14,6 @@ def _c(x) -> Column:
     return x if isinstance(x, Column) else F.col(x)
 
 
-def span_len(s, e) -> Column:
-    return _c(e) - _c(s)
-
-
 def span_valid(s, e, doc_len) -> Column:
     """G8/P6 analog (reference repair.py:736-757): non-empty after
     clamping to [0, doc_len)."""
@@ -31,11 +27,6 @@ def span_clamp_start(s, e) -> Column:
 
 def span_clamp_end(s, e) -> Column:
     return F.greatest(_c(s), _c(e))
-
-
-def span_intersection(s1, e1, s2, e2) -> Column:
-    """G5/G6 (reference repair.py:642-658): exact intersection length."""
-    return F.greatest(F.lit(0), F.least(_c(e1), _c(e2)) - F.greatest(_c(s1), _c(s2)))
 
 
 def span_hull_start(s1, s2) -> Column:

@@ -10,53 +10,49 @@ both import THIS function (SURVEY.md §7.2).
 
 Stages, in the reference's fixed order (repair.py:107-186):
 
-1. parse (S1)                    — ``htmlparse.parse_html``
-2. candidate regions + spans     — DOM walk; spans are token-hull spans,
-   i.e. already "shrunk to foreground" (G11 sanitize analog: the
-   text-node hull replaces the binarized-foreground hull,
+1. parse + walk (S1)             — ``parse_html``: the regex tokenizer's
+   events drive one walker (kernel/walk.py) that emits tokens, token
+   char offsets, linked-char prefix sums and candidate regions in one
+   pass, with every ancestor fact carried on its stack. Spans are
+   token-hull spans, i.e. already "shrunk to foreground" (G11 sanitize
+   analog: the text-node hull replaces the binarized-foreground hull,
    reference repair.py:545-590)
-3. validity (G8/P6/P8)           — clamp/drop empty
-4. plausibilize (J2/J3 + G4/G14/G15) — interval decision table
-5. classify + filter (P1/P3 analogs + link-density heuristic layer)
-6. simplify (G9 gap-merge) and spread (G10), if enabled
-7. reading-order serialization (W1) + span re-offsetting (G17)
+2. validity (G8/P6/P8)           — holds by construction: a hull of
+   non-empty tokens is a non-empty span inside the document text
+3. plausibilize (J2/J3 + G4/G14/G15) — interval decision table
+4. classify + filter (P1/P3 analogs + link-density heuristic layer)
+5. simplify (G9 gap-merge) and spread (G10), if enabled
+6. reading-order serialization (W1) + span re-offsetting (G17)
+
+After the walk the per-page body runs on Python lists and ``bisect``;
+numpy is used only inside ``intervals.plausibilize``. Every step is
+linear (or n log n) in tokens, candidates and media, whatever the
+nesting depth.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from bisect import bisect_left, bisect_right
 
 from ..config import DEFAULT_PARAMS, ExtractParams
 from . import intervals
-from .htmlparse import NONTEXT_TAGS, Node
-# the regex tokenizer is the frozen parser (1.5× the stdlib builder;
-# equivalence on realistic HTML pinned by tests/test_fastparse.py —
-# the stdlib builder stays in htmlparse.py as the cross-check)
-from .htmlparse_fast import parse_html_fast as parse_html
+from .cssstyle import CSS_DEFAULT, STYLE_FLAG_NAMES
 
-# Tags that can become region candidates.
-LEAF_TAGS = frozenset(
-    "p h1 h2 h3 h4 h5 h6 li figcaption blockquote pre td th dt dd caption summary".split()
+# The fused tokenize + walk entry. extract_document looks the name up
+# at call time, so the stdlib cross-check (tests/test_fastparse.py) and
+# the benchmark's phase timers can rebind it.
+from .htmlparse_fast import parse_html_fast as parse_html
+from .walk import (
+    ANC_ASIDE,
+    ANC_FIGURE,
+    ANC_FOOTER,
+    ANC_HEADER,
+    ANC_NAV,
+    ANC_TABLE,
+    MEDIA_RTYPE,
 )
-CONTAINER_TAGS = frozenset("div section article main body".split())
-CANDIDATE_TAGS = LEAF_TAGS | CONTAINER_TAGS
 
 _HEADINGS = frozenset("h1 h2 h3 h4 h5 h6".split())
-
-# Inline style tags → TextStyle bit (reference TextStyle fields,
-# extract_words.py:127-145). Cumulative OR down the tree: each DOM
-# frame carries the mask of all enclosing style tags. With
-# ``params.css_styles`` the frame state widens to the css tuple
-# (kernel/cssstyle.py) and inline ``style=`` attributes fold in with
-# CSS override semantics (an explicit ``font-weight: normal`` clears
-# an enclosing <b>'s bit).
-from .cssstyle import (  # noqa: E402  (kernel-internal re-export)
-    CSS_DEFAULT,
-    STYLE_FLAG_NAMES,
-    STYLE_TAGS,
-    apply_css,
-)
-from .htmlparse import node_attrs  # noqa: E402
 
 # The complete text-region type vocabulary _classify can emit —
 # analog of the reference's region-type vocabulary (project.py:50-65 /
@@ -68,264 +64,62 @@ RTYPE_VOCABULARY = (
     "nav", "paragraph", "pre", "quote", "table",
 )
 
-MEDIA_RTYPE = {
-    "img": "image",
-    "picture": "image",
-    "svg": "image",
-    "hr": "separator",
-    "video": "media",
-    "audio": "media",
-    "embed": "media",
-    "iframe": "media",
-    "object": "media",
-    "canvas": "media",
-}
+_BOILER = (
+    (ANC_NAV, "nav"), (ANC_HEADER, "header"), (ANC_FOOTER, "footer"), (ANC_ASIDE, "aside"),
+)
 
 
-def _classify(node: Node) -> str:
+def _classify(tag: str, anc: int) -> str:
     """Frozen rtype rule — analog of the region-type vocabulary
     (reference project.py:50-65 for the 15 types; extract_pages.py:39-98
-    for the subtype colordict). Boilerplate ancestors dominate."""
-    chain = []
-    n: Node | None = node
-    while n is not None and n.tag != "#document":
-        chain.append(n.tag)
-        n = n.parent
-    for boiler in ("nav", "header", "footer", "aside"):
-        if boiler in chain:
+    for the subtype colordict). ``anc`` holds the ancestor-or-self bits
+    the walker carried down. Boilerplate ancestors dominate, checked in
+    the fixed nav → header → footer → aside order."""
+    for bit, boiler in _BOILER:
+        if anc & bit:
             return boiler
-    if node.tag == "figcaption" or "figure" in chain:
+    if tag == "figcaption" or anc & ANC_FIGURE:
         return "caption"
-    if node.tag in _HEADINGS:
+    if tag in _HEADINGS:
         return "heading"
-    if node.tag in ("li", "dt", "dd"):
+    if tag in ("li", "dt", "dd"):
         return "list"
-    if node.tag in ("td", "th", "caption") or "table" in chain:
+    if tag in ("td", "th", "caption") or anc & ANC_TABLE:
         return "table"
-    if node.tag == "pre":
+    if tag == "pre":
         return "pre"
-    if node.tag == "blockquote":
+    if tag == "blockquote":
         return "quote"
     return "paragraph"
 
 
-def _pre_verbatim(node: Node) -> str:
-    """Verbatim text of a ``<pre>`` subtree (params.preserve_pre).
-
-    Frozen rule: text descendants concatenated in document order —
-    inline element boundaries contribute NOTHING (no spaces), and
-    NONTEXT_TAGS subtrees (script/style/…) are skipped like everywhere
-    else. Normalization is exactly the HTML spec's: ``\\r\\n``/``\\r``
-    become ``\\n`` and ONE newline immediately after the start tag is
-    dropped; all other whitespace (indentation, blank lines, trailing
-    spaces) is the document's own bytes."""
-    parts: list[str] = []
-    stack: list[tuple[Node, int]] = [(node, 0)]
-    while stack:
-        n, ci = stack.pop()
-        while ci < len(n.children):
-            child = n.children[ci]
-            ci += 1
-            if isinstance(child, str):
-                parts.append(child)
-                continue
-            if child.tag in NONTEXT_TAGS:
-                continue
-            stack.append((n, ci))
-            n, ci = child, 0
-    raw = "".join(parts).replace("\r\n", "\n").replace("\r", "\n")
-    if raw.startswith("\n"):
-        raw = raw[1:]
-    return raw
-
-
-def _walk(
-    root: Node,
-    collect_media: bool = False,
-    collect_styles: bool = False,
-    css_styles: bool = False,
-    preserve_pre: bool = False,
-):
-    """Single iterative DOM walk (document order). Returns
-    (tokens, tok_link, tok_style, candidates, media): candidates is a
-    list of dicts with tok_first/tok_last (token-index hull = G11
-    shrink analog), depth, pre-order index, direct token count, node
-    ref, and has_candidate_desc — everything later stages need.
-    ``tok_style`` is the per-token style state (empty unless
-    ``collect_styles``): a bare bitmask int, or the full css tuple
-    (kernel/cssstyle.py CSS_DEFAULT layout) when ``css_styles``;
-    ``media`` is the document-order list of non-text media elements
-    (empty unless ``collect_media``), each with the token index where
-    it sits."""
-    tokens: list[str] = []
-    tok_link: list[bool] = []
-    tok_style: list = []
-    candidates: list[dict] = []
-    media: list[dict] = []
-
-    # stack entries: [node, child_iter_index, depth, link_depth,
-    #                 tok_first, direct_tokens, cand_desc, pre_index,
-    #                 style_state]
-    pre_counter = 0
-    style0 = CSS_DEFAULT if css_styles else 0
-    stack = [[root, 0, 0, 0, 0, 0, False, 0, style0]]
-    while stack:
-        frame = stack[-1]
-        node, ci = frame[0], frame[1]
-        if ci < len(node.children):
-            frame[1] += 1
-            child = node.children[ci]
-            if isinstance(child, str):
-                toks = child.split()
-                if toks:
-                    in_link = frame[3] > 0
-                    tokens.extend(toks)
-                    tok_link.extend([in_link] * len(toks))
-                    if collect_styles:
-                        tok_style.extend([frame[8]] * len(toks))
-                    frame[5] += len(toks)
-                continue
-            if collect_media and child.tag in MEDIA_RTYPE:
-                # <picture><img/></picture> is ONE image: skip the
-                # inner img (the reference extracts each region once)
-                if not (child.tag == "img" and node.tag == "picture"):
-                    media.append(
-                        {"tag": child.tag, "tok_at": len(tokens), "node": child}
-                    )
-            if child.tag in NONTEXT_TAGS:
-                continue
-            pre_counter += 1
-            if css_styles:
-                st = frame[8]
-                tag_bit = STYLE_TAGS.get(child.tag, 0)
-                if tag_bit:
-                    st = (st[0] | tag_bit, *st[1:])
-                child_style = apply_css(st, node_attrs(child).get("style"))
-            else:
-                child_style = frame[8] | STYLE_TAGS.get(child.tag, 0)
-            if preserve_pre and child.tag == "pre":
-                # the whole subtree is ONE verbatim token (see
-                # _pre_verbatim); descendants are consumed here, so
-                # they get no pre_index / candidacy / media / style
-                # runs of their own — the region is a single run
-                # styled by the state at <pre> entry
-                raw = _pre_verbatim(child)
-                if raw.strip():
-                    in_link = frame[3] > 0
-                    tokens.append(raw)
-                    tok_link.append(in_link)
-                    if collect_styles:
-                        tok_style.append(child_style)
-                    candidates.append(
-                        {
-                            "node": child,
-                            "depth": frame[2] + 1,
-                            "tok_first": len(tokens) - 1,
-                            "tok_last": len(tokens),
-                            "pre_index": pre_counter,
-                        }
-                    )
-                    frame[6] = True
-                continue
-            stack.append(
-                [
-                    child,
-                    0,
-                    frame[2] + 1,
-                    frame[3] + (1 if child.tag == "a" else 0),
-                    len(tokens),
-                    0,
-                    False,
-                    pre_counter,
-                    child_style,
-                ]
-            )
-            continue
-        # post-order: decide candidacy
-        stack.pop()
-        node, _, depth, _, tok_first, direct, cand_desc, pre_index, _ = frame
-        tok_last = len(tokens)
-        is_cand = False
-        if (
-            node.tag in CANDIDATE_TAGS
-            and tok_last > tok_first
-            and (not cand_desc or (direct > 0 and node.tag != "body"))
-        ):
-            is_cand = True
-            candidates.append(
-                {
-                    "node": node,
-                    "depth": depth,
-                    "tok_first": tok_first,
-                    "tok_last": tok_last,
-                    "pre_index": pre_index,
-                }
-            )
-        if stack and (is_cand or cand_desc):
-            stack[-1][6] = True
-    # post-order appended deepest-first; document (pre) order is the
-    # frozen processing order (W1 analog)
-    candidates.sort(key=lambda c: c["pre_index"])
-    return tokens, tok_link, tok_style, candidates, media
-
-
-# HTML dir attribute vocabulary; anything else is invalid and the
-# ancestor walk continues past it (frozen rule).
-_DIR_VALUES = frozenset(("ltr", "rtl", "auto"))
-
-
-def _resolve_dir(node: Node) -> str | None:
-    """Nearest self-or-ancestor VALID ``dir=`` value (reading-direction
-    inheritance, the reference's readingDirection fallback chain
-    extract_words.py:150-168 grafted onto the DOM)."""
-    n: Node | None = node
-    while n is not None:
-        if n.tag != "#document":
-            v = node_attrs(n).get("dir")
-            if v:
-                v = v.strip().lower()
-                if v in _DIR_VALUES:
-                    return v
-        n = n.parent
-    return None
-
-
-def _media_spans(media, out_pos_fn, cand_by_node, order_base, with_dir=False):
+def _media_spans(media, positions, parents, order_base, with_dir=False):
     """Zero-length media-region spans (kernel 1.3.0). Media spans skip
     validity/plausibilize/classify by design — they carry position and
     type, not extent (P8 zero-length filtering applies to TEXT regions
     only). Output order continues after the text regions, sorted by
     (position, document order)."""
     out = []
-    for m_idx, m in enumerate(media):
-        pos = out_pos_fn(m)
-        parent_id = ""
-        anc = m["node"].parent
-        while anc is not None:
-            pid = cand_by_node.get(id(anc))
-            if pid is not None:
-                parent_id = pid
-                break
-            anc = anc.parent
+    for m_idx, (tag, _, dir_) in enumerate(media):
+        pos = positions[m_idx]
         span = {
             "region_id": f"m{m_idx:04d}",
-            "rtype": MEDIA_RTYPE[m["tag"]],
-            "subtype": m["tag"],
+            "rtype": MEDIA_RTYPE[tag],
+            "subtype": tag,
             "start": pos,
             "end": pos,
-            "parent_id": parent_id,
+            "parent_id": parents.get(m_idx, ""),
             "order": 0,
             "score": 1.0,
-            "_m_idx": m_idx,
         }
         if with_dir:
-            span["dir"] = _resolve_dir(m["node"])
-        out.append(span)
-    out.sort(key=lambda r: (r["start"], r["_m_idx"]))
-    for j, r in enumerate(out):
-        r["order"] = order_base + j
-        del r["_m_idx"]
-    return out
+            span["dir"] = dir_
+        out.append((pos, m_idx, span))
+    out.sort(key=lambda t: (t[0], t[1]))
+    spans = [t[2] for t in out]
+    for j, span in enumerate(spans):
+        span["order"] = order_base + j
+    return spans
 
 
 def extract_document(
@@ -340,120 +134,95 @@ def extract_document(
     ``("", [], {... parse_failed: True})`` (log-and-skip discipline of
     reference extract_pages.py:425-432)."""
     metrics = {"parse_failed": False, "n_candidates": 0, "n_kept": 0, "n_dropped": 0}
-    tree = parse_html(html)
-    if tree is None:
+    page = parse_html(html, params)
+    if page is None:
         metrics["parse_failed"] = True
         return "", [], metrics
 
-    tokens, tok_link, tok_style, candidates, media = _walk(
-        tree,
-        params.media_regions,
-        params.style_spans,
-        params.style_spans and params.css_styles,
-        params.preserve_pre,
-    )
+    tokens, tok_start, tok_end, link_cum, tok_style, candidates, media = page
+    with_dir = params.reading_direction
     metrics["n_media"] = len(media)
-    if not candidates or not tokens:
+    if not candidates:
         if media:
-            return "", _media_spans(
-                media, lambda m: 0, {}, 0, params.reading_direction
-            ), metrics
+            return "", _media_spans(media, [0] * len(media), {}, 0, with_dir), metrics
         return "", [], metrics
 
-    # document text + token char offsets (the 1-D coordinate frame)
-    tok_len = np.fromiter(map(len, tokens), dtype=np.int64, count=len(tokens))
-    tok_start = np.zeros(len(tokens), dtype=np.int64)
-    np.cumsum(tok_len[:-1] + 1, out=tok_start[1:])
-    tok_end = tok_start + tok_len
+    # document text in the token char-offset frame (the 1-D coordinates)
     doc_text = " ".join(tokens)
     doc_len = len(doc_text)
-    tok_link_arr = np.asarray(tok_link, dtype=bool)
-    # prefix sums once per doc: the per-region link-density slice sums
-    # below become two O(1) lookups (round-6 perf; integer-exact)
-    link_cum = np.cumsum(np.where(tok_link_arr, tok_len, 0))
-
     n = len(candidates)
     metrics["n_candidates"] = n
-    starts = np.fromiter(
-        (tok_start[c["tok_first"]] for c in candidates), dtype=np.int64, count=n
+
+    # stage 3: plausibilize the token hulls
+    actions, starts, ends = intervals.plausibilize(
+        [tok_start[c[2]] for c in candidates],
+        [tok_end[c[3] - 1] for c in candidates],
+        [c[1] for c in candidates],
+        params.merge_min_overlap,
     )
-    ends = np.fromiter(
-        (tok_end[c["tok_last"] - 1] for c in candidates), dtype=np.int64, count=n
-    )
-    depths = np.fromiter((c["depth"] for c in candidates), dtype=np.int64, count=n)
+    actions, starts, ends = actions.tolist(), starts.tolist(), ends.tolist()
 
-    # stage 3: validity (G8/P8)
-    starts, ends, valid = intervals.ensure_valid(starts, ends, doc_len)
-
-    # stage 4: plausibilize (only among valid candidates)
-    actions = np.full(n, intervals.DELETE, dtype=np.int64)
-    vidx = np.nonzero(valid)[0]
-    if len(vidx):
-        act_v, s_v, e_v = intervals.plausibilize(
-            starts[vidx], ends[vidx], depths[vidx], params.merge_min_overlap
-        )
-        actions[vidx] = act_v
-        starts[vidx] = s_v
-        ends[vidx] = e_v
-
-    # stage 5: classify + filter survivors
-    kept: list[int] = []
+    # stage 4: classify + filter survivors
+    kept: list[tuple] = []
     for i in range(n):
         if actions[i] != intervals.KEEP:
             continue
-        rtype = _classify(candidates[i]["node"])
-        candidates[i]["rtype"] = rtype
+        c = candidates[i]
+        rtype = _classify(c[4], c[5])
         if rtype in params.drop_types:
             continue
-        s, e = int(starts[i]), int(ends[i])
+        s, e = starts[i], ends[i]
         if e - s < params.min_region_chars:
             continue
         # link density over the FINAL span's tokens (merges included).
         # Σ tok_len[ti:tj] folds to offsets minus the tj-ti-1 interior
-        # single-space gaps; linked chars come from the prefix sums —
-        # same integers as the former slice sums, O(1) per region.
-        ti = int(tok_start.searchsorted(s, side="left"))
-        tj = int(tok_end.searchsorted(e, side="right"))
+        # single-space gaps; linked chars come from the prefix sums.
+        ti = bisect_left(tok_start, s)
+        tj = bisect_right(tok_end, e)
         if tj > ti:
-            total = int(tok_end[tj - 1] - tok_start[ti]) - (tj - ti - 1)
-            linked = int(link_cum[tj - 1] - (link_cum[ti - 1] if ti else 0))
+            total = tok_end[tj - 1] - tok_start[ti] - (tj - ti - 1)
+            linked = link_cum[tj - 1] - (link_cum[ti - 1] if ti else 0) if link_cum else 0
         else:
             total = linked = 0
         density = linked / total if total else 1.0
         if density > params.max_link_density:
             continue
-        candidates[i]["score"] = round(1.0 - density, 6)
-        kept.append(i)
+        kept.append((s, c[0], e, c, rtype, round(1.0 - density, 6)))
     metrics["n_kept"] = len(kept)
     metrics["n_dropped"] = n - len(kept)
     if not kept:
         if media:
-            return "", _media_spans(
-                media, lambda m: 0, {}, 0, params.reading_direction
-            ), metrics
+            return "", _media_spans(media, [0] * len(media), {}, 0, with_dir), metrics
         return "", [], metrics
 
-    # stage 7 prep: reading order = span start (laminar ⇒ equivalent to
-    # DOM pre-order; pre_index tiebreak keeps sorts stable, W5)
-    kept.sort(key=lambda i: (int(starts[i]), candidates[i]["pre_index"]))
-    k_starts = starts[kept]
-    k_ends = ends[kept]
+    # stage 6 prep: reading order = span start (laminar ⇒ equivalent to
+    # DOM pre-order; the pre_index tiebreak keeps the sort stable, W5)
+    kept.sort(key=lambda k: (k[0], k[1]))
+    k_starts = [k[0] for k in kept]
+    k_ends = [k[2] for k in kept]
 
-    # stage 6: simplify (gap-merge) then spread, if enabled
-    if params.simplify_gap_tolerance > 0 and len(kept) > 1:
-        group, m_s, m_e = intervals.simplify_gap_merge(
-            k_starts, k_ends, params.simplify_gap_tolerance
-        )
-        # merged region inherits the first member's identity
-        firsts = [kept[int(np.nonzero(group == g)[0][0])] for g in range(len(m_s))]
-        kept = firsts
-        k_starts, k_ends = m_s, m_e
-    if params.spread_chars > 0:
-        k_starts, k_ends = intervals.spread(
-            k_starts, k_ends, params.spread_chars, doc_len
-        )
+    # stage 5: simplify (gap-merge) then spread, if enabled — the list
+    # forms of intervals.simplify_gap_merge / intervals.spread. A merged
+    # region keeps its first member's identity.
+    tol = params.simplify_gap_tolerance
+    if tol > 0 and len(kept) > 1:
+        m_kept, m_starts, m_ends = [kept[0]], [k_starts[0]], [k_ends[0]]
+        for j in range(1, len(kept)):
+            if k_starts[j] - k_ends[j - 1] > tol:
+                m_kept.append(kept[j])
+                m_starts.append(k_starts[j])
+                m_ends.append(k_ends[j])
+            else:
+                m_ends[-1] = k_ends[j]
+        kept, k_starts, k_ends = m_kept, m_starts, m_ends
+    dist = params.spread_chars
+    if dist > 0:
+        # each side grows by up to dist, at most to the gap midpoint
+        mids = [(e + s + 1) // 2 for e, s in zip(k_ends, k_starts[1:])]
+        k_starts = [max(s - dist, b) for s, b in zip(k_starts, [0] + mids)]
+        k_ends = [min(e + dist, b) for e, b in zip(k_ends, mids + [doc_len])]
 
-    # stage 7: serialize in reading order; re-offset spans (G17)
+    # stage 6: serialize in reading order; re-offset spans (G17)
     sep = params.region_separator
     pieces: list[str] = []
     regions: list[dict] = []
@@ -464,26 +233,28 @@ def extract_document(
     # ancestor's token hull contains its descendants', so no kept
     # region is another's DOM ancestor (pinned by test_kernel). Real
     # links live at the line/word levels (kernel/sublevels.py) and on
-    # media spans (cand_by_node below).
-    for out_order, i in enumerate(kept):
-        c = candidates[i]
-        s, e = int(k_starts[out_order]), int(k_ends[out_order])
+    # media spans (below).
+    css = params.css_styles
+    empty_state = CSS_DEFAULT if css else 0
+    for out_order, k in enumerate(kept):
+        c = k[3]
+        s, e = k_starts[out_order], k_ends[out_order]
         piece = doc_text[s:e]
         if out_order:
             cursor += len(sep)
         pieces.append(piece)
         region = {
-            "region_id": f"r{c['pre_index']:04d}",
-            "rtype": c["rtype"],
-            "subtype": c["node"].tag,
+            "region_id": f"r{c[0]:04d}",
+            "rtype": k[4],
+            "subtype": c[4],
             "start": cursor,
             "end": cursor + len(piece),
             "parent_id": "",
             "order": out_order,
-            "score": c.get("score", 1.0),
+            "score": k[5],
         }
-        if params.reading_direction:
-            region["dir"] = _resolve_dir(c["node"])
+        if with_dir:
+            region["dir"] = c[6]
         if params.style_spans:
             # contiguous equal-state token runs inside the FINAL span,
             # re-offset to the output frame (TextStyle analog,
@@ -491,10 +262,8 @@ def extract_document(
             # between same-state tokens belong to the run). State is a
             # bitmask int, or the css tuple under params.css_styles —
             # runs break whenever ANY TextStyle field changes.
-            css = params.css_styles
-            empty_state = CSS_DEFAULT if css else 0
-            ti = int(tok_start.searchsorted(s, side="left"))
-            tj = int(tok_end.searchsorted(e, side="right"))
+            ti = bisect_left(tok_start, s)
+            tj = bisect_right(tok_end, e)
             runs = []
             t = ti
             while t < tj:
@@ -505,8 +274,8 @@ def extract_document(
                 if state != empty_state:
                     mask = state[0] if css else state
                     run = {
-                        "start": cursor + max(0, int(tok_start[t]) - s),
-                        "end": cursor + min(len(piece), int(tok_end[t2]) - s),
+                        "start": cursor + max(0, tok_start[t] - s),
+                        "end": cursor + min(len(piece), tok_end[t2] - s),
                     }
                     for bit, name in STYLE_FLAG_NAMES:
                         run[name] = bool(mask & bit)
@@ -524,27 +293,31 @@ def extract_document(
         cursor += len(piece)
     text_out = sep.join(pieces)
     if media:
-        # map each media element's token position (doc-text frame) into
+        # each media element's token position (doc-text frame) maps into
         # the output frame: the first kept region whose final span ends
-        # at/after it hosts the zero-length span; trailing media lands
-        # at the end of the output.
-        n_kept_final = len(kept)
-        cand_by_node = {
-            id(candidates[i]["node"]): f"r{candidates[i]['pre_index']:04d}"
-            for i in kept
-        }
-
-        def out_pos(m):
-            pos = int(tok_start[m["tok_at"]]) if m["tok_at"] < len(tokens) else doc_len
-            for out_order in range(n_kept_final):
-                ds, de = int(k_starts[out_order]), int(k_ends[out_order])
-                if pos <= de:
-                    return regions[out_order]["start"] + max(0, pos - ds)
-            return len(text_out)
-
-        regions.extend(
-            _media_spans(
-                media, out_pos, cand_by_node, n_kept_final, params.reading_direction
-            )
-        )
+        # at/after it hosts the zero-length span; trailing media lands at
+        # the end of the output. Media come in document order, so their
+        # positions never decrease and one forward sweep finds each host.
+        n_tok = len(tokens)
+        n_out = len(kept)
+        positions = []
+        o = 0
+        for _, tok_at, _ in media:
+            pos = tok_start[tok_at] if tok_at < n_tok else doc_len
+            while o < n_out and pos > k_ends[o]:
+                o += 1
+            if o < n_out:
+                positions.append(regions[o]["start"] + max(0, pos - k_starts[o]))
+            else:
+                positions.append(len(text_out))
+        # the kept candidate whose media interval holds the element;
+        # visiting in document order lets a deeper one win, were two
+        # kept candidates ever nested
+        parents = {}
+        for k in sorted(kept, key=lambda k: k[1]):
+            c = k[3]
+            rid = f"r{c[0]:04d}"
+            for m_idx in range(c[7], c[8]):
+                parents[m_idx] = rid
+        regions.extend(_media_spans(media, positions, parents, n_out, with_dir))
     return text_out, regions, metrics

@@ -1,162 +1,60 @@
-"""Lenient HTML → element tree, stdlib-only.
+"""Stdlib ``html.parser`` event source — the cross-check parser.
 
 Replaces the reference's PAGE-XML deserialization (``page_from_file``,
 reference extract_pages.py:236-241) for the web graft. lxml is not
-available in this sandbox, so this is a small, deterministic tree
-builder on ``html.parser.HTMLParser`` with frozen recovery rules:
-
-- void elements never push onto the stack;
-- an end tag with no matching open tag is ignored;
-- an end tag that skips levels pops up to (and including) the match;
-- ``<p>``/``<li>`` auto-close when a new block/item starts (the two
-  most common unclosed-tag patterns), nothing fancier;
-- ``<script>/<style>/<template>/<noscript>/<head>/<title>`` subtrees are
-  excluded from text.
+available in this sandbox; ``html.parser.HTMLParser`` reports the
+page's start, end and text events, and ``walk.walk`` — the same walker
+the regex tokenizer (``htmlparse_fast``, the frozen parser) feeds —
+applies the frozen recovery rules to them. tests/test_fastparse.py
+checks the two sources against each other through that walker.
 
 Malformed input must never raise out of :func:`parse_html` — the
 pipeline's log-and-skip discipline mirrors the reference's
-(extract_pages.py:425-432); callers check ``tree is None``.
+(extract_pages.py:425-432); callers check for ``None``.
 """
 
 from __future__ import annotations
 
 from html.parser import HTMLParser
 
-VOID_TAGS = frozenset(
-    "area base br col embed hr img input link meta param source track wbr".split()
-)
-
-# Subtrees whose text never reaches the document text.
-NONTEXT_TAGS = frozenset("script style template noscript head title svg".split())
-
-# Block-level tags for the auto-close heuristic.
-BLOCK_TAGS = frozenset(
-    "address article aside blockquote div dl dd dt fieldset figcaption figure "
-    "footer form h1 h2 h3 h4 h5 h6 header hr li main nav ol p pre section "
-    "table tbody td tfoot th thead tr ul".split()
-)
+from ..config import DEFAULT_PARAMS
+from .walk import CLOSE, EMPTY, OPEN, TEXT, Page, walk
 
 
-class Node:
-    """One element. ``children`` holds Node and str (text) entries in
-    document order; document order is the only order the kernel uses.
-
-    ``attrs`` is a dict for stdlib-built trees; the fast parser defers
-    attribute tokenization (``attrs = None`` + raw text in
-    ``attrs_raw``) because most elements' attributes are never read —
-    :func:`node_attrs` parses lazily on first access."""
-
-    __slots__ = ("tag", "attrs", "children", "parent", "attrs_raw")
-
-    def __init__(self, tag: str, attrs=(), parent: "Node | None" = None):
-        self.tag = tag
-        self.attrs = dict(attrs) if attrs is not None else None
-        self.attrs_raw: str | None = None
-        self.children: list = []
-        self.parent = parent
-
-    def __repr__(self) -> str:  # pragma: no cover - debug aid
-        return f"<{self.tag} {len(self.children)} children>"
-
-
-import re as _re
-from html import unescape as _unescape
-
-# html.parser attribute grammar, frozen to the subset both parsers
-# must agree on: name, optionally = double-quoted | single-quoted |
-# unquoted value. Names lowercased, entity refs decoded, LAST
-# duplicate wins (dict(attrs) semantics above). The unquoted branch
-# mirrors html.parser's tolerant rule — any run of non-space, non-'>'
-# chars not starting with a quote — so values like
-# ``style=font-family:a=b`` parse identically in both backends
-# (the earlier [^\s"'=<>`]+ class truncated at '=', observed as a
-# fast-vs-stdlib TextStyle divergence). Like html.parser, '=' runs
-# collapse ('a==b' -> 'b') and an empty unquoted value yields ''.
-_ATTR_RE = _re.compile(
-    r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)"
-    r"(?:\s*=+\s*(\"[^\"]*\"|'[^']*'|(?![\"'])[^\s>]*))?"
-)
-
-
-def _parse_raw_attrs(raw: str) -> dict:
-    out: dict = {}
-    for m in _ATTR_RE.finditer(raw):
-        name = m.group(1).lower()
-        v = m.group(2)
-        if v is not None:
-            if v[:1] in ("'", '"'):
-                v = v[1:-1]
-            if "&" in v:
-                v = _unescape(v)
-        out[name] = v
-    return out
-
-
-def node_attrs(node: Node) -> dict:
-    """Attribute dict of a node from either parser (lazy for the fast
-    parser's raw attribute text)."""
-    if node.attrs is None:
-        node.attrs = _parse_raw_attrs(node.attrs_raw or "")
-    return node.attrs
-
-
-class _TreeBuilder(HTMLParser):
+class _EventSource(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.root = Node("#document")
-        self.stack: list[Node] = [self.root]
-
-    # -- frozen recovery rules ------------------------------------------
-    def _auto_close(self, tag: str) -> None:
-        top = self.stack[-1].tag
-        if top == "p" and tag in BLOCK_TAGS:
-            self.stack.pop()
-        elif top == "li" and tag == "li":
-            self.stack.pop()
+        self.events: list[tuple] = []
 
     def handle_starttag(self, tag: str, attrs) -> None:
-        if len(self.stack) > 1:
-            self._auto_close(tag)
-        node = Node(tag, attrs, self.stack[-1])
-        self.stack[-1].children.append(node)
-        if tag not in VOID_TAGS:
-            self.stack.append(node)
+        self.events.append((OPEN, tag, attrs))
 
     def handle_startendtag(self, tag: str, attrs) -> None:
-        # Frozen rule: a self-closing start tag still auto-closes
-        # <p>/<li> (HTML5 ignores the trailing slash on start tags, so
-        # '<p>a<hr/>b' ends the paragraph exactly as '<p>a<hr>b' does).
-        # Keeps the stdlib cross-check equivalent to htmlparse_fast.
-        if len(self.stack) > 1:
-            self._auto_close(tag)
-        node = Node(tag, attrs, self.stack[-1])
-        self.stack[-1].children.append(node)
+        # HTML5 ignores the '/' on start tags for auto-close purposes:
+        # '<p>a<hr/>b' ends the paragraph exactly as '<p>a<hr>b' does
+        self.events.append((EMPTY, tag, attrs))
 
     def handle_endtag(self, tag: str) -> None:
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                return
-        # unmatched end tag: ignore
+        self.events.append((CLOSE, tag, None))
 
     def handle_data(self, data: str) -> None:
         if data:
-            self.stack[-1].children.append(data)
+            self.events.append((TEXT, data, None))
 
 
-def parse_html(html: bytes | str) -> Node | None:
-    """Parse HTML bytes/str into a tree; ``None`` on undecodable/failed
-    input (counted as ``parse_failures`` by the caller). Bytes must be
-    valid UTF-8 — anything else is a parse failure by the frozen rule."""
+def parse_html(html: bytes | str, params=DEFAULT_PARAMS) -> Page | None:
+    """Parse and walk one page; ``None`` on undecodable/failed input
+    (counted as ``parse_failures`` by the caller). Bytes must be valid
+    UTF-8 — anything else is a parse failure by the frozen rule."""
     if isinstance(html, (bytes, bytearray)):
         try:
             html = bytes(html).decode("utf-8", errors="strict")
         except UnicodeDecodeError:
             return None
     try:
-        builder = _TreeBuilder()
-        builder.feed(html)
-        builder.close()
-        return builder.root
+        source = _EventSource()
+        source.feed(html)
+        source.close()
     except Exception:
         return None
+    return walk(source.events, params, dict)

@@ -1,16 +1,12 @@
-"""Fast regex-tokenizer HTML parser — drop-in for htmlparse.parse_html.
+"""Regex tokenizer: the kernel's frozen HTML parser.
 
-The kernel reads attributes only on gated paths (css_styles /
-reading-direction), so a single compiled-regex scan over the document
-replaces the stdlib ``html.parser`` state machine (~60% of per-page
-kernel time measured); raw attribute text is stored unparsed on the
-node and tokenized lazily by ``htmlparse.node_attrs`` on first access.
-Behavior is equivalence-tested against the stdlib builder over the
-full fixture corpus (tests/test_fastparse.py) — same recovery rules:
+A single compiled-regex scan over the document yields the start, end
+and text events that ``walk.walk`` consumes directly; no element tree
+is built. Attributes travel as raw text and are tokenized only when a
+gated path (css_styles / reading_direction) reads them. The stdlib
+``html.parser`` event source (``htmlparse.py``) feeds the same walker
+and is the cross-check (tests/test_fastparse.py). Tokenizer rules:
 
-- void elements never push;
-- unmatched end tags ignored; skipping end tags pop to the match;
-- ``<p>``/``<li>`` auto-close on new block/item;
 - self-closing: a trailing '/' binds to a preceding unquoted
   '=value', whitespace around the '=' allowed (html.parser's rule:
   `<a href=foo/>` and `<a href = foo/>` are normal start tags);
@@ -22,8 +18,8 @@ full fixture corpus (tests/test_fastparse.py) — same recovery rules:
   byte after the first letter (`<i'>` is text here, a tag there), and
   an UNTERMINATED quoted attribute recovers at the next '>' here
   while html.parser demotes the whole tag to literal text;
-- script/style/template/… content is raw text (skipped to the closing
-  tag, never tokenized as markup);
+- script/style content is raw text (skipped to the closing tag, never
+  tokenized as markup);
 - comments / doctype / CDATA / processing instructions ignored;
 - character references decoded with ``html.unescape`` (same tables the
   stdlib parser uses).
@@ -34,7 +30,8 @@ from __future__ import annotations
 import re
 from html import unescape
 
-from .htmlparse import BLOCK_TAGS, VOID_TAGS, Node
+from ..config import DEFAULT_PARAMS
+from .walk import CLOSE, EMPTY, FAIL, OPEN, TEXT, Page, walk
 
 # one token per match: comment | declaration/CDATA | PI | end tag | start tag
 _TOKEN = re.compile(
@@ -50,7 +47,7 @@ _TOKEN = re.compile(
 )
 
 # raw-text elements: content runs to the matching close tag (exactly
-# the stdlib parser's CDATA-content set, so trees stay equivalent)
+# the stdlib parser's CDATA-content set, so the event streams agree)
 _RAWTEXT = frozenset("script style".split())
 _RAW_CLOSE = {t: re.compile(rf"</\s*{t}[^>]*>", re.IGNORECASE) for t in _RAWTEXT}
 
@@ -70,90 +67,101 @@ _LT_SPLIT = re.compile(r"(<)")
 _SLASH_BINDS = re.compile(r"(?:^|[\s\"'/])[^\s=\"'/>]+\s*=\s*(?![\"'])[^\s]*/$")
 
 
-def _append_text(node: Node, data: str) -> None:
-    """Append text chunks exactly as the stdlib parser would: a literal
-    '<' that matched no construct is emitted as its own data chunk
-    (html.parser goahead), which matters because token boundaries
-    follow chunk boundaries. Charrefs decoded per chunk (same tables)."""
-    if "<" in data:
-        for part in _LT_SPLIT.split(data):
-            if part:
-                node.children.append(unescape(part) if "&" in part else part)
-    elif data:
-        node.children.append(unescape(data) if "&" in data else data)
+# html.parser attribute grammar, frozen to the subset both parsers
+# must agree on: name, optionally = double-quoted | single-quoted |
+# unquoted value. Names lowercased, entity refs decoded, LAST
+# duplicate wins (dict semantics, as for the stdlib's attribute
+# list). The unquoted branch mirrors html.parser's tolerant rule — any
+# run of non-space, non-'>' chars not starting with a quote — so values
+# like ``style=font-family:a=b`` parse identically in both sources.
+# Like html.parser, '=' runs collapse ('a==b' -> 'b') and an empty
+# unquoted value yields ''.
+_ATTR_RE = re.compile(
+    r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)"
+    r"(?:\s*=+\s*(\"[^\"]*\"|'[^']*'|(?![\"'])[^\s>]*))?"
+)
 
 
-def parse_html_fast(html: bytes | str) -> Node | None:
-    """Same contract as htmlparse.parse_html (None on failure)."""
+def parse_raw_attrs(raw: str) -> dict:
+    """Attribute dict of a start tag's raw attribute text."""
+    out: dict = {}
+    for m in _ATTR_RE.finditer(raw):
+        name = m.group(1).lower()
+        v = m.group(2)
+        if v is not None:
+            if v[:1] in ("'", '"'):
+                v = v[1:-1]
+            if "&" in v:
+                v = unescape(v)
+        out[name] = v
+    return out
+
+
+def parse_html_fast(html: bytes | str, params=DEFAULT_PARAMS) -> Page | None:
+    """Tokenize and walk one page (None on undecodable/failed input).
+    Bytes must be valid UTF-8 — anything else is a parse failure by the
+    frozen rule."""
     if isinstance(html, (bytes, bytearray)):
         try:
             html = bytes(html).decode("utf-8", errors="strict")
         except UnicodeDecodeError:
             return None
+    return walk(tokenize(html), params, parse_raw_attrs)
+
+
+def tokenize(html: str):
+    """Yield the page's events (see ``walk``); a FAIL event ends a page
+    the scan could not read."""
     try:
-        return _parse(html)
-    except Exception:
-        return None
-
-
-def _parse(html: str) -> Node:
-    root = Node("#document")
-    stack = [root]
-    pos = 0
-    n = len(html)
-    while pos < n:
-        m = _TOKEN.search(html, pos)
-        if m is None:
-            _append_text(stack[-1], html[pos:])
-            break
-        if m.start() > pos:
-            _append_text(stack[-1], html[pos : m.start()])
-        pos = m.end()
-        # one group() call for all four captures (round-6 perf; the
-        # attrs text is also read once and shared)
-        end_tag, start_tag, attrs_g, slash_g = m.group(1, 2, 3, 4)
-        if start_tag is not None:
-            tag = start_tag.lower()
-            # auto-close rules (match _TreeBuilder._auto_close)
-            if len(stack) > 1:
-                top = stack[-1].tag
-                if top == "p" and tag in BLOCK_TAGS:
-                    stack.pop()
-                elif top == "li" and tag == "li":
-                    stack.pop()
-            node = Node(tag, None, stack[-1])
-            attrs_txt = attrs_g or ""
-            node.attrs_raw = attrs_txt
-            stack[-1].children.append(node)
-            # self-closing: the attrs group greedily consumes a trailing
-            # '/', so inspect it. html.parser's rule (which the stdlib
-            # cross-check inherits): the '/' binds to a preceding
-            # unquoted '=value', whitespace around the '=' allowed —
-            # `<a href=foo/>` AND `<a href = foo/>` are normal start
-            # tags (kernel 1.5.4) — but `<h2 disabled/>` (bare NAME
-            # before the slash) and `<a x='q'/>` are self-closing.
-            if slash_g == "/":
-                self_closing = True
-            elif attrs_txt.endswith("/"):
-                self_closing = _SLASH_BINDS.search(attrs_txt) is None
-            else:
-                self_closing = False
-            if tag in _RAWTEXT and not self_closing:
-                # raw content: skip to the closing tag, keep as text
-                close = _RAW_CLOSE[tag].search(html, pos)
-                if close is None:
-                    node.children.append(html[pos:])
-                    pos = n
+        search = _TOKEN.search
+        pos = 0
+        n = len(html)
+        while pos < n:
+            m = search(html, pos)
+            start = n if m is None else m.start()
+            if start > pos:
+                # a literal '<' that matched no construct is its own
+                # data chunk, as in html.parser; token boundaries follow
+                # chunk boundaries. Charrefs decode per chunk.
+                data = html[pos:start]
+                if "<" in data:
+                    for part in _LT_SPLIT.split(data):
+                        if part:
+                            yield TEXT, unescape(part) if "&" in part else part, None
                 else:
-                    node.children.append(html[pos : close.start()])
-                    pos = close.end()
-            elif tag not in VOID_TAGS and not self_closing:
-                stack.append(node)
-        elif end_tag is not None:
-            tag = end_tag.lower()
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    del stack[i:]
-                    break
-        # comments / declarations / PIs: skipped
-    return root
+                    yield TEXT, unescape(data) if "&" in data else data, None
+            if m is None:
+                break
+            pos = m.end()
+            end_tag, start_tag, attrs, slash = m.group(1, 2, 3, 4)
+            if start_tag is not None:
+                tag = start_tag.lower()
+                attrs = attrs or ""
+                # self-closing: the attrs group greedily consumes a
+                # trailing '/', so inspect it. html.parser's rule: the
+                # '/' binds to a preceding unquoted '=value', whitespace
+                # around the '=' allowed — `<a href=foo/>` AND
+                # `<a href = foo/>` are normal start tags — but
+                # `<h2 disabled/>` (bare NAME before the slash) and
+                # `<a x='q'/>` are self-closing.
+                if slash == "/" or (
+                    attrs.endswith("/") and _SLASH_BINDS.search(attrs) is None
+                ):
+                    yield EMPTY, tag, attrs
+                    continue
+                yield OPEN, tag, attrs
+                if tag in _RAWTEXT:
+                    # raw content runs to the closing tag
+                    close = _RAW_CLOSE[tag].search(html, pos)
+                    if close is None:
+                        yield TEXT, html[pos:], None
+                        pos = n
+                    else:
+                        yield TEXT, html[pos : close.start()], None
+                        yield CLOSE, tag, None
+                        pos = close.end()
+            elif end_tag is not None:
+                yield CLOSE, end_tag.lower(), None
+            # comments / declarations / PIs: skipped
+    except Exception:
+        yield FAIL, None, None

@@ -1,19 +1,28 @@
 """Fast-parser guarantees.
 
 The regex tokenizer (htmlparse_fast) is the kernel's frozen parser;
-the stdlib builder (htmlparse) stays as the cross-check. On realistic
-HTML the two must produce identical extraction output; on adversarial
-input the fast parser must satisfy the kernel invariants (stdlib
-agreement is NOT claimed there — the stdlib parser emits degenerate
-tag names like 'b"<' for unterminated tags at EOF)."""
+the stdlib ``html.parser`` event source (htmlparse) stays as the
+cross-check. Both feed the same walker (kernel/walk.py). On realistic
+HTML the two must produce identical walked pages and extraction
+output; on adversarial input the fast parser must satisfy the kernel
+invariants (stdlib agreement is NOT claimed there — the stdlib parser
+emits degenerate tag names like 'b"<' for unterminated tags at EOF)."""
 
 from hypothesis import given, settings, strategies as st
 
+from ocrd_segment_spark.config import ExtractParams
 from ocrd_segment_spark.fixtures import gen_pages
 from ocrd_segment_spark.kernel import extract as X
 from ocrd_segment_spark.kernel.extract import extract_document
 from ocrd_segment_spark.kernel.htmlparse import parse_html as parse_stdlib
 from ocrd_segment_spark.kernel.htmlparse_fast import parse_html_fast
+
+# every gated surface on: the walked page then carries styles, dir,
+# media and verbatim <pre> state for the parsers to agree on
+_ALL = ExtractParams(
+    media_regions=True, style_spans=True, css_styles=True,
+    reading_direction=True, preserve_pre=True,
+)
 
 
 def test_equivalent_to_stdlib_on_fixture_corpus():
@@ -31,6 +40,15 @@ def test_equivalent_to_stdlib_on_fixture_corpus():
     finally:
         X.parse_html = orig
     assert not mismatches, mismatches[:5]
+
+
+def test_walked_pages_agree_on_fixture_corpus():
+    """Both event sources drive the one walker to the same page —
+    tokens, offsets, link sums, style states, candidates with their
+    ancestor facts, and media — with every gated surface on."""
+    for r in gen_pages(600, seed=8):
+        a, b = parse_stdlib(r["html"], _ALL), parse_html_fast(r["html"], _ALL)
+        assert a == b, r["url"]
 
 
 _frag = st.text(alphabet="abc <>/&;!#x\"'=-p.liv\nh1", min_size=0, max_size=60)
@@ -63,15 +81,15 @@ def test_self_closing_block_tag_auto_closes_p_in_both_parsers():
     found the two parsers diverged here because fixtures lacked
     self-closing block tags — this fixture pins the rule."""
     for html in ("<body><p>a<hr/>b</p></body>", "<body><p>a<hr>b</p></body>"):
-        trees = [parse_stdlib(html), parse_html_fast(html)]
-        for tree in trees:
-            body = tree.children[0]
-            tags = [c.tag for c in body.children if not isinstance(c, str)]
-            # p auto-closed by hr → hr and the trailing 'b' are siblings
-            assert tags == ["p", "hr"], (html, tags)
-            p = body.children[0]
-            assert [c for c in p.children if isinstance(c, str)] == ["a"]
-            assert body.children[-1] == "b"
+        pages = [parse(html, _ALL) for parse in (parse_stdlib, parse_html_fast)]
+        for page in pages:
+            # p auto-closed by hr → hr and the trailing 'b' sit in body
+            assert page.tokens == ["a", "b"]
+            (p,) = page.candidates
+            assert (p[4], p[2], p[3]) == ("p", 0, 1)
+            assert page.media == [("hr", 1, None)]
+            assert p[7] == p[8]  # no media inside the p
+        assert pages[0] == pages[1]
         orig = X.parse_html
         try:
             X.parse_html = parse_stdlib
@@ -88,14 +106,11 @@ def test_fast_parser_rejects_non_utf8():
 
 
 def test_fast_parser_rawtext_and_entities():
-    tree = parse_html_fast(
+    page = parse_html_fast(
         "<body><script>if (a<b) {'</div>'}</script><p>x &amp; y &#65;</p></body>"
     )
-    body = tree.children[0]
-    tags = [c.tag for c in body.children if not isinstance(c, str)]
-    assert tags == ["script", "p"]
-    p = body.children[1]
-    assert "".join(c for c in p.children if isinstance(c, str)) == "x & y A"
+    assert page.tokens == ["x", "&", "y", "A"]
+    assert [c[4] for c in page.candidates] == ["p"]
 
 
 # balanced-HTML strategy: properly nested tags over normal text — the
@@ -146,6 +161,7 @@ def test_equivalent_to_stdlib_on_balanced_html(body):
     finally:
         X.parse_html = orig
     assert a == b
+    assert parse_stdlib(html, _ALL) == parse_html_fast(html, _ALL)
 
 
 _ATTR_CASES = [
@@ -197,36 +213,37 @@ _SELF_CLOSE_CASES = [
 
 
 def test_self_close_slash_binding_matches_stdlib():
-    def shape(node):
-        return [
-            c if isinstance(c, str) else (c.tag, shape(c))
-            for c in node.children
-        ]
-
     for case in _SELF_CLOSE_CASES:
         html = f"<html><body>{case}</body></html>"
-        a, b = shape(parse_stdlib(html)), shape(parse_html_fast(html))
+        a, b = parse_stdlib(html, _ALL), parse_html_fast(html, _ALL)
         assert a == b, (case, a, b)
 
 
+def _first_tag_attrs(events):
+    from ocrd_segment_spark.kernel.walk import EMPTY, OPEN
+
+    return next(a for kind, tag, a in events if kind in (OPEN, EMPTY) and tag not in ("html", "body"))
+
+
 def test_attr_parity_between_parsers():
-    """node_attrs() must agree between the stdlib builder (eager dict)
-    and the fast parser (lazy raw-text tokenization) on every
+    """The fast tokenizer's raw attribute text, tokenized by
+    parse_raw_attrs, must give the dict html.parser reports, on every
     attribute syntax the kernel's gated paths read (kernel 1.5.0)."""
-    from ocrd_segment_spark.kernel.htmlparse import node_attrs
+    from ocrd_segment_spark.kernel.htmlparse import _EventSource
+    from ocrd_segment_spark.kernel.htmlparse_fast import parse_raw_attrs, tokenize
 
     for case in _ATTR_CASES:
         html = f"<html><body>{case}</body></html>"
-        got = []
-        for parse in (parse_stdlib, parse_html_fast):
-            body = parse(html).children[0]
-            el = next(c for c in body.children if not isinstance(c, str))
-            got.append(node_attrs(el))
+        source = _EventSource()
+        source.feed(html)
+        source.close()
+        got = [
+            dict(_first_tag_attrs(source.events)),
+            parse_raw_attrs(_first_tag_attrs(tokenize(html))),
+        ]
         assert got[0] == got[1], (case, got)
     # values survive: spot-check one
-    body = parse_html_fast("<body><p style='font-weight: bold' dir=rtl>x</p></body>").children[0]
-    from ocrd_segment_spark.kernel.htmlparse import node_attrs as na
-    attrs = na(body.children[0])
+    attrs = parse_raw_attrs(" style='font-weight: bold' dir=rtl")
     assert attrs["style"] == "font-weight: bold" and attrs["dir"] == "rtl"
 
 

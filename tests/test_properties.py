@@ -173,7 +173,8 @@ def test_plausibilize_extract_calls_equal_pair_loop(monkeypatch):
     real = iv.plausibilize
 
     def record(starts, ends, depths, *rest):
-        calls.append((starts.copy(), ends.copy(), depths.copy()))
+        # the kernel passes Python lists; compare as int64 arrays
+        calls.append(tuple(np.array(v, dtype=np.int64) for v in (starts, ends, depths)))
         return real(starts, ends, depths, *rest)
 
     with monkeypatch.context() as m:
@@ -386,8 +387,8 @@ def test_preserve_pre_verbatim_property(chunks, inline):
     region slices extracted_text to EXACTLY the spec normalization of
     the raw bytes (\r\n/\r -> \n, one leading \n dropped), with
     inline element boundaries contributing nothing; spans stay a
-    disjoint tiling. Mirrors _pre_verbatim independently (string ops
-    only, no tree walk)."""
+    disjoint tiling. Mirrors the walker's verbatim <pre> rule
+    independently (string ops only)."""
     from ocrd_segment_spark.config import ExtractParams
 
     if inline:
