@@ -201,26 +201,17 @@ def extract_document(
     k_starts = [k[0] for k in kept]
     k_ends = [k[2] for k in kept]
 
-    # stage 5: simplify (gap-merge) then spread, if enabled — the list
-    # forms of intervals.simplify_gap_merge / intervals.spread. A merged
-    # region keeps its first member's identity.
-    tol = params.simplify_gap_tolerance
-    if tol > 0 and len(kept) > 1:
-        m_kept, m_starts, m_ends = [kept[0]], [k_starts[0]], [k_ends[0]]
-        for j in range(1, len(kept)):
-            if k_starts[j] - k_ends[j - 1] > tol:
-                m_kept.append(kept[j])
-                m_starts.append(k_starts[j])
-                m_ends.append(k_ends[j])
-            else:
-                m_ends[-1] = k_ends[j]
-        kept, k_starts, k_ends = m_kept, m_starts, m_ends
-    dist = params.spread_chars
-    if dist > 0:
-        # each side grows by up to dist, at most to the gap midpoint
-        mids = [(e + s + 1) // 2 for e, s in zip(k_ends, k_starts[1:])]
-        k_starts = [max(s - dist, b) for s, b in zip(k_starts, [0] + mids)]
-        k_ends = [min(e + dist, b) for e, b in zip(k_ends, mids + [doc_len])]
+    # stage 5: simplify (gap-merge) then spread, if enabled
+    if params.simplify_gap_tolerance > 0 and len(kept) > 1:
+        group, k_starts, k_ends = intervals.simplify_gap_merge(
+            k_starts, k_ends, params.simplify_gap_tolerance
+        )
+        # merged region inherits the first member's identity
+        kept = [k for j, k in enumerate(kept) if j == 0 or group[j] != group[j - 1]]
+    if params.spread_chars > 0:
+        k_starts, k_ends = intervals.spread(
+            k_starts, k_ends, params.spread_chars, doc_len
+        )
 
     # stage 6: serialize in reading order; re-offset spans (G17)
     sep = params.region_separator

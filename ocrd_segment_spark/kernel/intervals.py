@@ -216,45 +216,39 @@ def _plausibilize_pairwise(
     return actions, s, e
 
 
-def simplify_gap_merge(starts: np.ndarray, ends: np.ndarray, tolerance: int):
+def simplify_gap_merge(starts, ends, tolerance: int):
     """G9 analog (reference repair.py:603-630 ``simplify``): merge
     adjacent surviving spans whose gap is <= ``tolerance`` chars.
-    Input must be sorted by start and non-overlapping. Returns
+    Input must be sorted by start and non-overlapping. Returns lists
     (group_id per span, merged_starts, merged_ends) where group_id maps
-    each input span to its output span index."""
-    n = len(starts)
-    group = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return group, np.asarray(starts), np.asarray(ends)
-    s = np.asarray(starts, dtype=np.int64)
-    e = np.asarray(ends, dtype=np.int64)
-    gap = s[1:] - e[:-1]
-    new_group = np.concatenate(([False], gap > tolerance))
-    group = np.cumsum(new_group)
-    # first/last per group (spans are sorted): first index where group changes
-    first = np.concatenate(([0], np.nonzero(new_group)[0]))
-    last = np.concatenate((np.nonzero(new_group)[0] - 1, [n - 1]))
-    out_s = s[first]
-    out_e = e[last]
+    each input span to its output span index. Plain lists: a page holds
+    a handful of kept spans, where numpy's per-call cost exceeds the
+    arithmetic."""
+    group: list[int] = []
+    out_s: list[int] = []
+    out_e: list[int] = []
+    prev_e = None
+    for s, e in zip(starts, ends):
+        if prev_e is None or s - prev_e > tolerance:
+            out_s.append(s)
+            out_e.append(e)
+        else:
+            out_e[-1] = e
+        group.append(len(out_s) - 1)
+        prev_e = e
     return group, out_s, out_e
 
 
-def spread(starts: np.ndarray, ends: np.ndarray, distance: int, doc_len: int):
+def spread(starts, ends, distance: int, doc_len: int):
     """G10 analog (reference repair.py:592-601 ``spread_segments``):
     grow each span by up to ``distance`` chars on each side. The
     reference subtracts only the union of others' ORIGINAL outlines,
     which lets two buffered segments overlap inside a shared gap; the
     frozen 1-D rule is stricter: each side may grow at most to the
     gap's midpoint, so output is always non-overlapping (touching
-    allowed). Input sorted by start, non-overlapping."""
-    s = np.asarray(starts, dtype=np.int64).copy()
-    e = np.asarray(ends, dtype=np.int64).copy()
-    n = len(s)
-    if n == 0:
-        return s, e
-    mid = (e[:-1] + s[1:] + 1) // 2  # gap midpoints (right-biased)
-    left_bound = np.concatenate(([0], mid))
-    right_bound = np.concatenate((mid, [doc_len]))
-    s = np.maximum(s - distance, left_bound)
-    e = np.minimum(e + distance, right_bound)
-    return s, e
+    allowed). Input sorted by start, non-overlapping; returns lists."""
+    starts, ends = list(starts), list(ends)
+    mid = [(e + s + 1) // 2 for e, s in zip(ends, starts[1:])]  # right-biased
+    out_s = [max(s - distance, b) for s, b in zip(starts, [0] + mid)]
+    out_e = [min(e + distance, b) for e, b in zip(ends, mid + [doc_len])]
+    return out_s, out_e

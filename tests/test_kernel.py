@@ -76,18 +76,16 @@ def test_plausibilize_disjoint_untouched():
 
 
 def test_simplify_gap_merge():
-    group, s, e = iv.simplify_gap_merge(
-        np.array([0, 12, 30]), np.array([10, 20, 40]), tolerance=2
-    )
-    assert group.tolist() == [0, 0, 1]
-    assert s.tolist() == [0, 30] and e.tolist() == [20, 40]
+    group, s, e = iv.simplify_gap_merge([0, 12, 30], [10, 20, 40], tolerance=2)
+    assert group == [0, 0, 1]
+    assert s == [0, 30] and e == [20, 40]
 
 
 def test_spread_bounded_by_gap_midpoint():
-    s, e = iv.spread(np.array([5, 20]), np.array([10, 30]), distance=100, doc_len=50)
+    s, e = iv.spread([5, 20], [10, 30], distance=100, doc_len=50)
     # gap [10,20) midpoint 15: each side grows to it, never past
-    assert s.tolist() == [0, 15]
-    assert e.tolist() == [15, 50]
+    assert s == [0, 15]
+    assert e == [15, 50]
 
 
 # ---------------------------------------------------------------- htmlparse

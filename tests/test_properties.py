@@ -209,14 +209,13 @@ def test_spread_no_overlap_within_bounds(raw, dist):
         starts_l.append(s0)
         ends_l.append(s0 + length)
         pos = s0 + length
-    starts = np.array(starts_l, dtype=np.int64)
-    ends = np.array(ends_l, dtype=np.int64)
-    doc_len = int(ends[-1] + 100)
-    s, e = iv.spread(starts, ends, dist, doc_len)
-    assert (s >= 0).all() and (e <= doc_len).all()
+    doc_len = ends_l[-1] + 100
+    s, e = iv.spread(starts_l, ends_l, dist, doc_len)
+    assert all(x >= 0 for x in s) and all(x <= doc_len for x in e)
     assert all(s[i + 1] >= e[i] for i in range(len(s) - 1))
     # spans only grow
-    assert (s <= starts).all() and (e >= ends).all()
+    assert all(a <= b for a, b in zip(s, starts_l))
+    assert all(a >= b for a, b in zip(e, ends_l))
 
 
 @given(st.data())
