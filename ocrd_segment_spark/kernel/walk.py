@@ -16,9 +16,11 @@ The stack frame of an open element carries every ancestor fact the
 later stages need, so nothing climbs the ancestor chain per region:
 the boilerplate/figure/table bits for classification, the nearest
 valid ``dir``, the link depth, the style state, and the text mode
-(normal, skipped NONTEXT subtree, verbatim ``<pre>``). An element is a
-region candidate when it closes (post-order), exactly as the former
-tree walk decided it.
+(normal, skipped NONTEXT subtree, verbatim ``<pre>``). Candidacy is
+decided when an element closes (post-order): a candidate tag with
+tokens inside becomes a region candidate unless a descendant already
+is one — then only if it also holds tokens of its own and is not
+``<body>``.
 """
 
 from __future__ import annotations
@@ -239,6 +241,11 @@ def walk(events, params, attrs_of) -> Page | None:
                 pre_counter += 1
                 if kind == empty_ev or x in void_tags:
                     continue
+                # style state: the OR of the enclosing style tags'
+                # TextStyle bits (reference extract_words.py:127-145),
+                # or under css_styles the css tuple, where an inline
+                # style= folds in with override semantics (an explicit
+                # font-weight: normal clears an enclosing <b>'s bit)
                 if css:
                     st = top[7]
                     bit = style_tags.get(x, 0)
