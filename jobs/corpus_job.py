@@ -9,6 +9,10 @@ runs, as one spark-submit entrypoint:
         [--min-quality 0.5] [--min-tokens 5] [--langs en,de] \\
         [--stats /path/to/stats] [--python-parallelism N]
 
+The flags the stream job takes too are defined once, with their checks,
+in ocrd_segment_spark/jobargs.py; this job adds its side outputs and
+post-write stages.
+
 Stages (each narrow or one bounded shuffle):
 
 0. pre-gates   — optional cheap filters BEFORE extraction, so excluded
@@ -33,8 +37,9 @@ Stages (each narrow or one bounded shuffle):
                  reference LMs, collected model broadcast) and
                  ``--max-compression`` add the round-3 quality-signal
                  drops — entropy is column math, LM/compression are
-                 pass-through mapInPandas appends, ALL in the same
-                 linear lineage (no join back, no re-extraction);
+                 scalar pandas_udf columns (textstats.with_lm_bits /
+                 with_compression_cols), ALL in the same linear
+                 lineage (no join back, no re-extraction);
                  ``--script-screen`` drops mixed-script documents
                  (operators/scriptmix, pure column math, same pass).
 4. exact dedup — keep the canonical (min url) copy per content hash:
@@ -64,83 +69,14 @@ Stages (each narrow or one bounded shuffle):
 
 from __future__ import annotations
 
-import argparse
 from functools import partial
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--stats", default=None)
-    ap.add_argument(
-        "--input-format", choices=("pages", "pdf"), default="pages",
-        help="'pages' = canonical (url, html) parquet through the"
-        " kernel; 'pdf' = (url, data) PDF blobs through the frozen"
-        " text-subset parser (sources/pdf) — language id runs as the"
-        " standalone pass, every downstream filter stage is shared",
-    )
-    ap.add_argument("--min-quality", type=float, default=0.5)
-    ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--langs", default=None, help="comma list; default: keep all")
-    ap.add_argument(
-        "--lang-margin",
-        type=float,
-        default=None,
-        help="per-char top-2 log-likelihood gap below which language id"
-        " abstains to 'und' (langid frozen step 6; suggested:"
-        " operators/langid.DEFAULT_MARGIN=0.1). Off by default — the"
-        " pure-argmax behavior of earlier rounds",
-    )
-    ap.add_argument(
-        "--preserve-pre",
-        action="store_true",
-        help="extract <pre> subtrees with VERBATIM whitespace (kernel"
-        " 1.6.0 params.preserve_pre): code blocks keep indentation and"
-        " blank lines instead of the collapse-and-join rule",
-    )
-    ap.add_argument(
-        "--gopher",
-        action="store_true",
-        help="apply the Gopher-style repetition/quality rules"
-        " (operators/textstats.gopher_filter defaults) as a drop stage",
-    )
-    ap.add_argument(
-        "--entropy-min",
-        type=float,
-        default=None,
-        help="drop documents whose character entropy (bits) is below"
-        " this — the degenerate-text signal (keyboard mash, fills)",
-    )
-    ap.add_argument(
-        "--lm-ref",
-        default=None,
-        help="parquet of trusted reference documents (text, lang) to"
-        " train per-language char-bigram LMs from (CCNet-style);"
-        " requires --lm-max-bits",
-    )
-    ap.add_argument(
-        "--lm-max-bits",
-        type=float,
-        default=None,
-        help="drop documents scoring above this bits-per-bigram under"
-        " their predicted language's reference LM; docs with no"
-        " evidence (sub-2-char, unmodeled lang) are KEPT",
-    )
-    ap.add_argument(
-        "--max-compression",
-        type=float,
-        default=None,
-        help="drop documents whose zlib compression ratio exceeds this"
-        " (already-compressed/binary junk; Dolma-style signal)",
-    )
-    ap.add_argument(
-        "--blocklist",
-        default=None,
-        help="parquet of blocked registered domains (column: domain);"
-        " pages whose url's registered domain matches are dropped"
-        " before extraction even runs (C4-style exclusion)",
-    )
+    from ocrd_segment_spark import jobargs
+
+    ap = jobargs.parser(__doc__)
+    ap.add_argument("--stats", dest="stats_path", default=None)
     ap.add_argument(
         "--host-priors",
         action="store_true",
@@ -158,57 +94,8 @@ def main() -> None:
         " commits (post-write pattern: one cheap aggregate scan)",
     )
     ap.add_argument(
-        "--count-bpe",
-        action="store_true",
-        help="meter the corpus in SUBWORD tokens (operators/bpe greedy"
-        " longest-match): adds n_bpe_tokens/n_unk_pieces columns and a"
-        " kept_bpe_tokens funnel total — pipelines budget compute in"
-        " tokenizer tokens, not whitespace words",
-    )
-    ap.add_argument(
-        "--bpe-vocab",
-        default=None,
-        help="piece table (parquet, or .csv with header; column:"
-        " piece) to meter --count-bpe in a REAL tokenizer's"
-        " vocabulary instead of the committed toy (operators/"
-        "bpe.load_vocab: model-sized collect, case-folded, deduped)",
-    )
-    ap.add_argument(
-        "--quality-clf",
-        action="store_true",
-        help="learned keep/drop stage (operators/quality_clf hashed"
-        " bag-of-tokens logistic model): docs whose round-6 logit is"
-        " negative drop; zero-token docs are kept (no evidence); adds"
-        " the clf_logit audit column and the dropped_clf funnel count",
-    )
-    ap.add_argument(
-        "--honor-noai",
-        action="store_true",
-        help="honor the noai/noimageai robots-meta opt-out"
-        " (operators/headmeta.with_ai_optout): noai pages drop before"
-        " extraction (dropped_noai funnel count); with --image-pairs,"
-        " noimageai pages are excluded from the pair harvest",
-    )
-    ap.add_argument(
-        "--drop-soft404",
-        action="store_true",
-        help="pre-extraction soft-404 screen (operators/softerrors"
-        ".soft404_page_stage): pages whose harvested <title> carries an"
-        " error phrase, or whose tag-stripped head is tiny AND carries"
-        " one, drop before paying kernel time; adds the dropped_soft404"
-        " funnel count",
-    )
-    ap.add_argument(
-        "--script-screen",
-        action="store_true",
-        help="drop mixed-script documents (operators/scriptmix: no"
-        " script holds 95%% of the letters, 20-letter floor — SEO"
-        " cloaking / homoglyph spam / wrong-decode signal); adds the"
-        " main_script + main_fraction audit columns and the"
-        " dropped_script funnel count",
-    )
-    ap.add_argument(
         "--tables",
+        dest="tables_path",
         default=None,
         help="optional path: side-output of GitHub-markdown serialized"
         " HTML tables (operators/tables) harvested from the RAW crawl"
@@ -217,6 +104,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--image-pairs",
+        dest="image_pairs_path",
         default=None,
         help="optional path: side-output of (url, image_url, alt_text)"
         " image-text pair candidates (operators/images: <img src alt>"
@@ -252,25 +140,11 @@ def main() -> None:
     )
     ap.add_argument(
         "--diff-prev",
+        dest="diff_prev_path",
         default=None,
         help="path of the PREVIOUS corpus parquet: adds diff_added/"
         "removed/changed/unchanged counters vs the newly written"
         " corpus (operators/snapshots.corpus_diff, post-write stage)",
-    )
-    ap.add_argument(
-        "--sniff-charset",
-        action="store_true",
-        help="charset-repair pre-stage: decode legacy/BOM pages to clean"
-        " utf-8 before any html-reading stage (functions/charset)",
-    )
-    ap.add_argument(
-        "--sniff-content-type",
-        action="store_true",
-        help="drop non-html fetch bodies by magic bytes BEFORE"
-        " extraction (functions/multimodal.with_content_type): pdfs,"
-        " images and archives mislabeled as pages never pay kernel"
-        " time; runs AFTER --sniff-charset when both are on, so"
-        " utf-16 html is decoded before it is classified",
     )
     ap.add_argument(
         "--snapshot-collapse",
@@ -291,6 +165,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--outlinks",
+        dest="outlinks_path",
         default=None,
         help="optional path: write the host-grain link graph"
         " (operators/linkgraph.outlinks -> host_edges) harvested from"
@@ -300,6 +175,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--feed-links",
+        dest="feed_links_path",
         default=None,
         help="optional path: write the feed urls pages advertise in"
         " their heads (operators/headmeta.feed_links) — the discovery"
@@ -309,6 +185,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--host-ranks",
+        dest="host_ranks_path",
         default=None,
         help="parquet of host ranks (node, rank — jobs/linkgraph_job"
         " output); pages on hosts ranking below --host-rank-min drop"
@@ -334,6 +211,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--pack-sequences",
+        dest="pack_seq_tokens",
         type=int,
         default=None,
         help="write <output>_packed: the GPT-style packed-training-"
@@ -344,6 +222,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--decontaminate",
+        dest="decontaminate_path",
         default=None,
         help="optional path: parquet of benchmark/eval documents"
         " (doc_id, text); corpus docs sharing word-5-gram shingles with"
@@ -355,82 +234,28 @@ def main() -> None:
         help="optional path: write MinHash-LSH candidate pairs over the"
         " final corpus for human-thresholded near-dup review",
     )
-    ap.add_argument("--python-parallelism", type=int, default=None)
-    args = ap.parse_args()
-    from ocrd_segment_spark.operators.pre_gates import refuse_html_on_pdf
-
-    if args.preserve_spans and args.boilerplate_min_df is None:
-        ap.error("--preserve-spans requires --boilerplate-min-df"
-                 " (it selects WHICH boilerplate variant runs)")
     # --preserve-spans IS legal on pdf input: BT blocks are real
     # region_spans (sources/pdf.pdf_pages), so the span-preserving
     # boilerplate strip (page headers/footers repeated across a site's
     # PDFs) rebuilds clean text with remapped spans exactly like the
     # HTML lane
-    refuse_html_on_pdf(ap, args, extra=tuple(d for d, _, _ in SIDE_OUTPUTS))
-    if args.bpe_vocab is not None and not args.count_bpe:
-        ap.error("--bpe-vocab requires --count-bpe"
-                 " (a vocabulary with no metering stage does nothing)")
-    if (args.lm_ref is None) != (args.lm_max_bits is None):
-        ap.error("--lm-ref and --lm-max-bits must be given together"
-                 " (one alone would silently skip the LM filter stage)")
-    if (args.host_ranks is None) != (args.host_rank_min is None):
+    args = jobargs.parse(ap, html_only=tuple(k for k, _, _ in SIDE_OUTPUTS))
+    if args.preserve_spans and args.boilerplate_min_df is None:
+        ap.error("--preserve-spans requires --boilerplate-min-df"
+                 " (it selects WHICH boilerplate variant runs)")
+    if (args.host_ranks_path is None) != (args.host_rank_min is None):
         ap.error("--host-ranks and --host-rank-min must be given"
                  " together (one alone would silently skip the host-"
                  "rank drop stage)")
     if args.shard_tokens is not None and args.shard_tokens < 1:
         ap.error("--shard-tokens must be >= 1")
-    if args.pack_sequences is not None and args.pack_sequences < 1:
+    if args.pack_seq_tokens is not None and args.pack_seq_tokens < 1:
         ap.error("--pack-sequences must be >= 1")
 
     from ocrd_segment_spark.session import submit_session
 
     spark = submit_session("ocrd-segment-corpus")
-    build_corpus(
-        spark,
-        args.input,
-        args.output,
-        stats_path=args.stats,
-        input_format=args.input_format,
-        min_quality=args.min_quality,
-        min_tokens=args.min_tokens,
-        langs=args.langs.split(",") if args.langs else None,
-        lang_margin=args.lang_margin,
-        preserve_pre=args.preserve_pre,
-        gopher=args.gopher,
-        blocklist_path=args.blocklist,
-        entropy_min=args.entropy_min,
-        lm_ref_path=args.lm_ref,
-        lm_max_bits=args.lm_max_bits,
-        max_compression=args.max_compression,
-        quality_clf=args.quality_clf,
-        script_screen=args.script_screen,
-        drop_soft404=args.drop_soft404,
-        honor_noai=args.honor_noai,
-        tables_path=args.tables,
-        image_pairs_path=args.image_pairs,
-        count_bpe=args.count_bpe,
-        bpe_vocab_path=args.bpe_vocab,
-        card=args.card,
-        host_priors=args.host_priors,
-        boilerplate_min_df=args.boilerplate_min_df,
-        preserve_spans=args.preserve_spans,
-        redact_pii=args.redact_pii,
-        decontaminate_path=args.decontaminate,
-        near_dup_audit=args.near_dup_audit,
-        snapshot_collapse=args.snapshot_collapse,
-        sniff_charset=args.sniff_charset,
-        sniff_content_type=args.sniff_content_type,
-        diff_prev_path=args.diff_prev,
-        honor_meta=args.honor_meta,
-        outlinks_path=args.outlinks,
-        feed_links_path=args.feed_links,
-        host_ranks_path=args.host_ranks,
-        host_rank_min=args.host_rank_min,
-        shard_tokens=args.shard_tokens,
-        pack_seq_tokens=args.pack_sequences,
-        python_parallelism=args.python_parallelism,
-    )
+    build_corpus(spark, **vars(args))
     spark.stop()
 
 
@@ -510,12 +335,12 @@ def _image_pairs(pages, o):
     )
 
 
-# (argparse dest — build_corpus takes ``<dest>_path``, funnel key, builder)
+# (build_corpus keyword of the output path, funnel key, builder)
 SIDE_OUTPUTS = (
-    ("outlinks", "outlink_edges", _outlink_edges),
-    ("feed_links", "feed_links_found", _feed_links),
-    ("tables", "tables_extracted", _tables),
-    ("image_pairs", "image_pairs_found", _image_pairs),
+    ("outlinks_path", "outlink_edges", _outlink_edges),
+    ("feed_links_path", "feed_links_found", _feed_links),
+    ("tables_path", "tables_extracted", _tables),
+    ("image_pairs_path", "image_pairs_found", _image_pairs),
 )
 
 
@@ -633,12 +458,10 @@ def build_corpus(
 
     pages = spark.read.parquet(input_path)
     side_counts = {
-        key: _observed_write(
-            build(pages, opts), F.count(F.lit(1)), opts[dest + "_path"]
-        )
-        if opts[dest + "_path"] is not None
+        key: _observed_write(build(pages, opts), F.count(F.lit(1)), opts[kw])
+        if opts[kw] is not None
         else -1
-        for dest, key, build in SIDE_OUTPUTS
+        for kw, key, build in SIDE_OUTPUTS
     }
     # pre-extraction gates (operators/pre_gates): excluded pages never
     # pay kernel time, and each gate's drop count rides the terminal
@@ -671,11 +494,7 @@ def build_corpus(
         )
     # per-language reference LMs (CCNet shape), scored under each
     # document's PREDICTED language
-    lm_table = (
-        reference_lm_table(spark, lm_ref_path)
-        if lm_ref_path is not None and lm_max_bits is not None
-        else None
-    )
+    lm_table = reference_lm_table(spark, lm_ref_path, lm_max_bits)
     # the six-stage quality filter chain — ONE shared definition with
     # the streaming job (operators/corpus_filters; review pass 3 found
     # the chain hand-mirrored in both jobs, the exact drift channel
@@ -699,18 +518,12 @@ def build_corpus(
         # subword metering (pure JVM column fold, same narrow pass);
         # the kept-corpus token total rides the write Observation below
         from ocrd_segment_spark.operators.bpe import (
-            VOCAB,
             load_vocab,
             with_bpe_counts,
         )
 
-        vocab = (
-            load_vocab(spark, bpe_vocab_path)
-            if bpe_vocab_path is not None
-            else VOCAB
-        )
         scored = with_bpe_counts(scored, text_col="extracted_text",
-                                 vocab=vocab)
+                                 vocab=load_vocab(spark, bpe_vocab_path))
     else:
         scored = scored.withColumn("n_bpe_tokens", F.lit(None).cast("long"))
 
@@ -767,7 +580,7 @@ def build_corpus(
     # 0 means the stage ran and dropped nothing
     stage_ran = {
         "keep_entropy": entropy_min is not None,
-        "keep_lm": lm_ref_path is not None and lm_max_bits is not None,
+        "keep_lm": lm_table is not None,
         "keep_compression": max_compression is not None,
         "keep_clf": quality_clf,
         "keep_script": script_screen,

@@ -6,10 +6,12 @@ jobs/corpus_job.py, as one spark-submit entrypoint.
         --input  /path/to/pages_parquet_dir \\
         --output /path/to/corpus \\
         --checkpoint /path/to/ckpt \\
-        [--min-quality 0.5] [--min-tokens 5] [--gopher] \\
-        [--entropy-min X] [--lm-ref PATH --lm-max-bits X] \\
-        [--max-compression X] [--blocklist PATH] [--count-bpe] \\
-        [--available-now] [--python-parallelism N]
+        [--available-now] [--honor-noindex] \\
+        [--min-quality 0.5] [--min-tokens 5] [--gopher] [...]
+
+Every flag but ``--checkpoint``, ``--available-now`` and
+``--honor-noindex`` is shared with the batch job and defined once, with
+its checks, in ocrd_segment_spark/jobargs.py; ``--help`` lists them.
 
 New page files landing in ``--input`` are picked up by the file
 source; each microbatch runs the SAME narrow transform chain as the
@@ -42,8 +44,6 @@ differs from what is already committed.
 
 from __future__ import annotations
 
-import argparse
-
 # the frozen streamed-output column set: extraction output + the
 # always-on quality columns + one signal column per optional stage
 # (null when its stage is off). Order is part of the contract.
@@ -71,77 +71,10 @@ SINK_COLUMNS = (
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    from ocrd_segment_spark import jobargs
+
+    ap = jobargs.parser(__doc__)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--min-quality", type=float, default=0.5)
-    ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--langs", default=None, help="comma list; default: keep all")
-    ap.add_argument(
-        "--lang-margin",
-        type=float,
-        default=None,
-        help="per-char top-2 gap below which language id abstains to"
-        " 'und' (same frozen rule as the batch job)",
-    )
-    ap.add_argument(
-        "--preserve-pre", action="store_true",
-        help="verbatim-whitespace <pre> extraction (kernel 1.6.0),"
-        " parity with corpus_job --preserve-pre",
-    )
-    ap.add_argument("--gopher", action="store_true")
-    ap.add_argument(
-        "--quality-clf",
-        action="store_true",
-        help="learned keep/drop stage (same frozen model as the batch"
-        " job); clf_logit rides the sink as a signal column",
-    )
-    ap.add_argument("--entropy-min", type=float, default=None)
-    ap.add_argument("--lm-ref", default=None)
-    ap.add_argument("--lm-max-bits", type=float, default=None)
-    ap.add_argument("--max-compression", type=float, default=None)
-    ap.add_argument(
-        "--blocklist",
-        default=None,
-        help="parquet with a 'domain' column; pages whose registered"
-        " domain matches are dropped BEFORE extraction (stream-static"
-        " broadcast join, same semantics as the batch job)",
-    )
-    ap.add_argument(
-        "--count-bpe",
-        action="store_true",
-        help="append n_bpe_tokens / n_unk_pieces to kept rows (pure"
-        " JVM column fold, same vocabulary as the batch job)",
-    )
-    ap.add_argument(
-        "--bpe-vocab",
-        default=None,
-        help="piece table for --count-bpe (parquet / .csv, column:"
-        " piece) — a real tokenizer's vocabulary; loaded once before"
-        " the stream starts",
-    )
-    ap.add_argument(
-        "--script-screen",
-        action="store_true",
-        help="drop mixed-script documents (same frozen rule as the"
-        " batch job; operators/scriptmix) — main_script/main_fraction"
-        " ride the sink as signal columns",
-    )
-    ap.add_argument(
-        "--honor-noai",
-        action="store_true",
-        help="drop noai-opted-out pages BEFORE extraction (row-local"
-        " robots-meta token match, streaming-legal; batch parity for"
-        " corpus_job --honor-noai)",
-    )
-    ap.add_argument(
-        "--drop-soft404",
-        action="store_true",
-        help="drop soft-404 error pages BEFORE extraction (shared"
-        " stage with the batch job: operators/softerrors"
-        ".soft404_page_stage; row-local column math, streaming-legal)",
-    )
     ap.add_argument(
         "--honor-noindex",
         action="store_true",
@@ -152,70 +85,13 @@ def main() -> None:
         " unbounded stream — run canonical collapse as a batch"
         " compaction stage instead",
     )
-    ap.add_argument(
-        "--sniff-charset", action="store_true",
-        help="charset-repair pre-stage before html-reading stages"
-        " (batch-job parity; functions/charset)",
-    )
-    ap.add_argument(
-        "--sniff-content-type", action="store_true",
-        help="drop non-html bodies by magic bytes before extraction"
-        " (batch-job parity; functions/multimodal.with_content_type);"
-        " row-local column math, streaming-legal, runs after"
-        " --sniff-charset when both are on",
-    )
-    ap.add_argument(
-        "--input-format", choices=("pages", "pdf"), default="pages",
-        help="'pages' = canonical (url, html) stream through the"
-        " kernel; 'pdf' = (url, data) PDF blob stream through the"
-        " frozen text-subset parser (sources/pdf) — batch-job parity"
-        " for corpus_job --input-format pdf",
-    )
     ap.add_argument("--available-now", action="store_true")
-    ap.add_argument("--python-parallelism", type=int, default=None)
-    args = ap.parse_args()
-    from ocrd_segment_spark.operators.pre_gates import refuse_html_on_pdf
-
-    refuse_html_on_pdf(ap, args)
-    if args.bpe_vocab is not None and not args.count_bpe:
-        ap.error("--bpe-vocab requires --count-bpe"
-                 " (a vocabulary with no metering stage does nothing)")
-    if (args.lm_ref is None) != (args.lm_max_bits is None):
-        ap.error("--lm-ref and --lm-max-bits must be given together"
-                 " (one alone would silently skip the LM filter stage)")
+    args = jobargs.parse(ap)
 
     from ocrd_segment_spark.session import submit_session
 
     spark = submit_session("ocrd-segment-stream")
-    q = run_stream(
-        spark,
-        args.input,
-        args.output,
-        args.checkpoint,
-        min_quality=args.min_quality,
-        min_tokens=args.min_tokens,
-        langs=args.langs.split(",") if args.langs else None,
-        lang_margin=args.lang_margin,
-        preserve_pre=args.preserve_pre,
-        gopher=args.gopher,
-        quality_clf=args.quality_clf,
-        script_screen=args.script_screen,
-        drop_soft404=args.drop_soft404,
-        honor_noai=args.honor_noai,
-        entropy_min=args.entropy_min,
-        lm_ref_path=args.lm_ref,
-        lm_max_bits=args.lm_max_bits,
-        max_compression=args.max_compression,
-        blocklist_path=args.blocklist,
-        honor_noindex=args.honor_noindex,
-        sniff_charset=args.sniff_charset,
-        sniff_content_type=args.sniff_content_type,
-        count_bpe=args.count_bpe,
-        bpe_vocab_path=args.bpe_vocab,
-        input_format=args.input_format,
-        available_now=args.available_now,
-        python_parallelism=args.python_parallelism,
-    )
+    q = run_stream(spark, **vars(args))
     q.awaitTermination()
     spark.stop()
 
@@ -259,6 +135,7 @@ def run_stream(
     opts = dict(locals())
     from pyspark.sql import functions as F
 
+    from ocrd_segment_spark.operators.bpe import load_vocab, with_bpe_counts
     from ocrd_segment_spark.operators.corpus_filters import (
         KEEP_COLS,
         keep_all,
@@ -271,23 +148,11 @@ def run_stream(
     )
     from ocrd_segment_spark.streaming.extract_stream import stream_extract
 
-    # per-language reference LMs collected ONCE before the stream
-    # starts (model-sized, batch read) — microbatches only fold
-    lm_table = (
-        reference_lm_table(spark, lm_ref_path)
-        if lm_ref_path is not None and lm_max_bits is not None
-        else None
-    )
-
-    bpe_vocab = None
-    if count_bpe:
-        from ocrd_segment_spark.operators.bpe import VOCAB, load_vocab
-
-        bpe_vocab = (
-            load_vocab(spark, bpe_vocab_path)
-            if bpe_vocab_path is not None
-            else VOCAB
-        )
+    # per-language reference LMs and the BPE vocabulary are collected
+    # ONCE before the stream starts (model-sized, batch reads) —
+    # microbatches only fold (closure constants)
+    lm_table = reference_lm_table(spark, lm_ref_path, lm_max_bits)
+    bpe_vocab = load_vocab(spark, bpe_vocab_path) if count_bpe else None
 
     # the pre-extraction gates: the SAME table as the batch job
     # (operators/pre_gates), streaming-legal entries only. Static inputs
@@ -315,17 +180,13 @@ def run_stream(
             python_parallelism=python_parallelism,
             # the stream needs no per-stage drop counts, so failing
             # rows drop BEFORE the Python LM/compression stages
-            # (predicates don't push through mapInPandas on their own)
+            # (predicates don't push into Python UDFs on their own)
             early_filter=True,
         )
         kept = flagged.filter(keep_all()).drop(*KEEP_COLS)
         if count_bpe:
             # subword metering on kept rows only (pure JVM column
-            # fold) — batch-job parity for --count-bpe; the vocab is
-            # resolved ONCE before the stream starts (closure constant
-            # across microbatches)
-            from ocrd_segment_spark.operators.bpe import with_bpe_counts
-
+            # fold) — batch-job parity for --count-bpe
             kept = with_bpe_counts(kept, text_col="extracted_text",
                                    vocab=bpe_vocab)
         # fixed sink schema: null-fill the signal columns of disabled

@@ -109,7 +109,9 @@ def pieces_by_length(
     return {k: tuple(out[k]) for k in sorted(out, reverse=True)}
 
 
-def load_vocab(spark, path: str, piece_col: str = "piece") -> tuple[str, ...]:
+def load_vocab(
+    spark, path: str | None, piece_col: str = "piece"
+) -> tuple[str, ...]:
     """Load a tokenizer vocabulary from a parquet (or csv with header)
     piece table — the bridge from the committed toy to a REAL
     tokenizer: export the tokenizer's pieces to one column and meter
@@ -118,7 +120,10 @@ def load_vocab(spark, path: str, piece_col: str = "piece") -> tuple[str, ...]:
     match), whitespace-containing or empty pieces are dropped (rule 2
     splits on whitespace before the fold), and the result is deduped
     and sorted for a deterministic expression tree. The collect is
-    model-sized (a piece table), never corpus-sized."""
+    model-sized (a piece table), never corpus-sized. ``path=None``
+    returns the committed ``VOCAB``."""
+    if path is None:
+        return VOCAB
     reader = spark.read
     df = (
         reader.option("header", True).csv(path)

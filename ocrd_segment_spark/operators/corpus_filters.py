@@ -15,8 +15,10 @@ while the streaming job conjoins them into one filter. Signal columns
 (char_entropy, bits_per_bigram, compression_ratio, n_tokens, quality,
 …) stay on the rows when their stage ran, so drops are auditable.
 
-Every stage is narrow (column math or a pass-through mapInPandas
-append), so the chain is streaming-legal by construction. The
+Every stage is narrow (column math, or a scalar pandas_udf column for
+the LM and compression signals: textstats.with_lm_bits /
+with_compression_cols), so the chain is streaming-legal by
+construction. The
 per-language LM table must be COLLECTED by the caller
 (operators/textstats.collect_lm_surprisal) — in a streaming job that
 collection has to happen before the query starts, not inside the
@@ -34,13 +36,18 @@ KEEP_COLS = (
 )
 
 
-def reference_lm_table(spark, lm_ref_path: str) -> tuple[dict, dict]:
+def reference_lm_table(
+    spark, lm_ref_path: str | None, lm_max_bits: float | None
+) -> tuple[dict, dict] | None:
     """The ``lm_table`` of :func:`with_keep_flags`: per-language
     reference char-bigram LMs (CCNet shape) trained from the trusted
     ``(text, lang)`` documents at ``lm_ref_path``, then COLLECTED —
-    model-sized (langs × charset²), never corpus-sized."""
+    model-sized (langs × charset²), never corpus-sized. None when the
+    LM stage is off: it runs only with both keywords set."""
     from .textstats import bigram_lm_models_by_lang, collect_lm_surprisal
 
+    if lm_ref_path is None or lm_max_bits is None:
+        return None
     return collect_lm_surprisal(
         bigram_lm_models_by_lang(spark.read.parquet(lm_ref_path))
     )

@@ -28,7 +28,7 @@ table, the other two rank rows in a non-time window, which an
 unbounded stream cannot do. The batch job's ``honor_meta`` turns on
 both the noindex and the canonical-alias gate, the stream job's
 ``honor_noindex`` only the first. Gates that read html are refused on
-``--input-format pdf`` (:func:`refuse_html_on_pdf`).
+``--input-format pdf`` (``jobargs.refuse_html_on_pdf``).
 """
 
 from __future__ import annotations
@@ -164,15 +164,3 @@ def apply_gates(
         pages = flagged.drop(*(c for c in helpers if c not in needs))
     return pages, observations
 
-
-def refuse_html_on_pdf(ap, args, extra: tuple[str, ...] = ()) -> None:
-    """``ap.error`` when ``--input-format pdf`` is combined with a gate
-    that reads html pages, or with one of the ``extra`` job options
-    (argparse dests) that do — pdf blobs have no html to read."""
-    if args.input_format != "pdf":
-        return
-    html_opts = [k for g in GATES if g.reads_html for k in g.options]
-    for dest in (*html_opts, *extra):
-        if is_set(getattr(args, dest, None)):
-            ap.error(f"--{dest.replace('_', '-')} reads html pages and"
-                     " cannot run on --input-format pdf")

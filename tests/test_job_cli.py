@@ -81,7 +81,8 @@ def _parser(monkeypatch, module):
 
 
 def _option_strings(ap):
-    return {s for a in ap._actions for s in a.option_strings} - {"-h", "--help"}
+    flags = {s for a in ap._actions for s in a.option_strings}
+    return flags - {"-h", "--help"}
 
 
 SHARED_DEFAULTS = dict(
