@@ -180,7 +180,7 @@ def run_stream(
             python_parallelism=python_parallelism,
             # the stream needs no per-stage drop counts, so failing
             # rows drop BEFORE the Python LM/compression stages
-            # (predicates don't push into Python UDFs on their own)
+            # (predicates don't push through mapInPandas on their own)
             early_filter=True,
         )
         kept = flagged.filter(keep_all()).drop(*KEEP_COLS)

@@ -18,9 +18,8 @@ while the streaming job conjoins them into one filter. Signal columns
 Every stage is narrow (column math, or a scalar pandas_udf column for
 the LM and compression signals: textstats.with_lm_bits /
 with_compression_cols), so the chain is streaming-legal by
-construction. The
-per-language LM table must be COLLECTED by the caller
-(operators/textstats.collect_lm_surprisal) — in a streaming job that
+construction. The per-language LM table must be COLLECTED by the
+caller (:func:`reference_lm_table`) — in a streaming job that
 collection has to happen before the query starts, not inside the
 per-microbatch transform.
 """
