@@ -464,8 +464,8 @@ def build_corpus(
         for kw, key, build in SIDE_OUTPUTS
     }
     # pre-extraction gates (operators/pre_gates): excluded pages never
-    # pay kernel time, and each gate's drop count rides the terminal
-    # write as its own Observation on the one linear lineage
+    # pay kernel time, and the gates' drop counts ride the terminal
+    # write as one Observation on the one linear lineage
     pages, gate_obs = apply_gates(
         pages, active_gates(opts), opts, observe=True
     )
@@ -585,15 +585,11 @@ def build_corpus(
         "keep_clf": quality_clf,
         "keep_script": script_screen,
     }
+    gate_counts = gate_obs.get if gate_obs is not None else {}
     funnel = {
         # the pre-extraction gates in gate order, then the raw-scan side
         # outputs; pages = pages ENTERING extraction
-        **{
-            g.key: gate_obs[g.key].get["dropped"] if g.key in gate_obs
-            else -1
-            for g in GATES
-            if g.key is not None
-        },
+        **{g.key: gate_counts.get(g.key, -1) for g in GATES if g.key},
         **side_counts,
         "pages": counts["pages"],
     }

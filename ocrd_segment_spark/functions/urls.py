@@ -188,7 +188,7 @@ def registered_domain(host_col: str) -> Column:
 
 def latest_snapshot(
     df, url_col: str = "url", ts_col: str = "warc_ts",
-    flag_col: str | None = None,
+    flag_col: str | None = None, rank_first: str | None = None,
 ):
     """One row per CANONICAL url: the latest capture — the
     snapshot-collapse every multi-crawl corpus runs before dedup (the
@@ -201,7 +201,11 @@ def latest_snapshot(
     winning input rows with ``canonical_url`` appended. With
     ``flag_col`` set, ALL rows return instead, carrying a boolean
     winner flag — the shape the corpus job needs so the stale-capture
-    count can ride its write as an Observation.
+    count can ride its write as an Observation. With ``rank_first`` (a
+    boolean column) set, rows where it is true outrank every other row
+    of their group — the corpus job's gates rank the pages that passed
+    every earlier gate first, so the same capture wins as if the others
+    had been filtered out.
 
     Scale shape: one window on the canonical url (computed inline in
     the scan — zero extra passes). Partition sizes are captures-per-
@@ -211,8 +215,9 @@ def latest_snapshot(
     """
     from pyspark.sql import Window as W
 
+    first = [] if rank_first is None else [F.desc(rank_first)]
     w = W.partitionBy("canonical_url").orderBy(
-        F.desc(ts_col), F.asc(url_col)
+        *first, F.desc(ts_col), F.asc(url_col)
     )
     flagged = df.withColumn(
         "canonical_url", canonicalize_url(url_col)

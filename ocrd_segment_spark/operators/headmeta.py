@@ -202,6 +202,7 @@ def canonical_representatives(
     url_col: str = "url",
     flag_col: str | None = None,
     meta_precomputed: bool = False,
+    rank_first: str | None = None,
 ) -> DataFrame:
     """The row-keeping sibling of :func:`canonical_collapse`: input
     rows (all columns preserved) with the SAME frozen keep rule —
@@ -217,6 +218,8 @@ def canonical_representatives(
     ``meta_precomputed=True`` skips the :func:`head_meta` pass when
     the caller already ran it (the job harvests once, counts noindex,
     filters, then ranks — the harvest regexes never run twice).
+    ``rank_first`` ranks rows where that boolean column is true ahead
+    of the rest of their group, as in ``latest_snapshot``.
 
     Scale shape: one window shuffle on the group key — unlike the
     summary form's min(struct) aggregate, rows must survive, and the
@@ -238,8 +241,9 @@ def canonical_representatives(
             | (F.col("canonical_url") == F.col(url_col))
         ).cast("int"),
     )
+    first = [] if rank_first is None else [F.desc(rank_first)]
     w = W.partitionBy("__gk").orderBy(
-        F.desc("__self"), F.asc(url_col)
+        *first, F.desc("__self"), F.asc(url_col)
     )
     flagged = m.withColumn("__rn", F.row_number().over(w))
     helper = ["__gk", "__self", "__rn", "canonical_href", "canonical_url", "robots"]

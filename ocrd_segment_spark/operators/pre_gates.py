@@ -10,16 +10,19 @@ SQL Data Engines" (EDBT 2026) argues for ahead of an opaque UDF.
 
 Every gate has one shape: ``build`` appends flag column(s) (never
 drops rows), ``keep`` is the row predicate over them, ``drop`` lists
-the helper columns removed after the filter. The batch job passes
-``observe=True``: each gate then carries its OWN Observation on its
-flagged node, so the drop count (funnel key ``key``) rides the job's
-terminal write with no extra action. The gates are deliberately not
-merged into one Observation: which capture wins the snapshot and
-canonical windows depends on the filters that run before them. The
-stream job only filters.
+the helper columns removed after the filter. The stream job filters
+after each gate. The batch job passes ``observe=True``: no gate filters
+then; each keep predicate is folded into a running pass flag, the
+window gates rank the pages that passed every earlier gate ahead of the
+rest (so the same capture wins as under filtering), and ONE Observation
+after the last gate counts each gate's drops over the pages that passed
+every earlier gate, riding the job's terminal write. Counting inside
+the chain would put a count below a window's shuffle, and adaptive
+execution drops an emptied shuffle stage from the final plan together
+with every count observed in it.
 
-``GATES`` order is frozen (each gate sees only the survivors of the
-earlier ones): the url-only blocklist first; charset repair before
+``GATES`` order is frozen (each gate drops or ranks only the survivors
+of the earlier ones): the url-only blocklist first; charset repair before
 every html-reading gate (utf-16 html must decode before it is
 classified); noindex BEFORE the canonical window (a noindex alias must
 never win its group); soft-404 last. Host rank, snapshot collapse and
@@ -43,6 +46,10 @@ from ..functions.multimodal import with_content_type
 from ..functions.urls import host_of, latest_snapshot, with_domain_blocked
 from .headmeta import canonical_representatives, head_meta, with_ai_optout
 from .softerrors import soft404_page_stage
+
+# the running conjunction of the keep predicates so far (batch only:
+# the stream filters after each gate, so there it stays true)
+PASSED = "__gates_passed"
 
 
 @dataclass(frozen=True)
@@ -104,7 +111,8 @@ GATES = (
          | (F.col("__host_rank") >= o["host_rank_min"]),
          drop=("__host", "__hr_host", "__host_rank")),
     Gate("dropped_stale_snapshot", ("snapshot_collapse",), True, False,
-         build=lambda df, o: latest_snapshot(df, flag_col="is_latest"),
+         build=lambda df, o: latest_snapshot(
+             df, flag_col="is_latest", rank_first=PASSED),
          keep=lambda o: F.col("is_latest"),
          drop=("is_latest", "canonical_url")),
     Gate("dropped_noindex", ("honor_noindex",), True, True,
@@ -114,7 +122,8 @@ GATES = (
     # head_meta harvest it reuses
     Gate("dropped_canonical_alias", ("honor_meta",), True, False,
          build=lambda df, o: canonical_representatives(
-             df, flag_col="__canon_rep", meta_precomputed=True),
+             df, flag_col="__canon_rep", meta_precomputed=True,
+             rank_first=PASSED),
          keep=lambda o: F.col("__canon_rep"), drop=("__canon_rep",),
          needs=_META),
     Gate("dropped_noai", ("honor_noai",), True, True,
@@ -138,29 +147,36 @@ def active_gates(opts: Mapping, streaming: bool = False) -> list[Gate]:
 
 def apply_gates(
     pages: DataFrame, gates: list[Gate], opts: Mapping, observe: bool = False
-) -> tuple[DataFrame, dict]:
+) -> tuple[DataFrame, Observation | None]:
     """Run ``gates`` over ``pages``. Returns the surviving pages (input
-    schema) and, with ``observe=True``, ``{funnel key: Observation}``
-    whose ``"dropped"`` metric counts the rows each gate removed —
-    every row its keep predicate does not hold for, NULL included."""
-    observations = {}
+    schema) and, with ``observe=True``, one Observation whose metric
+    named by each gate's funnel key counts the rows that gate removed:
+    the rows that passed every earlier gate and that its keep predicate
+    does not hold for, NULL included. The Observation is None when no
+    gate can drop a row."""
+    keys = []
     carried: tuple[str, ...] = ()
+    pages = pages.withColumn(PASSED, F.lit(True))
     for g, nxt in zip(gates, (*gates[1:], None)):
         flagged = g.build(pages, opts)
         if g.keep is not None:
-            keep = g.keep(opts)
+            keep = F.coalesce(g.keep(opts), F.lit(False))
             if observe:
-                observations[g.key] = Observation(g.key)
-                flagged = flagged.observe(
-                    observations[g.key],
-                    F.coalesce(
-                        F.sum(F.when(keep, 0).otherwise(1)), F.lit(0)
-                    ).alias("dropped"),
-                )
-            flagged = flagged.filter(keep)
+                keys.append(g.key)
+                flagged = flagged.withColumn(
+                    f"__{g.key}", F.col(PASSED) & ~keep
+                ).withColumn(PASSED, F.col(PASSED) & keep)
+            else:
+                flagged = flagged.filter(keep)
         helpers = (*carried, *g.drop)
         needs = nxt.needs if nxt is not None else ()
         carried = tuple(c for c in helpers if c in needs)
         pages = flagged.drop(*(c for c in helpers if c not in needs))
-    return pages, observations
-
+    observation = None
+    if keys:
+        observation = Observation("gates")
+        pages = pages.observe(observation, *(
+            F.coalesce(F.sum(F.col(f"__{k}").cast("long")), F.lit(0)).alias(k)
+            for k in keys
+        )).filter(PASSED)
+    return pages.drop(PASSED, *(f"__{k}" for k in keys)), observation
