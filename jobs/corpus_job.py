@@ -13,35 +13,31 @@ The flags the stream job takes too are defined once, with their checks,
 in ocrd_segment_spark/jobargs.py; this job adds its side outputs and
 post-write stages.
 
-Stages (each narrow or one bounded shuffle):
+Stages (each narrow or one bounded shuffle). Steps 0–3 are the
+per-page chain the stream job runs too, defined once in
+``operators/corpus_filters.page_scorer``:
 
 0. pre-gates   — optional cheap filters BEFORE extraction, so excluded
                  pages never pay kernel time: the ordered gate table
-                 shared with the stream job (operators/pre_gates.GATES:
-                 blocklist → charset → content type → host rank →
-                 snapshot → noindex → canonical alias → noai →
-                 soft-404), each gate with its own funnel drop count.
-                 The raw-scan side outputs (``SIDE_OUTPUTS``: outlinks,
-                 feed links, tables, image pairs) read the input before
-                 any gate.
+                 (operators/pre_gates.GATES: blocklist → charset →
+                 content type → host rank → snapshot → noindex →
+                 canonical alias → noai → soft-404), each gate with its
+                 own funnel drop count. The raw-scan side outputs
+                 (``SIDE_OUTPUTS``: outlinks, feed links, tables, image
+                 pairs) read the input before any gate.
 1. extract     — HTML → (extracted_text, region_spans, lineage); the
-                 shuffle-free mapInPandas kernel path.
-2. score       — real char-n-gram language id scored INSIDE the
-                 extraction pass (extract_pages(lang_id=True) — one
-                 python stage total) + quality as pure column math:
-                 narrow, zero shuffle, single linear lineage.
-3. filter      — quality/token/lang thresholds: pushable predicates;
-                 ``--gopher`` adds the repetition-rule drop stage
-                 (still the same narrow pass); ``--entropy-min``,
-                 ``--lm-ref``/``--lm-max-bits`` (per-language
-                 reference LMs, collected model broadcast) and
-                 ``--max-compression`` add the round-3 quality-signal
-                 drops — entropy is column math, LM/compression are
-                 scalar pandas_udf columns (textstats.with_lm_bits /
-                 with_compression_cols), ALL in the same linear
-                 lineage (no join back, no re-extraction);
-                 ``--script-screen`` drops mixed-script documents
-                 (operators/scriptmix, pure column math, same pass).
+                 shuffle-free mapInPandas kernel path, or the PDF lane
+                 (``--input-format pdf``, sources/pdf).
+2. score       — char-n-gram language id scored INSIDE the extraction
+                 pass + quality as pure column math: narrow, zero
+                 shuffle, single linear lineage.
+3. filter      — the ``keep_*`` flags of operators/corpus_filters:
+                 quality/token/lang thresholds, ``--gopher``,
+                 ``--entropy-min``, ``--lm-ref``/``--lm-max-bits``,
+                 ``--max-compression``, ``--script-screen``,
+                 ``--quality-clf``, all in the same linear lineage (no
+                 join back, no re-extraction); then ``--count-bpe``
+                 subword metering.
 4. exact dedup — keep the canonical (min url) copy per content hash:
                  ONE shuffle on md5(extracted_text); near-dup passes
                  (MinHash LSH) run as a separate offline audit because
@@ -445,16 +441,9 @@ def build_corpus(
     from ocrd_segment_spark.operators.corpus_filters import (
         KEEP_COLS,
         keep_all,
-        reference_lm_table,
-        with_keep_flags,
+        page_scorer,
     )
-    from ocrd_segment_spark.operators.pre_gates import (
-        GATES,
-        active_gates,
-        apply_gates,
-        is_set,
-    )
-    from ocrd_segment_spark.pipeline import extract_pages
+    from ocrd_segment_spark.operators.pre_gates import GATES, is_set
 
     pages = spark.read.parquet(input_path)
     side_counts = {
@@ -463,69 +452,11 @@ def build_corpus(
         else -1
         for kw, key, build in SIDE_OUTPUTS
     }
-    # pre-extraction gates (operators/pre_gates): excluded pages never
-    # pay kernel time, and the gates' drop counts ride the terminal
-    # write as one Observation on the one linear lineage
-    pages, gate_obs = apply_gates(
-        pages, active_gates(opts), opts, observe=True
-    )
-    # real n-gram language id (round-3 task: the en/de digram toy no
-    # longer routes drop decisions) scored INSIDE the extraction pass —
-    # same frozen score_document, zero extra Arrow round-trip, the
-    # whole scoring chain is ONE python stage + column math
-    if input_format == "pdf":
-        # the PDF lane: frozen text-subset parse (sources/pdf), shared
-        # with the stream job
-        from ocrd_segment_spark.sources.pdf import pdf_extracted
-
-        extracted = pdf_extracted(pages, python_parallelism, lang_margin)
-    else:
-        from ocrd_segment_spark.config import ExtractParams
-
-        extracted = extract_pages(
-            pages,
-            # verbatim <pre> (kernel 1.6.0): code blocks keep their
-            # indentation in the training corpus; PDF-lane text has no
-            # pre analog, so the flag only touches the HTML path
-            params=ExtractParams(preserve_pre=preserve_pre),
-            python_parallelism=python_parallelism,
-            lang_id=True,
-            lang_margin=lang_margin,
-        )
-    # per-language reference LMs (CCNet shape), scored under each
-    # document's PREDICTED language
-    lm_table = reference_lm_table(spark, lm_ref_path, lm_max_bits)
-    # the six-stage quality filter chain — ONE shared definition with
-    # the streaming job (operators/corpus_filters; review pass 3 found
-    # the chain hand-mirrored in both jobs, the exact drift channel
-    # that left the stream a round behind). Signal columns stay in the
-    # output when their stage is on, so drops are auditable per doc.
-    scored = with_keep_flags(
-        extracted,
-        min_quality=min_quality,
-        min_tokens=min_tokens,
-        langs=langs,
-        gopher=gopher,
-        entropy_min=entropy_min,
-        lm_table=lm_table,
-        lm_max_bits=lm_max_bits,
-        max_compression=max_compression,
-        quality_clf=quality_clf,
-        script_screen=script_screen,
-        python_parallelism=python_parallelism,
-    )
-    if count_bpe:
-        # subword metering (pure JVM column fold, same narrow pass);
-        # the kept-corpus token total rides the write Observation below
-        from ocrd_segment_spark.operators.bpe import (
-            load_vocab,
-            with_bpe_counts,
-        )
-
-        scored = with_bpe_counts(scored, text_col="extracted_text",
-                                 vocab=load_vocab(spark, bpe_vocab_path))
-    else:
-        scored = scored.withColumn("n_bpe_tokens", F.lit(None).cast("long"))
+    # gates → extract (+ language id) → keep_* flags → BPE metering: ONE
+    # definition with the stream job. Every row keeps its flags (the
+    # funnel counts each stage's drops), and the gate drop counts ride
+    # the terminal write as one Observation
+    scored, gate_obs = page_scorer(spark, opts, streaming=False)(pages)
 
     # funnel counters ride the write action as an Observation — the
     # extraction (the expensive stage) runs exactly ONCE. Precedence
@@ -580,7 +511,7 @@ def build_corpus(
     # 0 means the stage ran and dropped nothing
     stage_ran = {
         "keep_entropy": entropy_min is not None,
-        "keep_lm": lm_table is not None,
+        "keep_lm": lm_ref_path is not None and lm_max_bits is not None,
         "keep_compression": max_compression is not None,
         "keep_clf": quality_clf,
         "keep_script": script_screen,

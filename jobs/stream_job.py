@@ -14,12 +14,13 @@ Every flag but ``--checkpoint``, ``--available-now`` and
 its checks, in ocrd_segment_spark/jobargs.py; ``--help`` lists them.
 
 New page files landing in ``--input`` are picked up by the file
-source; each microbatch runs the SAME narrow transform chain as the
-batch job (pre-extraction gates → extract → quality/lang score →
-filters — pytest pins microbatch == batch for every stage), and the
-checkpoint gives exactly-once output across restarts (file-source
-offsets + sink manifest — the streaming form of the batch job's
-resume anti-join).
+source. Each microbatch runs the batch job's per-page chain, defined
+once in ``operators/corpus_filters.page_scorer`` (pre-extraction gates →
+extract + language id → quality flags → BPE metering), dropping failing
+rows after each stage (pytest pins microbatch == batch for every
+stage). The checkpoint gives exactly-once output across restarts
+(file-source offsets + sink manifest — the streaming form of the batch
+job's resume anti-join).
 
 Exact dedup is deliberately NOT inline here: content-hash dedup
 across an unbounded stream is unbounded state. The engine's choice is
@@ -126,113 +127,43 @@ def run_stream(
     python_parallelism: int | None = None,
 ):
     """Start the streaming query (importable for tests). Returns the
-    StreamingQuery handle. The quality-signal stages mirror the batch
-    job exactly (same operators, same thresholds, same null-keeps
-    rule) — every stage is narrow, so all are streaming-legal. The
-    output is projected onto the fixed ``SINK_COLUMNS`` schema so
-    restarts with different stage flags keep appending a single
-    parquet schema."""
+    StreamingQuery handle. Each microbatch runs the batch job's chain
+    (``corpus_filters.page_scorer``: gates → extract → flags → BPE),
+    keeping only the rows that pass every stage. The output is
+    projected onto the fixed ``SINK_COLUMNS`` schema so restarts with
+    different stage flags keep appending a single parquet schema."""
     opts = dict(locals())
     from pyspark.sql import functions as F
 
-    from ocrd_segment_spark.operators.bpe import load_vocab, with_bpe_counts
-    from ocrd_segment_spark.operators.corpus_filters import (
-        KEEP_COLS,
-        keep_all,
-        reference_lm_table,
-        with_keep_flags,
+    from ocrd_segment_spark.operators.corpus_filters import page_scorer
+    from ocrd_segment_spark.streaming.extract_stream import (
+        PAGES_SCHEMA,
+        stream_extract,
     )
-    from ocrd_segment_spark.operators.pre_gates import (
-        active_gates,
-        apply_gates,
-    )
-    from ocrd_segment_spark.streaming.extract_stream import stream_extract
 
-    # per-language reference LMs and the BPE vocabulary are collected
-    # ONCE before the stream starts (model-sized, batch reads) —
-    # microbatches only fold (closure constants)
-    lm_table = reference_lm_table(spark, lm_ref_path, lm_max_bits)
-    bpe_vocab = load_vocab(spark, bpe_vocab_path) if count_bpe else None
+    # models and gates load here, before the query starts; each
+    # microbatch only applies them
+    score = page_scorer(spark, opts, streaming=True)
 
-    # the pre-extraction gates: the SAME table as the batch job
-    # (operators/pre_gates), streaming-legal entries only. Static inputs
-    # (the blocklist) are read when the query is built, before it
-    # starts; each microbatch then does a stream-static broadcast join
-    gates = active_gates(opts, streaming=True)
-
-    def score_and_filter(extracted):
-        # pred_lang arrives from the extraction pass itself
-        # (stream_extract(lang_id=True) below). The SAME shared stage
-        # chain as jobs/corpus_job.py — the batch job keeps the flags
-        # for its funnel Observations; the stream conjoins and drops.
-        flagged = with_keep_flags(
-            extracted,
-            min_quality=min_quality,
-            min_tokens=min_tokens,
-            langs=langs,
-            gopher=gopher,
-            quality_clf=quality_clf,
-            entropy_min=entropy_min,
-            lm_table=lm_table,
-            lm_max_bits=lm_max_bits,
-            max_compression=max_compression,
-            script_screen=script_screen,
-            python_parallelism=python_parallelism,
-            # the stream needs no per-stage drop counts, so failing
-            # rows drop BEFORE the Python LM/compression stages
-            # (predicates don't push through mapInPandas on their own)
-            early_filter=True,
-        )
-        kept = flagged.filter(keep_all()).drop(*KEEP_COLS)
-        if count_bpe:
-            # subword metering on kept rows only (pure JVM column
-            # fold) — batch-job parity for --count-bpe
-            kept = with_bpe_counts(kept, text_col="extracted_text",
-                                   vocab=bpe_vocab)
+    def transform(pages):
+        scored, _ = score(pages)
         # fixed sink schema: null-fill the signal columns of disabled
-        # stages and project in the frozen order, so a restart with
-        # different flags appends the SAME parquet schema
-        cols = []
-        for name, typ in SINK_COLUMNS:
-            if name in kept.columns:
-                cols.append(F.col(name))
-            else:
-                cols.append(F.lit(None).cast(typ).alias(name))
-        return kept.select(*cols)
-
-    # the exactly-once source/sink scaffolding lives in stream_extract;
-    # this job only supplies the score/filter chain (and, for the PDF
-    # lane, the swapped source schema + extractor pair)
-    input_schema = None
-    extractor = None
-    if input_format == "pdf":
-        # the PDF lane, shared with corpus_job --input-format pdf: both
-        # mapInPandas stages are streaming-legal
-        from ocrd_segment_spark.sources.pdf import pdf_extracted
-
-        input_schema = "url string, data binary"
-
-        def extractor(blobs):
-            return pdf_extracted(blobs, python_parallelism, lang_margin)
-
-    from ocrd_segment_spark.config import ExtractParams
+        # stages and project in the frozen order (the keep_* flags go)
+        return scored.select(*(
+            F.col(name) if name in scored.columns
+            else F.lit(None).cast(typ).alias(name)
+            for name, typ in SINK_COLUMNS
+        ))
 
     return stream_extract(
         spark,
         input_path,
         output_path,
         checkpoint,
-        # verbatim <pre> is a pure kernel param — narrow, streaming-
-        # legal, batch parity with corpus_job --preserve-pre
-        params=ExtractParams(preserve_pre=preserve_pre),
+        transform=transform,
+        schema="url string, data binary" if input_format == "pdf"
+        else PAGES_SCHEMA,
         available_now=available_now,
-        transform=score_and_filter,
-        pre_transform=lambda pages: apply_gates(pages, gates, opts)[0],
-        python_parallelism=python_parallelism,
-        lang_id=True,
-        lang_margin=lang_margin,
-        input_schema=input_schema,
-        extractor=extractor,
     )
 
 

@@ -11,7 +11,8 @@ module is the single source of the stage semantics.
 ``with_keep_flags`` APPENDS boolean ``keep_*`` columns and never
 drops rows: the batch job needs the individual flags (its funnel
 counters ride the write as Observations over the precedence chain),
-while the streaming job conjoins them into one filter. Signal columns
+while the streaming job drops failing rows after each stage
+(``early_filter``). Signal columns
 (char_entropy, bits_per_bigram, compression_ratio, n_tokens, quality,
 …) stay on the rows when their stage ran, so drops are auditable.
 
@@ -22,11 +23,17 @@ construction. The per-language LM table must be COLLECTED by the
 caller (:func:`reference_lm_table`) — in a streaming job that
 collection has to happen before the query starts, not inside the
 per-microbatch transform.
+
+:func:`page_scorer` composes the whole per-page chain of both jobs
+once: the pre-extraction gates, extraction with language id (html or
+pdf), these flags and the BPE metering.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Callable, Mapping
+
+from pyspark.sql import DataFrame, Observation, functions as F
 
 KEEP_COLS = (
     "keep_quality", "keep_lang", "keep_gopher",
@@ -193,8 +200,98 @@ def with_keep_flags(
 
 
 def keep_all() -> F.Column:
-    """The conjunction of every stage flag (the streaming filter)."""
+    """The conjunction of every stage flag (the batch job's filter)."""
     out = F.lit(True)
     for c in KEEP_COLS:
         out = out & F.col(c)
     return out
+
+
+def page_scorer(
+    spark, opts: Mapping, *, streaming: bool
+) -> Callable[[DataFrame], tuple[DataFrame, Observation | None]]:
+    """The whole per-page chain of both corpus jobs, composed once:
+    ``opts`` are a job's keyword values. The models (reference LMs, BPE
+    vocabulary) and the gate list are loaded when this is called, so a
+    stream loads them before its query starts. The returned function
+    maps raw pages (or pdf blobs, ``input_format="pdf"``) to the scored
+    frame and the gate Observation (None in the stream):
+
+    - the pre-extraction gates (``pre_gates.apply_gates``; the batch
+      job observes their drop counts, the stream filters);
+    - extraction with language id in the same pass: the html kernel
+      (``preserve_pre``, ``lang_margin``), or the pdf lane
+      (``sources/pdf.pdf_extracted``);
+    - the ``keep_*`` flags (:func:`with_keep_flags`); the stream drops
+      failing rows after each stage (``early_filter``), so every row
+      leaving it has passed every stage;
+    - BPE metering (``count_bpe``), else a null ``n_bpe_tokens``. It
+      runs after the flags: the batch job meters every row (its
+      ``kept_bpe_tokens`` sums the kept ones), the stream only rows it
+      keeps.
+
+    ``python_parallelism`` floors each batch Python stage. A streaming
+    frame cannot report its partition count, so each floor would
+    reshuffle every microbatch; the stream instead shuffles once, after
+    the gates and ahead of extraction. (The charset gate's Python
+    decode sees only the legacy/BOM tail of one union branch, so the
+    stream runs it unfloored rather than shuffle both branches.)"""
+    from .bpe import load_vocab, with_bpe_counts
+    from .pre_gates import active_gates, apply_gates
+
+    lm_table = reference_lm_table(spark, opts["lm_ref_path"], opts["lm_max_bits"])
+    vocab = load_vocab(spark, opts["bpe_vocab_path"]) if opts["count_bpe"] else None
+    gates = active_gates(opts, streaming=streaming)
+    floor = opts["python_parallelism"]
+
+    def score(pages: DataFrame) -> tuple[DataFrame, Observation | None]:
+        from ..pystage import parallelism_floor
+
+        pp = floor
+        if streaming:
+            pages, gate_obs = apply_gates(
+                pages, gates, dict(opts, python_parallelism=None)
+            )
+            pages, pp = parallelism_floor(pages, pp), None
+        else:
+            pages, gate_obs = apply_gates(pages, gates, opts, observe=True)
+        if opts["input_format"] == "pdf":
+            from ..sources.pdf import pdf_extracted
+
+            extracted = pdf_extracted(pages, pp, opts["lang_margin"])
+        else:
+            from ..config import ExtractParams
+            from ..pipeline import extract_pages
+
+            extracted = extract_pages(
+                pages,
+                # verbatim <pre>; pdf text has no pre analog
+                params=ExtractParams(preserve_pre=opts["preserve_pre"]),
+                python_parallelism=pp,
+                lang_id=True,
+                lang_margin=opts["lang_margin"],
+            )
+        scored = with_keep_flags(
+            extracted,
+            min_quality=opts["min_quality"],
+            min_tokens=opts["min_tokens"],
+            langs=opts["langs"],
+            gopher=opts["gopher"],
+            entropy_min=opts["entropy_min"],
+            lm_table=lm_table,
+            lm_max_bits=opts["lm_max_bits"],
+            max_compression=opts["max_compression"],
+            quality_clf=opts["quality_clf"],
+            script_screen=opts["script_screen"],
+            python_parallelism=pp,
+            early_filter=streaming,
+        )
+        if vocab is not None:
+            return with_bpe_counts(
+                scored, text_col="extracted_text", vocab=vocab
+            ), gate_obs
+        return scored.withColumn(
+            "n_bpe_tokens", F.lit(None).cast("long")
+        ), gate_obs
+
+    return score

@@ -1,10 +1,13 @@
 """Streaming variants of the extraction pipeline and event-time ops.
 
-- ``stream_extract``: readStream(pages parquet) → the SAME
-  ``extract_pages`` transform (mapInPandas is streaming-capable) →
-  exactly-once parquet sink with checkpoint. Byte-identity vs the
-  batch path is pytest-enforced (tests/test_streaming.py) — the
+- ``stream_extract``: the exactly-once scaffolding — readStream of a
+  parquet directory → one ``transform`` (by default the SAME
+  ``extract_pages`` as the batch path; mapInPandas is
+  streaming-capable) → parquet sink with checkpoint. Byte-identity vs
+  the batch path is pytest-enforced (tests/test_streaming.py) — the
   kernel cannot tell it is running under a microbatch.
+  jobs/stream_job.py passes the corpus chain
+  (``operators/corpus_filters.page_scorer``) as its transform.
 - ``windowed_event_stats``: watermarked tumbling-window aggregation
   (late data dropped past the watermark).
 - ``sessionize``: custom stateful operator via
@@ -14,12 +17,12 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..config import DEFAULT_PARAMS, ExtractParams
 from ..pipeline import extract_pages
 
 PAGES_SCHEMA = T.StructType(
@@ -38,43 +41,17 @@ def stream_extract(
     input_path: str,
     output_path: str,
     checkpoint: str,
-    params: ExtractParams = DEFAULT_PARAMS,
+    transform: Callable[[DataFrame], DataFrame] = extract_pages,
+    schema=PAGES_SCHEMA,
     available_now: bool = True,
-    transform=None,
-    pre_transform=None,
-    python_parallelism: int | None = None,
-    lang_id: bool = False,
-    lang_margin: float | None = None,
-    input_schema=None,
-    extractor=None,
 ):
-    """Continuous extraction with exactly-once semantics (checkpointed
-    file-source offsets + parquet sink manifest). ``available_now``
-    drains what exists and stops — the test/replay mode; leave False
-    for a long-running job. ``transform`` (DataFrame → DataFrame) runs
-    between extraction and the sink — the hook jobs/stream_job.py uses
-    for its score/filter chain, so the exactly-once source/sink
-    scaffolding exists in exactly one place. ``pre_transform`` runs on
-    the raw pages BEFORE extraction — the hook for filters that must
-    not pay kernel time (the domain blocklist: a stream-static
-    broadcast join, streaming-legal and narrow). ``input_schema`` /
-    ``extractor`` swap the source shape and the extraction transform
-    as a pair (the PDF lane: blobs in, extracted shape out) — the
-    exactly-once scaffolding stays this function's job either way."""
-    pages = spark.readStream.schema(
-        input_schema if input_schema is not None else PAGES_SCHEMA
-    ).parquet(input_path)
-    if pre_transform is not None:
-        pages = pre_transform(pages)
-    if extractor is not None:
-        out = extractor(pages)
-    else:
-        out = extract_pages(
-            pages, params, python_parallelism,
-            lang_id=lang_id, lang_margin=lang_margin,
-        )
-    if transform is not None:
-        out = transform(out)
+    """Continuous ``transform`` of the parquet files landing in
+    ``input_path`` (read with ``schema``), with exactly-once semantics
+    (checkpointed file-source offsets + parquet sink manifest).
+    ``transform`` is applied once, when the query is built.
+    ``available_now`` drains what exists and stops — the test/replay
+    mode; leave False for a long-running job."""
+    out = transform(spark.readStream.schema(schema).parquet(input_path))
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_path)

@@ -3,11 +3,17 @@ flags → BPE metering."""
 
 from __future__ import annotations
 
+import ast
 import datetime
+import inspect
+import os
+import zlib
 
 import pytest
 
 from ocrd_segment_spark.operators.pre_gates import GATES
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize("window_gate", ["snapshot_collapse", "honor_meta"])
@@ -45,3 +51,120 @@ def test_gate_empties_pages_before_a_window_gate(spark, tmp_path, window_gate):
     assert all(funnel[k] == 0 for k in ran[1:])
     assert funnel["pages"] == funnel["corpus_docs"] == 0
     assert sum(funnel[k] for k in ran) + funnel["pages"] == n
+
+
+def _opts(body, **kw) -> dict:
+    """A job body's keyword defaults, overridden by ``kw``."""
+    params = inspect.signature(body).parameters
+    return {k: p.default for k, p in params.items()
+            if p.default is not p.empty} | kw
+
+
+def test_stream_shuffles_once_batch_plan_unchanged(spark, tmp_path):
+    """Every parallelism floor on a streaming frame is a repartition:
+    the stream applies one, ahead of extraction; the batch plan keeps
+    its one floor (the charset tail branch; the union then has enough
+    partitions for the later Python stages)."""
+    from jobs.corpus_job import build_corpus
+    from jobs.stream_job import run_stream
+    from ocrd_segment_spark.operators.corpus_filters import page_scorer
+    from ocrd_segment_spark.plans.audit import physical_plan
+    from ocrd_segment_spark.streaming.extract_stream import PAGES_SCHEMA
+
+    src = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [("u", b"<html><body><p>a page</p></body></html>")],
+        "url string, html binary",
+    ).write.parquet(src)
+    kw = dict(python_parallelism=8, sniff_charset=True, max_compression=0.9)
+    for body, streaming, pages, want in (
+        (build_corpus, False, spark.read.parquet(src), 1),
+        (run_stream, True, spark.readStream.schema(PAGES_SCHEMA).parquet(src), 1),
+    ):
+        scored, _ = page_scorer(
+            spark, _opts(body, **kw), streaming=streaming
+        )(pages)
+        plan = physical_plan(scored)
+        assert plan.count("RoundRobinPartitioning") == want, (streaming, plan)
+
+
+def _pdf(text: bytes, compress: bool = False) -> bytearray:
+    content = b"BT (%s) Tj T* (the end of the page) Tj ET" % text
+    head = b"<< >>"
+    if compress:
+        content = zlib.compress(content)
+        head = b"<< /Length %d /Filter /FlateDecode >>" % len(content)
+    obj = b"1 0 obj\n" + head + b"\nstream\n" + content + b"\nendstream\nendobj\n"
+    return bytearray(b"%PDF-1.4\n" + obj + b"%%EOF\n")
+
+
+def test_pdf_lane_through_both_jobs(spark, tmp_path):
+    """The same pdf blobs through build_corpus and run_stream keep the
+    same urls with the same extracted_text and subword counts."""
+    from jobs.corpus_job import build_corpus
+    from jobs.stream_job import run_stream
+
+    texts = [
+        b"the children were playing in the garden near the river",
+        b"she opened the window and watched the quiet street below",
+        b"die kinder spielten den ganzen tag im garten am fluss",
+        b"there is nothing better than a warm cup of tea at night",
+    ]
+    blobs = [(f"doc{i}", _pdf(t, compress=i % 2 == 1))
+             for i, t in enumerate(texts)]
+    blobs.append(("junk", bytearray(b"not a pdf at all")))
+    src = str(tmp_path / "blobs")
+    spark.createDataFrame(blobs, "url string, data binary").write.parquet(src)
+    kw = dict(input_format="pdf", min_quality=0.0, min_tokens=3,
+              langs=["en"], count_bpe=True, python_parallelism=2)
+
+    funnel = build_corpus(spark, src, str(tmp_path / "batch"), **kw)
+    q = run_stream(spark, src, str(tmp_path / "stream"),
+                   str(tmp_path / "ckpt"), **kw)
+    assert q.awaitTermination(300)
+
+    def rows(path):
+        return {r["url"]: (r["extracted_text"], r["n_bpe_tokens"])
+                for r in spark.read.parquet(path).collect()}
+
+    batch, stream = rows(str(tmp_path / "batch")), rows(str(tmp_path / "stream"))
+    assert batch == stream
+    assert sorted(batch) == ["doc0", "doc1", "doc3"]
+    assert batch["doc1"][0] == texts[1].decode() + "\nthe end of the page"
+    assert funnel["corpus_docs"] == 3 and funnel["dropped_lang"] == 1
+
+
+# the per-page chain's stages: only page_scorer composes them
+CHAIN = {
+    "apply_gates", "extract_pages", "pdf_extracted", "with_keep_flags",
+    "reference_lm_table", "load_vocab", "with_bpe_counts",
+}
+
+
+def _calls(node: ast.AST) -> set[str]:
+    return {
+        f.id if isinstance(f, ast.Name) else f.attr
+        for n in ast.walk(node) if isinstance(n, ast.Call)
+        for f in (n.func,) if isinstance(f, (ast.Name, ast.Attribute))
+    }
+
+
+def test_jobs_leave_the_chain_to_page_scorer():
+    from ocrd_segment_spark.operators import corpus_filters
+
+    for job in ("corpus_job.py", "stream_job.py"):
+        path = os.path.join(REPO, "jobs", job)
+        assert not _calls(ast.parse(open(path).read(), path)) & CHAIN, job
+    path = corpus_filters.__file__
+    [scorer] = [n for n in ast.parse(open(path).read(), path).body
+                if isinstance(n, ast.FunctionDef) and n.name == "page_scorer"]
+    assert _calls(scorer) >= CHAIN
+
+
+def test_stream_extract_is_source_transform_sink():
+    from ocrd_segment_spark.streaming.extract_stream import stream_extract
+
+    assert list(inspect.signature(stream_extract).parameters) == [
+        "spark", "input_path", "output_path", "checkpoint",
+        "transform", "schema", "available_now",
+    ]

@@ -107,7 +107,7 @@ def test_pdf_pages_matches_extract_schema(spark):
 
 def test_pdf_stream_matches_batch(spark, tmp_path):
     # the stream_job PDF lane drains the same text the batch adapter
-    # produces (exactly-once scaffolding + swapped extractor pair)
+    # produces (exactly-once scaffolding + blob schema and transform)
     from ocrd_segment_spark.streaming.extract_stream import stream_extract
 
     src = str(tmp_path / "blobs")
@@ -121,8 +121,8 @@ def test_pdf_stream_matches_batch(spark, tmp_path):
 
     q = stream_extract(
         spark, src, out, ckpt,
-        input_schema="url string, data binary",
-        extractor=lambda b: pdf_pages(b),
+        transform=lambda b: pdf_pages(b),
+        schema="url string, data binary",
     )
     assert q.awaitTermination(300)
 
