@@ -210,32 +210,31 @@ def keep_all() -> F.Column:
 def page_scorer(
     spark, opts: Mapping, *, streaming: bool
 ) -> Callable[[DataFrame], tuple[DataFrame, Observation | None]]:
-    """The whole per-page chain of both corpus jobs, composed once:
+    """The whole per-page chain of both corpus jobs, composed once.
     ``opts`` are a job's keyword values. The models (reference LMs, BPE
-    vocabulary) and the gate list are loaded when this is called, so a
-    stream loads them before its query starts. The returned function
-    maps raw pages (or pdf blobs, ``input_format="pdf"``) to the scored
-    frame and the gate Observation (None in the stream):
+    vocabulary) and the gate list load when this is called, so a stream
+    loads them before its query starts. The returned function maps raw
+    pages (pdf blobs with ``input_format="pdf"``) to the scored frame
+    and the gate Observation (None in the stream):
 
-    - the pre-extraction gates (``pre_gates.apply_gates``; the batch
-      job observes their drop counts, the stream filters);
-    - extraction with language id in the same pass: the html kernel
-      (``preserve_pre``, ``lang_margin``), or the pdf lane
-      (``sources/pdf.pdf_extracted``);
+    - the pre-extraction gates (``pre_gates.apply_gates``: observed in
+      batch, filtered in the stream);
+    - extraction with language id in the same pass: the html kernel, or
+      the pdf lane (``sources/pdf.pdf_extracted``);
     - the ``keep_*`` flags (:func:`with_keep_flags`); the stream drops
       failing rows after each stage (``early_filter``), so every row
-      leaving it has passed every stage;
-    - BPE metering (``count_bpe``), else a null ``n_bpe_tokens``. It
-      runs after the flags: the batch job meters every row (its
-      ``kept_bpe_tokens`` sums the kept ones), the stream only rows it
-      keeps.
+      leaving it passed every stage;
+    - BPE metering (``count_bpe``), else a null ``n_bpe_tokens``. After
+      the flags, it meters every batch row (``kept_bpe_tokens`` sums
+      the kept ones) and only the rows the stream keeps.
 
     ``python_parallelism`` floors each batch Python stage. A streaming
-    frame cannot report its partition count, so each floor would
-    reshuffle every microbatch; the stream instead shuffles once, after
-    the gates and ahead of extraction. (The charset gate's Python
-    decode sees only the legacy/BOM tail of one union branch, so the
-    stream runs it unfloored rather than shuffle both branches.)"""
+    frame cannot report its partition count, so there every floor is a
+    shuffle: the stream shuffles once, after the gates and ahead of
+    extraction. Its charset gate decodes unfloored: that Python stage
+    sees only the legacy/BOM tail, on one branch of a union that a
+    shuffle ahead of it would run on both branches."""
+    from ..pystage import parallelism_floor
     from .bpe import load_vocab, with_bpe_counts
     from .pre_gates import active_gates, apply_gates
 
@@ -245,8 +244,6 @@ def page_scorer(
     floor = opts["python_parallelism"]
 
     def score(pages: DataFrame) -> tuple[DataFrame, Observation | None]:
-        from ..pystage import parallelism_floor
-
         pp = floor
         if streaming:
             pages, gate_obs = apply_gates(
@@ -287,11 +284,10 @@ def page_scorer(
             early_filter=streaming,
         )
         if vocab is not None:
-            return with_bpe_counts(
-                scored, text_col="extracted_text", vocab=vocab
-            ), gate_obs
-        return scored.withColumn(
-            "n_bpe_tokens", F.lit(None).cast("long")
-        ), gate_obs
+            scored = with_bpe_counts(scored, text_col="extracted_text",
+                                     vocab=vocab)
+        else:
+            scored = scored.withColumn("n_bpe_tokens", F.lit(None).cast("long"))
+        return scored, gate_obs
 
     return score

@@ -168,3 +168,44 @@ def test_stream_extract_is_source_transform_sink():
         "spark", "input_path", "output_path", "checkpoint",
         "transform", "schema", "available_now",
     ]
+
+
+def test_a_page_an_earlier_gate_drops_never_wins_a_window(spark, tmp_path):
+    """The batch gates flag instead of filter, so the windows see every
+    page: a page an earlier gate drops must still lose its window, as
+    if it had been filtered out. The newest capture of a url is an
+    image (content type), and the least alias of a canonical group is
+    noindex; the older capture and the other alias are kept, and
+    neither window counts a drop."""
+    from jobs.corpus_job import build_corpus
+
+    t = "the children were playing in the garden near the river all day"
+
+    def pg(head, text):
+        return f"<html><head>{head}</head><body><p>{text}</p></body></html>"
+
+    canon = '<link rel="canonical" href="https://a.org/main">'
+    day = datetime.datetime
+    rows = [
+        ("https://s.org/p", day(2026, 2, 1), b"\x89PNG\r\n\x1a\n" + b"\0" * 64),
+        ("https://s.org/p?utm_source=feed", day(2026, 1, 1),
+         pg("", t + " older capture").encode()),
+        ("https://a.org/a1", day(2026, 1, 1),
+         pg(canon + '<meta name="robots" content="noindex">',
+            t + " hidden alias").encode()),
+        ("https://a.org/a2", day(2026, 1, 1),
+         pg(canon, t + " visible alias").encode()),
+    ]
+    src, out = str(tmp_path / "pages"), str(tmp_path / "corpus")
+    spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary"
+    ).write.parquet(src)
+    funnel = build_corpus(
+        spark, src, out, min_quality=0.0, min_tokens=0,
+        sniff_content_type=True, snapshot_collapse=True, honor_meta=True,
+    )
+    keys = ("dropped_content_type", "dropped_stale_snapshot",
+            "dropped_noindex", "dropped_canonical_alias", "pages")
+    assert [funnel[k] for k in keys] == [1, 0, 1, 0, 2]
+    kept = {r.url for r in spark.read.parquet(out).select("url").collect()}
+    assert kept == {"https://s.org/p?utm_source=feed", "https://a.org/a2"}
