@@ -19,7 +19,9 @@ after the last gate counts each gate's drops over the pages that passed
 every earlier gate, riding the job's terminal write. Counting inside
 the chain would put a count below a window's shuffle, and adaptive
 execution drops an emptied shuffle stage from the final plan together
-with every count observed in it.
+with every count observed in it. A dropped page's body (each binary
+column) turns NULL at the gate that drops it, so the later gates'
+sniffs and regexes and the window shuffles do not pay for its bytes.
 
 ``GATES`` order is frozen (each gate drops or ranks only the survivors
 of the earlier ones): the url-only blocklist first; charset repair before
@@ -39,7 +41,7 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F, types as T
 
 from ..functions.charset import reencode_non_utf8
 from ..functions.multimodal import with_content_type
@@ -153,9 +155,12 @@ def apply_gates(
     named by each gate's funnel key counts the rows that gate removed:
     the rows that passed every earlier gate and that its keep predicate
     does not hold for, NULL included. The Observation is None when no
-    gate can drop a row."""
+    gate can drop a row. Observed, a dropped row runs on through the
+    later gates with its binary columns NULL."""
     keys = []
     carried: tuple[str, ...] = ()
+    bodies = [f.name for f in pages.schema.fields
+              if isinstance(f.dataType, T.BinaryType)]
     pages = pages.withColumn(PASSED, F.lit(True))
     for g, nxt in zip(gates, (*gates[1:], None)):
         flagged = g.build(pages, opts)
@@ -165,7 +170,9 @@ def apply_gates(
                 keys.append(g.key)
                 flagged = flagged.withColumn(
                     f"__{g.key}", F.col(PASSED) & ~keep
-                ).withColumn(PASSED, F.col(PASSED) & keep)
+                ).withColumn(PASSED, F.col(PASSED) & keep).withColumns(
+                    {c: F.when(F.col(PASSED), F.col(c)) for c in bodies}
+                )
             else:
                 flagged = flagged.filter(keep)
         helpers = (*carried, *g.drop)

@@ -62,9 +62,12 @@ def _opts(body, **kw) -> dict:
 
 def test_stream_shuffles_once_batch_plan_unchanged(spark, tmp_path):
     """Every parallelism floor on a streaming frame is a repartition:
-    the stream applies one, ahead of extraction; the batch plan keeps
-    its one floor (the charset tail branch; the union then has enough
-    partitions for the later Python stages)."""
+    the stream applies one, ahead of extraction. The batch count pins
+    the batch plan as it stands, defect included: its one floor sits in
+    the charset gate's tail branch, and the union then reports enough
+    partitions to skip the extraction floor although its rows stay in
+    the scan's partitioning (the FOUND line on parallelism_floor in
+    CHANGES.md)."""
     from jobs.corpus_job import build_corpus
     from jobs.stream_job import run_stream
     from ocrd_segment_spark.operators.corpus_filters import page_scorer
@@ -209,3 +212,35 @@ def test_a_page_an_earlier_gate_drops_never_wins_a_window(spark, tmp_path):
     assert [funnel[k] for k in keys] == [1, 0, 1, 0, 2]
     kept = {r.url for r in spark.read.parquet(out).select("url").collect()}
     assert kept == {"https://s.org/p?utm_source=feed", "https://a.org/a2"}
+
+
+def test_a_dropped_page_runs_on_without_its_body(spark):
+    """Observed, a page a gate drops runs on through the later gates
+    (the windows still rank it), but with its binary columns NULL, so
+    the later sniffs and the window shuffles skip its bytes."""
+    from pyspark.sql import functions as F
+
+    from ocrd_segment_spark.operators.pre_gates import PASSED, Gate, apply_gates
+
+    seen = []
+
+    def probe(df, o):
+        seen.append(df)
+        return df
+
+    gates = [
+        Gate("dropped_x", (), False, True, build=lambda df, o: df,
+             keep=lambda o: F.col("url") != "drop", drop=()),
+        Gate(None, (), False, True, build=probe, keep=None, drop=()),
+    ]
+    pages = spark.createDataFrame(
+        [("keep", "k", b"a"), ("drop", "d", b"b")],
+        "url string, text string, html binary",
+    )
+    kept, obs = apply_gates(pages, gates, {}, observe=True)
+    assert [tuple(r) for r in kept.collect()] == [("keep", "k", b"a")]
+    assert obs.get == {"dropped_x": 1}
+    rows = seen[0].select("url", "text", "html", PASSED).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("drop", "d", None, False), ("keep", "k", b"a", True),
+    ]
