@@ -2,7 +2,7 @@
 
 The per-page processors (extraction kernel, langid, charset decode,
 the WARC/PDF codecs, the media sniffers) are plain row functions.
-:func:`map_rows` runs one of them as a single narrow ``mapInPandas``
+:func:`map_rows` runs one of them as a single narrow ``mapInArrow``
 pass, and :func:`parallelism_floor` is the task-count floor every
 Python stage applies first. A stage that emits many rows per input
 (``sources/warc.warc_pages_bytes``) keeps its own batch loop but uses
@@ -19,6 +19,7 @@ import zipimport
 from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 # set on the gated zipimporter.invalidate_caches; the stock method
 # stays reachable as its __wrapped__
@@ -69,19 +70,6 @@ def install_zip_cache_gate() -> None:
     cls.invalidate_caches = invalidate_caches
 
 
-# pandas dtypes that carry a row function's None through as null (a
-# plain list of ints with a None would infer a float or object column)
-_PANDAS_DTYPES = {
-    T.ByteType: "Int8",
-    T.ShortType: "Int16",
-    T.IntegerType: "Int32",
-    T.LongType: "Int64",
-    T.BooleanType: "boolean",
-    T.FloatType: "float32",
-    T.DoubleType: "float64",
-}
-
-
 def parallelism_floor(
     df: DataFrame, python_parallelism: int | None
 ) -> DataFrame:
@@ -124,15 +112,16 @@ def map_rows(
     *,
     nullable_carry: bool = False,
 ) -> DataFrame:
-    """One ``mapInPandas`` pass of a row function.
+    """One ``mapInArrow`` pass of a row function.
 
     Only ``carry`` and ``inputs`` cross the Arrow boundary. Per row,
     ``fn(*input_values)`` returns one value per ``out_fields`` entry;
-    the output is the ``carry`` columns unchanged, then ``out_fields``.
-    Int, bool and double fields go through nullable pandas dtypes, so a
-    ``None`` comes out as null of the declared type. Carried fields keep
-    their input schema; ``nullable_carry`` declares them nullable at
-    every level instead."""
+    the output is the ``carry`` columns unchanged (the batch's own
+    Arrow arrays), then ``out_fields``, each built by one ``pa.array``
+    of its Arrow type, so a ``None`` comes out as null of the declared
+    type and a struct may be a tuple. Carried fields keep their input
+    schema; ``nullable_carry`` declares them nullable at every level
+    instead."""
     carry, inputs = list(carry), list(inputs)
     needed = list(dict.fromkeys(carry + inputs))
     src = df if set(needed) == set(df.columns) else df.select(*needed)
@@ -140,19 +129,21 @@ def map_rows(
     if nullable_carry:
         carried = [nullable(f) for f in carried]
     schema = T.StructType(carried + list(out_fields))
-    names = [f.name for f in out_fields]
-    dtypes = [_PANDAS_DTYPES.get(type(f.dataType)) for f in out_fields]
+    names = schema.names
+    types = [to_arrow_type(f.dataType) for f in out_fields]
 
     def batches(it: Iterator) -> Iterator:
         install_zip_cache_gate()
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in it:
-            rows = [fn(*args) for args in zip(*(pdf[c].tolist() for c in inputs))]
-            cols = list(zip(*rows)) if rows else [()] * len(names)
-            out = {c: pdf[c] for c in carry}
-            for name, dtype, col in zip(names, dtypes, cols):
-                out[name] = pd.array(col, dtype=dtype) if dtype else list(col)
-            yield pd.DataFrame(out, index=pdf.index)
+        for batch in it:
+            args = zip(*(batch.column(c).to_pylist() for c in inputs))
+            rows = [fn(*a) for a in args]
+            cols = zip(*rows) if rows else [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in carry]
+                + [pa.array(col, type=t) for col, t in zip(cols, types)],
+                names=names,
+            )
 
-    return parallelism_floor(src, python_parallelism).mapInPandas(batches, schema)
+    return parallelism_floor(src, python_parallelism).mapInArrow(batches, schema)

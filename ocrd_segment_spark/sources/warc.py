@@ -45,6 +45,7 @@ is part of the web-scale surface the graft adds.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..pystage import (
     install_zip_cache_gate, map_rows, nullable, parallelism_floor,
@@ -303,32 +304,30 @@ def warc_pages_bytes(
     Content-Length sliced in BYTES, so gzip/multibyte payloads arrive
     intact — pair with :func:`decode_content_encoding`. One
     Arrow-batched codec-lane stage."""
-    import pandas as pd
-
+    kept = [f.name for f in blobs.schema.fields if f.name in keep_cols]
+    fields = [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_date", T.StringType()),
+        T.StructField("http_status", T.IntegerType()),
+        T.StructField("content_type", T.StringType()),
+        T.StructField("location", T.StringType()),
+        T.StructField("content_encoding", T.StringType()),
+        T.StructField("html", T.BinaryType()),
+    ]
     schema = T.StructType(
-        [nullable(f) for f in blobs.schema.fields if f.name in keep_cols]
-        + [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_date", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("location", T.StringType()),
-            T.StructField("content_encoding", T.StringType()),
-            T.StructField("html", T.BinaryType()),
-        ]
+        [nullable(blobs.schema[k]) for k in kept] + fields
     )
+    types = [to_arrow_type(f.dataType) for f in fields]
 
     def gen(batches):
         install_zip_cache_gate()
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in keep_cols}
-            for k in ("url", "warc_date", "http_status", "content_type",
-                      "location", "content_encoding", "html"):
-                out[k] = []
-            for row in pdf.itertuples(index=False):
-                raw = getattr(row, data_col)
-                buf = bytes(raw) if raw is not None else b""
-                for rec in buf.split(b"WARC/1.0\r\n"):
+        import pyarrow as pa
+
+        for batch in batches:
+            src: list[int] = []  # the input row of each record
+            recs: list[tuple] = []
+            for i, raw in enumerate(batch.column(data_col).to_pylist()):
+                for rec in (raw or b"").split(b"WARC/1.0\r\n"):
                     if not rec:
                         continue
                     sep = rec.find(b"\r\n\r\n")
@@ -351,30 +350,25 @@ def warc_pages_bytes(
                     http_hdr = payload[:hsep] if hsep >= 0 else payload
                     body = payload[hsep + 4:] if hsep >= 0 else b""
                     sm = _B_STATUS.match(payload)
-                    for k in keep_cols:
-                        out[k].append(getattr(row, k))
-                    out["url"].append(
-                        _bfield(hdr, "WARC-Target-URI").decode("latin-1")
-                    )
-                    out["warc_date"].append(
-                        _bfield(hdr, "WARC-Date").decode("latin-1")
-                    )
-                    out["http_status"].append(
-                        int(sm.group(1)) if sm else None
-                    )
-                    out["content_type"].append(
-                        _bfield(http_hdr, "Content-Type").decode("latin-1")
-                    )
-                    out["location"].append(
-                        _bfield(http_hdr, "Location").decode("latin-1")
-                    )
-                    out["content_encoding"].append(
-                        _bfield(http_hdr, "Content-Encoding").decode("latin-1")
-                    )
-                    out["html"].append(body)
-            yield pd.DataFrame(out)
+                    src.append(i)
+                    recs.append((
+                        _bfield(hdr, "WARC-Target-URI").decode("latin-1"),
+                        _bfield(hdr, "WARC-Date").decode("latin-1"),
+                        int(sm.group(1)) if sm else None,
+                        _bfield(http_hdr, "Content-Type").decode("latin-1"),
+                        _bfield(http_hdr, "Location").decode("latin-1"),
+                        _bfield(http_hdr, "Content-Encoding").decode("latin-1"),
+                        body,
+                    ))
+            rows = pa.array(src, type=pa.int64())
+            cols = zip(*recs) if recs else [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(k).take(rows) for k in kept]
+                + [pa.array(col, type=t) for col, t in zip(cols, types)],
+                names=schema.names,
+            )
 
-    recs = parallelism_floor(blobs, python_parallelism).mapInPandas(
+    recs = parallelism_floor(blobs, python_parallelism).mapInArrow(
         gen, schema
     )
     # warc_ts derivation shared with the JVM path (ASCII-safe in SQL)

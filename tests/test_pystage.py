@@ -1,5 +1,5 @@
 """The shared Arrow row loop (ocrd_segment_spark/pystage.py): one
-``mapInPandas`` boundary and one parallelism floor for every
+``mapInArrow`` boundary and one parallelism floor for every
 one-row-in/one-row-out Python stage, and the stat-gated zip cache
 invalidation every worker-side loop installs."""
 
@@ -22,30 +22,41 @@ from ocrd_segment_spark.pystage import (
 from ocrd_segment_spark.sources.warc import decode_warc_gz
 
 PKG = pathlib.Path(ocrd_segment_spark.__file__).parent
+JOBS = PKG.parent / "jobs"
 
 
-def test_map_in_pandas_only_in_the_shared_loop():
-    """``.mapInPandas(`` is called only by pystage.map_rows and by the
-    one many-rows-per-input stage (warc_pages_bytes), and no module
-    reaches for the retired private floor helper."""
+def _calls(attr: str) -> set[tuple[str, str]]:
+    """(module, enclosing function) of every ``.<attr>(`` call in the
+    package and the jobs."""
     sites = set()
-    for path in sorted(PKG.rglob("*.py")):
-        src = path.read_text()
-        assert "_cap_python_tasks" not in src, path
-        for fn in ast.walk(ast.parse(src)):
+    for path in sorted([*PKG.rglob("*.py"), *JOBS.glob("*.py")]):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
             if not isinstance(fn, ast.FunctionDef):
                 continue
             for node in ast.walk(fn):
                 if (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "mapInPandas"
+                    and node.func.attr == attr
                 ):
-                    sites.add((path.relative_to(PKG).as_posix(), fn.name))
-    assert sites == {
-        ("pystage.py", "map_rows"),
-        ("sources/warc.py", "warc_pages_bytes"),
+                    rel = path.relative_to(PKG.parent).as_posix()
+                    sites.add((rel, fn.name))
+    return sites
+
+
+def test_map_in_arrow_only_in_the_shared_loops():
+    """``.mapInArrow(`` is called only by pystage.map_rows and by the
+    one many-rows-per-input stage (warc_pages_bytes), no
+    ``.mapInPandas(`` call is left, and no module reaches for the
+    retired private floor helper."""
+    for path in PKG.rglob("*.py"):
+        assert "_cap_python_tasks" not in path.read_text(), path
+    assert _calls("mapInArrow") == {
+        ("ocrd_segment_spark/pystage.py", "map_rows"),
+        ("ocrd_segment_spark/sources/warc.py", "warc_pages_bytes"),
     }
+    assert _calls("mapInPandas") == set()
 
 
 def _first_call(fn: ast.FunctionDef) -> str | None:
