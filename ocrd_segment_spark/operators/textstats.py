@@ -21,7 +21,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..pystage import install_zip_cache_gate, map_rows, parallelism_floor
+from ..pystage import map_rows, parallelism_floor, prepare_worker_task
 
 
 def tokens_col(text_col: str = "text") -> Column:
@@ -561,7 +561,7 @@ def with_lm_bits(
     @pandas_udf("double")
     def _bits(texts: pd.Series, langs: pd.Series) -> pd.Series:
         nonlocal _bits_built
-        install_zip_cache_gate()
+        prepare_worker_task()
         import numpy as np
 
         # per-lang sorted key/value arrays, built once per worker from
@@ -632,7 +632,7 @@ def with_compression_cols(
 
     @pandas_udf("double")
     def _ratio(texts: pd.Series) -> pd.Series:
-        install_zip_cache_gate()
+        prepare_worker_task()
         import zlib
 
         ratios = []

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..pystage import (
-    install_zip_cache_gate, map_rows, nullable, parallelism_floor,
+    map_rows, nullable, parallelism_floor, prepare_worker_task,
 )
 
 CRLF = "\r\n"
@@ -320,7 +320,7 @@ def warc_pages_bytes(
     types = [to_arrow_type(f.dataType) for f in fields]
 
     def gen(batches):
-        install_zip_cache_gate()
+        prepare_worker_task()
         import pyarrow as pa
 
         for batch in batches:

@@ -1,12 +1,16 @@
 """The shared Arrow row loop (ocrd_segment_spark/pystage.py): one
 ``mapInArrow`` boundary and one parallelism floor for every
-one-row-in/one-row-out Python stage, and the stat-gated zip cache
-invalidation every worker-side loop installs."""
+one-row-in/one-row-out Python stage, and the per-task hook every
+worker-side loop calls first (the stat-gated zip cache invalidation
+and the import-heap freeze)."""
 
 import ast
+import gc
 import importlib
 import pathlib
 import sys
+import types
+import weakref
 import zipfile
 import zipimport
 
@@ -15,9 +19,10 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 import ocrd_segment_spark
+from ocrd_segment_spark import pystage
 from ocrd_segment_spark.plans import audit
 from ocrd_segment_spark.pystage import (
-    ZIP_GATE_MARKER, install_zip_cache_gate, map_rows,
+    ZIP_GATE_MARKER, install_zip_cache_gate, map_rows, prepare_worker_task,
 )
 from ocrd_segment_spark.sources.warc import decode_warc_gz
 
@@ -71,8 +76,9 @@ def _first_call(fn: ast.FunctionDef) -> str | None:
 
 def test_worker_loops_install_the_zip_gate_first():
     """The worker-side loops on the extract and corpus paths each call
-    install_zip_cache_gate as their first statement, so every task of a
-    reused worker skips the per-task zip directory re-reads."""
+    prepare_worker_task as their first statement, so every task of a
+    reused worker skips the per-task zip directory re-reads and the
+    daemon's per-task full collection skips the frozen imports."""
     loops = {
         ("pystage.py", "map_rows", "batches"),
         ("sources/warc.py", "warc_pages_bytes", "gen"),
@@ -88,7 +94,7 @@ def test_worker_loops_install_the_zip_gate_first():
                     if (
                         isinstance(sub, ast.FunctionDef)
                         and sub.name == inner
-                        and _first_call(sub) == "install_zip_cache_gate"
+                        and _first_call(sub) == "prepare_worker_task"
                     ):
                         found.add((rel, outer, inner))
     assert found == loops
@@ -250,6 +256,86 @@ def test_map_rows_installs_the_zip_gate_in_its_worker(spark):
             [T.StructField("gated", T.BooleanType())],
         )
         assert [r["gated"] for r in out.collect()] == [True] * 16
+
+
+@pytest.fixture
+def heap_freeze(monkeypatch, stock_invalidate):
+    """prepare_worker_task as a fresh worker meets it: nothing frozen
+    yet, every gc.freeze() counted. The test process's heap is
+    unfrozen and its zip gate taken out after the test."""
+    monkeypatch.setattr(pystage, "_frozen_at", 0)
+    freezes = []
+    stock = gc.freeze
+
+    def counting_freeze():
+        freezes.append(len(sys.modules))
+        stock()
+
+    monkeypatch.setattr(gc, "freeze", counting_freeze)
+    yield freezes
+    gc.unfreeze()
+
+
+def test_worker_hook_refreezes_once_per_late_import(heap_freeze, monkeypatch):
+    prepare_worker_task()
+    assert len(heap_freeze) == 1
+    late = types.ModuleType("late_import_probe")
+    monkeypatch.setitem(sys.modules, late.__name__, late)
+    for _ in range(3):
+        prepare_worker_task()
+    assert len(heap_freeze) == 2
+
+
+def test_worker_hook_without_a_new_module_keeps_the_freeze(heap_freeze):
+    prepare_worker_task()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    garbage = [[i] for i in range(1000)]  # tracked objects made after it
+    prepare_worker_task()
+    assert gc.get_freeze_count() == frozen
+    assert len(heap_freeze) == 1
+    del garbage
+
+
+def test_worker_hook_leaves_later_cycles_collectable(heap_freeze):
+    prepare_worker_task()
+
+    class Node:
+        pass
+
+    node = Node()
+    node.self = node
+    ref = weakref.ref(node)
+    del node
+    gc.collect()
+    assert ref() is None
+
+
+def test_map_rows_workers_keep_one_freeze(spark):
+    """A second map_rows stage's row function finds its worker's heap
+    frozen, and a worker that ran the first stage keeps one freeze
+    count over all its tasks: nothing is imported after the first
+    stage, so no task re-freezes and the frozen heap stays bounded."""
+
+    def probe(_):
+        import gc
+        import os
+
+        return os.getpid(), gc.get_freeze_count()
+
+    fields = [
+        T.StructField("pid", T.LongType()),
+        T.StructField("frozen", T.LongType()),
+    ]
+    df = spark.range(20, numPartitions=20)
+    warm = {r["pid"] for r in map_rows(df, (), ("id",), probe, fields).collect()}
+    rows = map_rows(df, (), ("id",), probe, fields).collect()
+    assert len(rows) == 20 and all(r["frozen"] > 0 for r in rows)
+    counts: dict[int, set[int]] = {}
+    for r in rows:
+        if r["pid"] in warm:
+            counts.setdefault(r["pid"], set()).add(r["frozen"])
+    assert counts and all(len(c) == 1 for c in counts.values()), counts
 
 
 def test_map_rows_none_is_typed_null(spark):
