@@ -27,7 +27,7 @@ mojibake. This module adds the standard two-step ingestion repair:
    alias resolution belongs to the decoder — Python's codec registry
    already owns that table).
 
-2. :func:`decode_pages` — Arrow-batched ``mapInPandas`` decode of the
+2. :func:`decode_pages` — Arrow-batched ``mapInArrow`` decode of the
    non-UTF-8 tail: per batch, bytes → str via the sniffed codec
    (``errors='replace'``, leading U+FEFF stripped), unknown codecs
    fall back to utf-8 with ``decode_ok=false``. At crawl scale the
@@ -43,6 +43,8 @@ from __future__ import annotations
 import codecs
 
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from ..pystage import map_rows, parallelism_floor
 
 CHARSET_RE = "charset[ \\t\\n\\r\\f]*=[ \\t\\n\\r\\f]*[\"']?([a-zA-Z0-9_.:-]+)"
 SNIFF_CHARS = 1024
@@ -92,7 +94,6 @@ def decode_pages(
     claimed codec is unknown to the registry and utf-8 was used
     instead). Deterministic: codec resolution is Python's codec
     registry (alias handling included), errors='replace'."""
-    from ..pystage import map_rows
 
     def row(raw, cs):
         if raw is None:
@@ -137,19 +138,27 @@ def reencode_non_utf8(
     ``charset_source`` lineage columns; downstream extraction reads
     the repaired ``html`` bytes and needs no other change.
 
+    ``python_parallelism`` floors ``df`` once, ahead of the split, so
+    both branches keep their rows spread over the floored partitions
+    and a later floor sees where the rows are (flooring only the tail
+    left the clean majority in the scan's partitioning while the union
+    reported enough partitions to skip the extraction floor). Both
+    branches read the same round-robin exchange; the tail decode takes
+    no second floor.
+
     Scale shape, stated honestly: Spark does NOT reuse a scan across
-    union branches, so the source is read TWICE with complementary
-    filters (the sniff predicate is not parquet-pushable). The
-    trade is deliberate: the clean >95% majority carries ZERO Python
-    cost, while the alternative single-pass shape would ship every
-    page's bytes through an extra Arrow round-trip on top of the one
-    the extraction kernel already pays. If a pipeline is scan-I/O
-    bound rather than Python-bound, sniff once into a persisted
-    charset column instead and filter on that. Row order across the
-    union is not preserved — extraction is url-keyed and
-    order-independent.
+    union branches, so without a floor the source is read TWICE with
+    complementary filters (the sniff predicate is not
+    parquet-pushable). The trade is deliberate: the clean >95%
+    majority carries ZERO Python cost, while the alternative
+    single-pass shape would ship every page's bytes through an extra
+    Arrow round-trip on top of the one the extraction kernel already
+    pays. If a pipeline is scan-I/O bound rather than Python-bound,
+    sniff once into a persisted charset column instead and filter on
+    that. Row order across the union is not preserved — extraction is
+    url-keyed and order-independent.
     """
-    sniffed = with_charset(df, html_col)
+    sniffed = with_charset(parallelism_floor(df, python_parallelism), html_col)
     clean = sniffed.filter(
         (F.col("charset") == "utf-8") & (F.col("charset_source") != "bom")
     )
@@ -157,7 +166,7 @@ def reencode_non_utf8(
         (F.col("charset") != "utf-8") | (F.col("charset_source") == "bom")
     )
     repaired = (
-        decode_pages(tail, html_col, python_parallelism)
+        decode_pages(tail, html_col)
         .withColumn(html_col, F.encode("decoded_text", "UTF-8"))
         .drop("decoded_text", "decode_ok")
     )

@@ -119,3 +119,44 @@ def test_non_text_codec_claims_cannot_crash_decode(spark):
     out = {r["url"]: r for r in decode_pages(with_charset(df)).collect()}
     assert all(not out[u]["decode_ok"] for u in ("hex", "b64", "undef"))
     assert "payload" in out["hex"]["decoded_text"]
+
+
+def test_sniff_floor_spreads_both_branches(spark, tmp_path):
+    """``python_parallelism`` floors the pages once, ahead of the
+    clean/tail split: the clean majority of a one-file input reaches
+    extraction spread over the floored partitions, not in the scan's
+    single partition. Catalyst pushes each branch's sniff filter below
+    the round-robin repartition, so each branch shuffles only its own
+    rows."""
+    from pyspark.sql import functions as F
+
+    from ocrd_segment_spark.functions.charset import reencode_non_utf8
+    from ocrd_segment_spark.pipeline import extract_pages
+    from ocrd_segment_spark.plans.audit import physical_plan
+
+    src = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [
+            (
+                f"https://e.org/{i}",
+                (b'<meta charset="windows-1252">' if i % 10 == 0 else b"")
+                + b"<html><body><p>page %d caf\xe9</p></body></html>" % i,
+            )
+            for i in range(80)
+        ],
+        "url string, html binary",
+    ).coalesce(1).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert pages.rdd.getNumPartitions() == 1
+    out = extract_pages(
+        reencode_non_utf8(pages, python_parallelism=8), python_parallelism=8
+    )
+    sizes = [
+        r["n"]
+        for r in out.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    assert sum(sizes) == 80
+    assert max(sizes) <= 10 and len(sizes) >= 8, sizes
+    assert physical_plan(out).count("RoundRobinPartitioning") == 2

@@ -63,11 +63,12 @@ def _opts(body, **kw) -> dict:
 def test_stream_shuffles_once_batch_plan_unchanged(spark, tmp_path):
     """Every parallelism floor on a streaming frame is a repartition:
     the stream applies one, ahead of extraction. The batch count pins
-    the batch plan as it stands, defect included: its one floor sits in
-    the charset gate's tail branch, and the union then reports enough
-    partitions to skip the extraction floor although its rows stay in
-    the scan's partitioning (the FOUND line on parallelism_floor in
-    CHANGES.md)."""
+    the batch plan: the charset gate floors the pages once, ahead of
+    its clean/tail split, and Catalyst pushes each branch's sniff
+    filter below that repartition, so the plan holds two round-robin
+    exchanges, each shuffling only its own branch's rows; the union
+    then spreads every row over the floored partitions, and extraction
+    takes no floor of its own."""
     from jobs.corpus_job import build_corpus
     from jobs.stream_job import run_stream
     from ocrd_segment_spark.operators.corpus_filters import page_scorer
@@ -81,7 +82,7 @@ def test_stream_shuffles_once_batch_plan_unchanged(spark, tmp_path):
     ).write.parquet(src)
     kw = dict(python_parallelism=8, sniff_charset=True, max_compression=0.9)
     for body, streaming, pages, want in (
-        (build_corpus, False, spark.read.parquet(src), 1),
+        (build_corpus, False, spark.read.parquet(src), 2),
         (run_stream, True, spark.readStream.schema(PAGES_SCHEMA).parquet(src), 1),
     ):
         scored, _ = page_scorer(
