@@ -372,6 +372,54 @@ def test_map_rows_none_is_typed_null(spark):
     }
 
 
+def test_map_rows_builds_nested_binary_and_numpy_values(spark):
+    """Each out field is one pa.array of its Arrow type: an
+    array<struct> and a struct built from tuples, a binary field, and
+    numpy scalars into int, double and bool fields come out as the
+    declared Spark values, None included."""
+    import numpy as np
+
+    span = T.StructType([
+        T.StructField("start", T.LongType(), False),
+        T.StructField("label", T.StringType()),
+    ])
+    df = spark.createDataFrame(pd.DataFrame({"x": [0, 1, 2]}))
+
+    def row(x):
+        if x == 0:
+            return None, None, None, None, None, None
+        spans = [(i, None if i else f"s{x}") for i in range(x)]
+        return (
+            spans, (x, "top"), bytes([x, 0, 255]),
+            np.int64(x * 7), np.float64(x / 8), np.bool_(x > 1),
+        )
+
+    out = map_rows(
+        df, ("x",), ("x",), row,
+        [
+            T.StructField("spans", T.ArrayType(span)),
+            T.StructField("top", span),
+            T.StructField("blob", T.BinaryType()),
+            T.StructField("i", T.IntegerType()),
+            T.StructField("d", T.DoubleType()),
+            T.StructField("b", T.BooleanType()),
+        ],
+    )
+    rows = {r["x"]: r.asDict(recursive=True) for r in out.collect()}
+    assert rows[0] == dict(
+        x=0, spans=None, top=None, blob=None, i=None, d=None, b=None
+    )
+    assert rows[2] == dict(
+        x=2,
+        spans=[dict(start=0, label="s2"), dict(start=1, label=None)],
+        top=dict(start=2, label="top"),
+        blob=bytearray(b"\x02\x00\xff"),
+        i=14, d=0.25, b=True,
+    )
+    assert rows[1]["spans"] == [dict(start=0, label="s1")]
+    assert (rows[1]["i"], rows[1]["b"]) == (7, False)
+
+
 def test_decode_warc_gz_keeps_a_finer_partitioning(spark):
     """``python_parallelism`` is a floor for the gzip member walk too:
     an input already split at least that finely is not shuffled, a
