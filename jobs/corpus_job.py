@@ -26,7 +26,7 @@ per-page chain the stream job runs too, defined once in
                  (``SIDE_OUTPUTS``: outlinks, feed links, tables, image
                  pairs) read the input before any gate.
 1. extract     — HTML → (extracted_text, region_spans, lineage); the
-                 shuffle-free mapInPandas kernel path, or the PDF lane
+                 shuffle-free mapInArrow kernel path, or the PDF lane
                  (``--input-format pdf``, sources/pdf).
 2. score       — char-n-gram language id scored INSIDE the extraction
                  pass + quality as pure column math: narrow, zero

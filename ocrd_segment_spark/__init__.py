@@ -11,8 +11,8 @@ re-expressed as 1-D character-interval algebra), and serializes the
 surviving main-content regions in reading order into ``extracted_text``
 with per-region character spans.
 
-Everything is idiomatic PySpark: DataFrame transforms + Arrow-vectorized
-pandas UDFs (``mapInPandas``), never per-row Python, never RDDs.
+Everything is idiomatic PySpark: DataFrame transforms + Arrow-batched
+Python stages (``mapInArrow``), never per-row UDFs, never RDDs.
 """
 
 KERNEL_VERSION = "1.6.0"

@@ -838,7 +838,7 @@ def q_multimodal_meta(spark, sf_dir):
     container-header decode — synthesized PNG/GIF/JPEG headers
     (dimensions derived from document columns) plus raw text bytes,
     sniffed and measured by functions/multimodal.sniff_image in one
-    vectorized mapInPandas pass. Only the pixel decode stays stubbed
+    vectorized mapInArrow pass. Only the pixel decode stays stubbed
     (no codec libs in this container); magic, width, height and bit
     depth are parsed from the actual header bytes and verified
     value-exact against the closed-form oracle."""

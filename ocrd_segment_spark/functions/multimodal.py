@@ -132,7 +132,7 @@ def fake_decode(blob: bytes, dim: int = 8) -> tuple[list[float], int, int]:
 
 def binary_meta(df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id") -> DataFrame:
     """Typed metadata over a binary column via one vectorized
-    mapInPandas pass (the S2 derived-image-scan analog): size, hash,
+    mapInArrow pass (the S2 derived-image-scan analog): size, hash,
     sniffed modality, and REAL image dimensions/bit depth from the
     container header (:func:`sniff_image`); non-image bytes get
     modality 'binary' with null dims."""

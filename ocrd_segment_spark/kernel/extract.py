@@ -4,7 +4,7 @@ This is the web-graft analog of the reference's per-page processor
 chain (``ocrd-segment-repair`` → extract: reference repair.py:107-186
 stage order; extract_pages.py:289-376 hierarchy walk). One call = one
 document; the Spark pipeline maps it over Arrow batches
-(``mapInPandas``) and the single-process oracle maps it over a list.
+(``mapInArrow``) and the single-process oracle maps it over a list.
 Byte-identical output between the two is guaranteed by construction:
 both import THIS function (SURVEY.md §7.2).
 

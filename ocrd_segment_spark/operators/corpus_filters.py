@@ -85,7 +85,7 @@ def with_keep_flags(
     dropped rows (the streaming job): the expensive Python stages (LM,
     compression) then only see survivors of the cheap filters, which
     Catalyst cannot arrange itself (predicates don't push through
-    MapInPandas black boxes — review-pass-4 finding). The batch job
+    MapInArrow black boxes — review-pass-4 finding). The batch job
     keeps ``early_filter=False`` because its funnel Observations count
     the dropped rows per stage."""
     from .textstats import with_gopher_passes, with_quality
@@ -107,7 +107,7 @@ def with_keep_flags(
     if gopher:
         # pure column math — stays inside the same narrow pass as
         # quality scoring (no join: a url-keyed self-join here would
-        # branch the lineage and re-run the mapInPandas extraction).
+        # branch the lineage and re-run the mapInArrow extraction).
         # n_tokens is re-derived value-exact by the signals.
         scored = with_gopher_passes(
             scored, text_col="extracted_text"
@@ -131,7 +131,7 @@ def with_keep_flags(
         # signal; the 20-letter floor keeps fragments safe). Pure JVM
         # regexp_count probes placed BEFORE the Python LM/compression
         # stages — in early_filter mode spam must never pay a
-        # mapInPandas pass just to be dropped by nine regex probes.
+        # Python pass just to be dropped by nine regex probes.
         # main_script / main_fraction stay as audit signals; the
         # per-script counts and the derivable flags are dropped.
         from .scriptmix import SCRIPT_CLASSES, with_script_mix

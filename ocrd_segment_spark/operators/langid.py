@@ -58,7 +58,7 @@ tests/test_langid.py pins behavior):
 
 Scale shape: the model is a few thousand (gram, lang, logp) rows — a
 closure constant, shipped once per executor like a broadcast; scoring
-is one Arrow-batched mapInPandas pass, NARROW (zero shuffle, no join),
+is one Arrow-batched mapInArrow pass, NARROW (zero shuffle, no join),
 which is what lets jobs/corpus_job.py keep quality+lang scoring in the
 single linear lineage after extraction (a relational explode/agg form
 would need a url join back and re-run the extraction branch).
@@ -625,7 +625,7 @@ def with_unit_langs(
     show.
 
     Scale shape: the explode is scan-stage; the scoring pass is the
-    same Arrow-batched mapInPandas as :func:`with_lang_ngram` applied
+    same Arrow-batched mapInArrow pass as :func:`with_lang_ngram` applied
     at unit grain — total scoring work is unchanged (the model is
     O(chars) and the chars are the same ones), the row count is what
     grows, so cap it with ``python_parallelism`` exactly like the

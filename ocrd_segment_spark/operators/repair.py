@@ -1,7 +1,7 @@
 """DataFrame-level region repair — ``ocrd-segment-repair`` semantics
 (reference repair.py:107-186 stage order) over an arbitrary spans
 table, independent of the HTML kernel (which fuses the same stages
-per-document inside mapInPandas; this operator is for span tables
+per-document inside mapInArrow; this operator is for span tables
 that arrive WITHOUT their source documents, e.g. imported COCO-style
 detections).
 

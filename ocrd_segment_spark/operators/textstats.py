@@ -282,7 +282,7 @@ def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     single-element ``transform`` lambda VARIABLES, not chained
     withColumns: CollapseProject inlines column intermediates into
     every use site, and in plans without whole-stage codegen (a
-    streaming microbatch after mapInPandas) interpreted evaluation has
+    streaming microbatch after a Python map stage) interpreted evaluation has
     no CSE — the chained form re-sorted the document once PER
     CHARACTER there (~0.2 s/page, review-found via a hung stream; the
     lambda-bound form is the same trap fix as functions/sublevels)."""
@@ -524,7 +524,7 @@ def with_lm_bits(
     other columns (incl. the nested region_spans/lineage structs)
     stay JVM-side instead of round-tripping through Python, which is
     the guide-§4 "pass only the columns the function needs" rule (the
-    previous pass-through mapInPandas shipped every column both
+    previous pass-through map stage shipped every column both
     ways). The collected model rides the closure as a broadcast-sized
     constant. Frozen semantics identical to the relational scorer:
     per distinct bigram in SORTED order, fold n·surprisal; divide by
@@ -624,7 +624,7 @@ def with_compression_cols(
     math, same round/empty-doc pinning, verified equal by pytest).
     One Arrow-batched scalar pandas UDF over ONLY the text column;
     every other column stays JVM-side (guide-§4 column-pruning rule —
-    the previous pass-through mapInPandas shipped the nested structs
+    the previous pass-through map stage shipped the nested structs
     through Python both ways)."""
     import pandas as pd
 

@@ -8,10 +8,11 @@ Design (Spark-first, SURVEY.md §2.10):
 - one ``select`` before the kernel so Catalyst prunes unused columns at
   the parquet scan (only ``url, html`` cross the Arrow boundary);
 - the whole per-document chain (parse → repair → serialize) is ONE
-  ``mapInPandas`` stage — operator fusion inside the UDF mirrors the
-  reference's single in-memory page pass (repair.py:107-186) and
-  crosses JVM↔Python exactly once per document;
-- no shuffle anywhere in the extract path: mapInPandas is a narrow
+  ``mapInArrow`` stage (``pystage.map_rows``) — operator fusion inside
+  the row function mirrors the reference's single in-memory page pass
+  (repair.py:107-186) and crosses JVM↔Python exactly once per
+  document, Arrow to Python lists and back with no pandas in between;
+- no shuffle anywhere in the extract path: mapInArrow is a narrow
   transformation, so 100 TB of pages = pure scan→transform→write with
   zero exchange. Skew is irrelevant to the narrow path; for downstream
   per-host aggregations we expose an explicit salted key

@@ -2,7 +2,7 @@
 
 - ``stream_extract``: the exactly-once scaffolding — readStream of a
   parquet directory → one ``transform`` (by default the SAME
-  ``extract_pages`` as the batch path; mapInPandas is
+  ``extract_pages`` as the batch path; mapInArrow is
   streaming-capable) → parquet sink with checkpoint. Byte-identity vs
   the batch path is pytest-enforced (tests/test_streaming.py) — the
   kernel cannot tell it is running under a microbatch.
