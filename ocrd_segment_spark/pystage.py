@@ -127,6 +127,19 @@ def nullable(field: T.StructField) -> T.StructField:
     return T.StructField(field.name, deep(field.dataType))
 
 
+def record_batch(carried: list, rows: list[tuple], types: list, names: list[str]):
+    """An Arrow record batch of the ``carried`` arrays as they are, then
+    one column per ``types`` entry taken from ``rows`` (a tuple per
+    output row) and built by a single ``pa.array`` of that type."""
+    import pyarrow as pa
+
+    cols = zip(*rows) if rows else [()] * len(types)
+    return pa.RecordBatch.from_arrays(
+        carried + [pa.array(col, type=t) for col, t in zip(cols, types)],
+        names=names,
+    )
+
+
 def map_rows(
     df: DataFrame,
     carry: Sequence[str],
@@ -159,16 +172,11 @@ def map_rows(
 
     def batches(it: Iterator) -> Iterator:
         prepare_worker_task()
-        import pyarrow as pa
-
         for batch in it:
             args = zip(*(batch.column(c).to_pylist() for c in inputs))
-            rows = [fn(*a) for a in args]
-            cols = zip(*rows) if rows else [()] * len(types)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in carry]
-                + [pa.array(col, type=t) for col, t in zip(cols, types)],
-                names=names,
+            yield record_batch(
+                [batch.column(c) for c in carry],
+                [fn(*a) for a in args], types, names,
             )
 
     return parallelism_floor(src, python_parallelism).mapInArrow(batches, schema)

@@ -49,6 +49,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..pystage import (
     map_rows, nullable, parallelism_floor, prepare_worker_task,
+    record_batch,
 )
 
 CRLF = "\r\n"
@@ -360,12 +361,10 @@ def warc_pages_bytes(
                         _bfield(http_hdr, "Content-Encoding").decode("latin-1"),
                         body,
                     ))
-            rows = pa.array(src, type=pa.int64())
-            cols = zip(*recs) if recs else [()] * len(types)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(k).take(rows) for k in kept]
-                + [pa.array(col, type=t) for col, t in zip(cols, types)],
-                names=schema.names,
+            src_rows = pa.array(src, type=pa.int64())
+            yield record_batch(
+                [batch.column(k).take(src_rows) for k in kept],
+                recs, types, schema.names,
             )
 
     recs = parallelism_floor(blobs, python_parallelism).mapInArrow(
