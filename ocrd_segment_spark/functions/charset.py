@@ -34,8 +34,8 @@ mojibake. This module adds the standard two-step ingestion repair:
    sniff routes >95% of pages down the existing zero-Python UTF-8
    path: call decode only on the ``charset != 'utf-8'`` partition
    (the filter is a scan-stage predicate), so the Python stage is
-   tail-sized; ``python_parallelism`` is the same parallelism floor
-   as in extract_pages.
+   tail-sized; :func:`reencode_non_utf8` floors its input once, ahead
+   of that split, with the same parallelism floor as extract_pages.
 """
 
 from __future__ import annotations
@@ -84,11 +84,7 @@ def with_charset(
     )
 
 
-def decode_pages(
-    df: DataFrame,
-    html_col: str = "html",
-    python_parallelism: int | None = None,
-) -> DataFrame:
+def decode_pages(df: DataFrame, html_col: str = "html") -> DataFrame:
     """``df`` (already carrying ``charset`` from :func:`with_charset`)
     + ``decoded_text`` (string) + ``decode_ok`` (false when the
     claimed codec is unknown to the registry and utf-8 was used
@@ -120,7 +116,6 @@ def decode_pages(
             T.StructField("decoded_text", T.StringType()),
             T.StructField("decode_ok", T.BooleanType()),
         ],
-        python_parallelism,
         nullable_carry=True,
     )
 
@@ -139,24 +134,24 @@ def reencode_non_utf8(
     the repaired ``html`` bytes and needs no other change.
 
     ``python_parallelism`` floors ``df`` once, ahead of the split, so
-    both branches keep their rows spread over the floored partitions
-    and a later floor sees where the rows are (flooring only the tail
-    left the clean majority in the scan's partitioning while the union
-    reported enough partitions to skip the extraction floor). Both
-    branches read the same round-robin exchange; the tail decode takes
-    no second floor.
+    the rows of both branches reach extraction spread over the floored
+    partitions. A floor on the tail alone would leave the clean
+    majority in the scan's partitioning, and the union's partition
+    count would then skip the extraction floor. Catalyst pushes each
+    branch's filter below the repartition, so each branch shuffles
+    only its own rows; the tail decode takes no second floor.
 
     Scale shape, stated honestly: Spark does NOT reuse a scan across
-    union branches, so without a floor the source is read TWICE with
-    complementary filters (the sniff predicate is not
-    parquet-pushable). The trade is deliberate: the clean >95%
-    majority carries ZERO Python cost, while the alternative
-    single-pass shape would ship every page's bytes through an extra
-    Arrow round-trip on top of the one the extraction kernel already
-    pays. If a pipeline is scan-I/O bound rather than Python-bound,
-    sniff once into a persisted charset column instead and filter on
-    that. Row order across the union is not preserved — extraction is
-    url-keyed and order-independent.
+    union branches, so the source is read TWICE with complementary
+    filters (the sniff predicate is not parquet-pushable). The
+    trade is deliberate: the clean >95% majority carries ZERO Python
+    cost, while the alternative single-pass shape would ship every
+    page's bytes through an extra Arrow round-trip on top of the one
+    the extraction kernel already pays. If a pipeline is scan-I/O
+    bound rather than Python-bound, sniff once into a persisted
+    charset column instead and filter on that. Row order across the
+    union is not preserved — extraction is url-keyed and
+    order-independent.
     """
     sniffed = with_charset(parallelism_floor(df, python_parallelism), html_col)
     clean = sniffed.filter(

@@ -31,22 +31,24 @@ JOBS = PKG.parent / "jobs"
 
 
 def _calls(attr: str) -> set[tuple[str, str]]:
-    """(module, enclosing function) of every ``.<attr>(`` call in the
-    package and the jobs."""
+    """(module, innermost enclosing function or ``<module>``) of every
+    ``.<attr>(`` call in the package and the jobs."""
     sites = set()
+
+    def visit(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == attr
+            ):
+                sites.add((rel, scope))
+            inner = child.name if isinstance(child, ast.FunctionDef) else scope
+            visit(child, rel, inner)
+
     for path in sorted([*PKG.rglob("*.py"), *JOBS.glob("*.py")]):
-        tree = ast.parse(path.read_text())
-        for fn in ast.walk(tree):
-            if not isinstance(fn, ast.FunctionDef):
-                continue
-            for node in ast.walk(fn):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == attr
-                ):
-                    rel = path.relative_to(PKG.parent).as_posix()
-                    sites.add((rel, fn.name))
+        rel = path.relative_to(PKG.parent).as_posix()
+        visit(ast.parse(path.read_text()), rel, "<module>")
     return sites
 
 
