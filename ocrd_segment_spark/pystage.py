@@ -8,12 +8,18 @@ Python stage applies first. A stage that emits many rows per input
 (``sources/warc.warc_pages_bytes``) keeps its own batch loop but uses
 the same floor. Every worker-side loop starts with
 :func:`prepare_worker_task`.
+
+No pandas runs on this boundary, and none is loaded for it: pyarrow
+imports pandas at the first ``pa.array`` over a Python list (its lazy
+probe for pandas inputs), which would add about 31 MB to every worker,
+so :func:`prepare_worker_task` answers that probe once per process.
 """
 
 from __future__ import annotations
 
 import functools
 import gc
+import importlib.abc
 import os
 import sys
 import zipimport
@@ -71,24 +77,78 @@ def install_zip_cache_gate() -> None:
     cls.invalidate_caches = invalidate_caches
 
 
+class _NoPandas(importlib.abc.MetaPathFinder):
+    """Refuses ``import pandas`` while it is on ``sys.meta_path``."""
+
+    def find_spec(self, name, path=None, target=None):
+        if name == "pandas":
+            raise ModuleNotFoundError(f"No module named {name!r}", name=name)
+        return None
+
+
+def answer_pandas_probe() -> None:
+    """Let pyarrow's lazy pandas probe find pandas absent, unless
+    pandas is already imported. ``sys.meta_path`` is left as found.
+
+    The first ``pa.array`` over a Python list asks pyarrow's pandas
+    shim whether pandas is installed, and asking imports it (pyarrow
+    16.1.0 ``array.pxi:52`` → ``pandas-shim.pxi:122``): about 31 MB of
+    RSS and 0.2-0.4 CPU-s in a worker that never calls pandas. With
+    pandas refused for one ``pa.array``, the shim records "tried,
+    absent" for that ``raise_=False`` probe only. Every call that needs
+    pandas (``to_pandas``, ``pandas_api.series``/``data_frame``)
+    retries the import, so a pandas stage later run by the same reused
+    worker converts as usual from its first Arrow batch to pandas on.
+    Before that batch, pyarrow takes a pandas object for a plain
+    sequence: a ``mapInPandas`` generator that yields before it reads
+    any input fails on its first frame in such a worker.
+
+    ``sys.modules["pandas"] = None`` would not do as the refusal:
+    pyarrow's import then hands back ``None`` and the shim raises
+    ``AttributeError``. Only the shim's probe is answered: a
+    ``pa.array`` that infers its type (``pa.array([1])``) still imports
+    pandas, so worker loops always pass ``type=``."""
+    if "pandas" in sys.modules:
+        return
+    import pyarrow as pa
+
+    refuse = _NoPandas()
+    sys.meta_path.insert(0, refuse)
+    try:
+        pa.array([], type=pa.null())
+    finally:
+        sys.meta_path.remove(refuse)
+
+
 _frozen_at = 0  # len(sys.modules) at this process's last gc.freeze()
+_pandas_probed = False  # answer_pandas_probe already ran in this process
 
 
 def prepare_worker_task() -> None:
     """The first statement of every worker-side loop: installs the zip
-    cache gate, and freezes the heap whenever ``sys.modules`` has grown
-    since the last freeze.
+    cache gate, answers pyarrow's pandas probe once per process
+    (:func:`answer_pandas_probe`), and freezes the heap whenever
+    ``sys.modules`` has grown since the last freeze.
+
+    Unanswered, the probe would import pandas at the first ``pa.array``
+    of :func:`record_batch`: VmRSS 85.7 → 117.5 MB in a local worker,
+    a quarter of it spent on a library the Arrow stages never call. The
+    probe is answered before the freeze, so what it imports is frozen
+    with the rest.
 
     pyspark's daemon runs ``gc.collect()`` after every task of a reused
-    worker. With pyspark.worker, pyarrow, pandas and this engine
-    loaded a worker tracks about 73k objects, and that full collection
-    costs 16-21 ms of CPU per task (4-vCPU VM). Frozen objects are
+    worker. A worker with pyspark.worker, pyarrow, pandas and this
+    engine loaded tracked about 73k objects, and that full collection
+    cost 16-21 ms of CPU per task (4-vCPU VM). Frozen objects are
     skipped by every collection. Checking ``sys.modules`` re-freezes a
-    module imported late (pyarrow imports pandas at the first
-    ``pa.array``) at the next task's start; objects a task creates
-    after the freeze are collected as before."""
-    global _frozen_at
+    module imported late (pandas, when a pandas stage runs in the same
+    worker) at the next task's start; objects a task creates after the
+    freeze are collected as before."""
+    global _frozen_at, _pandas_probed
     install_zip_cache_gate()
+    if not _pandas_probed:
+        answer_pandas_probe()
+        _pandas_probed = True
     if len(sys.modules) > _frozen_at:
         gc.collect()
         gc.freeze()

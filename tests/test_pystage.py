@@ -1,13 +1,17 @@
 """The shared Arrow row loop (ocrd_segment_spark/pystage.py): one
 ``mapInArrow`` boundary and one parallelism floor for every
 one-row-in/one-row-out Python stage, and the per-task hook every
-worker-side loop calls first (the stat-gated zip cache invalidation
-and the import-heap freeze)."""
+worker-side loop calls first (the stat-gated zip cache invalidation,
+the answer to pyarrow's pandas probe and the import-heap freeze)."""
 
 import ast
+import datetime
 import gc
 import importlib
+import json
+import os
 import pathlib
+import subprocess
 import sys
 import types
 import weakref
@@ -313,6 +317,89 @@ def test_worker_hook_leaves_later_cycles_collectable(heap_freeze):
     assert ref() is None
 
 
+# Run in a fresh interpreter: argv[1] "hook" calls prepare_worker_task
+# first, "stock" does not. Prints what the test compares as one JSON line.
+_RECORD_BATCH_SCRIPT = """
+import json, sys
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+from ocrd_segment_spark import pystage
+
+hook = sys.argv[1] == "hook"
+finders = list(sys.meta_path)
+if hook:
+    pystage.prepare_worker_task()
+    pystage._NoPandas = None  # a second probe would fail on it
+    pystage.prepare_worker_task()
+span = T.StructType([
+    T.StructField("start", T.LongType(), False),
+    T.StructField("label", T.StringType()),
+])
+spark_types = [
+    T.StringType(), T.BinaryType(), T.LongType(), T.IntegerType(),
+    T.DoubleType(), T.BooleanType(), T.ArrayType(span), span,
+]
+rows = [
+    ("a", b"\\x00\\xff", 2**40, 7, 0.25, True, [(0, "s"), (1, None)], (3, "t")),
+    (None,) * 8,
+    ("", b"", -1, 0, -0.0, False, [], (0, None)),
+]
+names = [f"c{i}" for i in range(len(spark_types))]
+batch = pystage.record_batch(
+    [], rows, [to_arrow_type(t) for t in spark_types], names
+)
+out = {
+    "pandas_loaded": "pandas" in sys.modules,
+    "meta_path_kept": sys.meta_path == finders,
+    "rows": repr(batch.to_pylist()),
+}
+import pandas as pd
+import pyarrow as pa
+
+frame = batch.to_pandas()
+out["to_pandas"] = repr(frame) + repr(frame.dtypes)
+arr = pa.Array.from_pandas(pd.Series([1.0, None]))
+out["from_pandas"] = repr((str(arr.type), arr.to_pylist()))
+print(json.dumps(out))
+"""
+
+
+def _record_batch_run(mode: str) -> dict:
+    proc = subprocess.run(
+        [sys.executable, "-c", _RECORD_BATCH_SCRIPT, mode],
+        cwd=PKG.parent, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    return json.loads(proc.stdout.splitlines()[-1])
+
+
+def test_worker_hook_keeps_pandas_out_of_record_batch():
+    """In a fresh interpreter, record_batch after prepare_worker_task
+    builds every Arrow type map_rows emits without importing pandas,
+    and leaves sys.meta_path as it found it; the second call only tests
+    the flag. pandas imported afterwards converts to and from Arrow as
+    in an interpreter that never ran the hook, where the same
+    record_batch does import pandas."""
+    hooked, stock = _record_batch_run("hook"), _record_batch_run("stock")
+    assert hooked["pandas_loaded"] is False
+    assert hooked["meta_path_kept"] is True
+    assert stock["pandas_loaded"] is True
+    for key in ("rows", "to_pandas", "from_pandas"):
+        assert hooked[key] == stock[key], key
+
+
+def test_worker_hook_leaves_an_imported_pandas_alone(heap_freeze, monkeypatch):
+    """Where pandas is already imported (a pandas UDF's worker, this
+    process) the hook installs no finder."""
+    assert "pandas" in sys.modules
+    monkeypatch.setattr(pystage, "_pandas_probed", False)
+    monkeypatch.setattr(pystage, "_NoPandas", None)  # installing would fail
+    finders = list(sys.meta_path)
+    prepare_worker_task()
+    assert sys.meta_path == finders
+    assert pystage._pandas_probed
+
+
 def test_map_rows_workers_keep_one_freeze(spark):
     """A second map_rows stage's row function finds its worker's heap
     frozen, and a worker that ran the first stage keeps one freeze
@@ -338,6 +425,83 @@ def test_map_rows_workers_keep_one_freeze(spark):
         if r["pid"] in warm:
             counts.setdefault(r["pid"], set()).add(r["frozen"])
     assert counts and all(len(c) == 1 for c in counts.values()), counts
+
+
+@pytest.fixture
+def own_worker_pool(spark):
+    """The session, with the Python stages planned inside the test run
+    by a worker pool of their own. Spark keys its Python worker daemons
+    by the functions' environment, so one extra entry starts workers
+    that no earlier test's pandas stage has loaded pandas into."""
+    env = spark.sparkContext.environment
+    env["PYSTAGE_TEST_POOL"] = "own"
+    yield spark
+    del env["PYSTAGE_TEST_POOL"]
+
+
+def test_map_rows_workers_load_no_pandas_yet_run_pandas_stages(own_worker_pool):
+    """Two map_rows stages see no pandas in their workers. Afterwards,
+    on workers that ran them, a pandas_udf over a double column with
+    nulls and a grouped applyInPandas returning a timestamp give their
+    values: pyarrow's pandas probe, answered "absent" by the hook,
+    finds pandas once a pandas stage needs it."""
+    spark = own_worker_pool
+
+    def probe(_):
+        import os
+        import sys
+
+        return os.getpid(), "pandas" in sys.modules
+
+    fields = [
+        T.StructField("pid", T.LongType()),
+        T.StructField("pandas", T.BooleanType()),
+    ]
+    df = spark.range(16, numPartitions=16)
+    hooked = set()
+    for _stage in range(2):
+        rows = map_rows(df, (), ("id",), probe, fields).collect()
+        assert [r["pandas"] for r in rows] == [False] * 16
+        hooked |= {r["pid"] for r in rows}
+
+    @F.pandas_udf("double")
+    def doubled(x: pd.Series) -> pd.Series:
+        return x * 2
+
+    @F.pandas_udf("long")
+    def pid(x: pd.Series) -> pd.Series:
+        return pd.Series([os.getpid()] * len(x))
+
+    xs = spark.createDataFrame(
+        [(i, None if i % 3 == 0 else i / 4) for i in range(16)],
+        "k long, x double",
+    ).repartition(8)
+    rows = xs.select(
+        "k", doubled("x").alias("y"), pid("x").alias("pid")
+    ).collect()
+    assert {r["k"]: r["y"] for r in rows} == {
+        i: None if i % 3 == 0 else i / 2 for i in range(16)
+    }
+    pandas_pids = {r["pid"] for r in rows}
+
+    def stamp(g: pd.DataFrame) -> pd.DataFrame:
+        seconds = pd.Timedelta(seconds=int(g["k"].sum()))
+        return pd.DataFrame({
+            "g": [g["g"].iloc[0]],
+            "ts": [pd.Timestamp("2026-01-01") + seconds],
+            "pid": [os.getpid()],
+        })
+
+    grouped = xs.withColumn("g", F.col("k") % 4).groupBy("g").applyInPandas(
+        stamp, "g long, ts timestamp, pid long"
+    ).collect()
+    assert {r["g"]: r["ts"] for r in grouped} == {
+        g: datetime.datetime(2026, 1, 1) + datetime.timedelta(
+            seconds=sum(range(g, 16, 4)))
+        for g in range(4)
+    }
+    pandas_pids |= {r["pid"] for r in grouped}
+    assert pandas_pids & hooked, (pandas_pids, hooked)
 
 
 def test_map_rows_none_is_typed_null(spark):
